@@ -56,8 +56,9 @@ def inputs():
 
 
 def stamp(paths):
+    """sha256 over each file's path (relative to the checkout) and contents."""
     h = hashlib.sha256()
-    for p in paths:
+    for p in sorted(paths):
         h.update(os.path.relpath(p, ROOT).encode())
         with open(p, "rb") as f:
             h.update(hashlib.sha256(f.read()).digest())

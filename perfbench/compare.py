@@ -8,18 +8,26 @@ Each directory holds the run records run.py writes (<build dir>/results by
 default; pass --results to run.py to keep the two sides apart). Run the two
 commits alternately, BASE first, then CHANGE, with the same seeds.
 
-For each workload and end-to-end metric the comparison prints both sides'
-median and quartiles, the share of pairs the change won (runs paired in the
-order they started, ties counting for neither) and a verdict:
+Runs are paired in the order they started: the i-th base run with the i-th
+change run, which ran beside it. The verdict rests on the per-pair ratios
+change / base, so a drift of the host's speed that moves both runs of a pair
+alike cancels out. For each workload and end-to-end metric the comparison
+prints both sides' median and quartiles, the median and quartiles of the
+ratios, the share of pairs the change won (ties counting for neither) and a
+verdict:
 
-  improved      the change won at least 9 of 10 pairs and the medians differ
-                by more than the base's own quartile spread
-  worse         the change's median is worse than the base's by more than
-                the metric's bound
-  unresolved    the base's quartile spread is wider than the bound, so "no
+  improved      the change won at least 9 of 10 pairs and the median ratio
+                is further from 1 than the base's own quartile spread (as a
+                share of its median)
+  worse         the median ratio is worse than 1 by more than the metric's
+                bound
+  unresolved    the ratios' quartile spread is wider than the bound, so "no
                 worse" cannot be told from noise (unless every change run
                 beats every base run)
   within bound  otherwise
+
+Two sets of runs of the same code, made side by side, should read "within
+bound" on every metric.
 
 Per-layer metrics of traced runs are listed with their medians, without a
 verdict, and the tracing overhead is the traced wall_s median minus the
@@ -77,24 +85,32 @@ def by_workload(recs, traced):
     return out
 
 
+def ratios(base, change):
+    """change / base of each pair; a pair with a zero base is left out."""
+    return [c / b for b, c in zip(base, change) if b]
+
+
 def verdict(m, base, change):
+    """(ratio quartiles, share of pairs won, verdict) of one metric."""
     lower = m["better"] == "lower"
-    q1b, mb, q3b = quart(base)
-    _, mc, _ = quart(change)
     pairs = list(zip(base, change))
     wins = sum(1 for b, c in pairs if (c < b if lower else c > b))
     won = wins / len(pairs) if pairs else 0.0
+    rs = ratios(base, change)
+    if not rs:
+        return None, won, "unresolved"
+    q1r, mr, q3r = quart(rs)
     better_all = (max(change) < min(base)) if lower else (min(change) > max(base))
-    worse_by = ((mc - mb) if lower else (mb - mc)) / mb if mb else 0.0
-    if won >= 0.9 and abs(mc - mb) > (q3b - q1b) and worse_by < 0:
+    worse_by = (mr - 1) if lower else (1 - mr)
+    if won >= 0.9 and worse_by < 0 and abs(mr - 1) > spread(base):
         v = "improved"
     elif worse_by > m["bound"]:
         v = "worse"
-    elif spread(base) > m["bound"] and not better_all:
+    elif q3r - q1r > m["bound"] and not better_all:
         v = "unresolved"
     else:
         v = "within bound"
-    return won, v
+    return (q1r, mr, q3r), won, v
 
 
 def fmt(x):
@@ -113,15 +129,19 @@ def compare(base_dir, change_dir, spec):
     bw, cw = by_workload(base, False), by_workload(change, False)
     for w in sorted(set(bw) & set(cw)):
         print(f"\n{w}: {len(bw[w])} base runs, {len(cw[w])} change runs")
-        print(f"  {'metric':<14}{'base median [q1, q3]':<34}{'change median [q1, q3]':<34}{'won':>6}  verdict")
+        if len(bw[w]) != len(cw[w]):
+            print(f"  warning: unequal run counts; only the first {min(len(bw[w]), len(cw[w]))} pairs count")
+        print(f"  {'metric':<14}{'base median [q1, q3]':<32}{'change median [q1, q3]':<32}"
+              f"{'ratio median [q1, q3]':<26}{'won':>5}  verdict")
         for m in spec["end_to_end"]:
             b = [r["end_to_end"][m["name"]] for r in bw[w]]
             c = [r["end_to_end"][m["name"]] for r in cw[w]]
-            won, v = verdict(m, b, c)
+            qr, won, v = verdict(m, b, c)
             qb, qc = quart(b), quart(c)
-            print(f"  {m['name']:<14}{fmt(qb[1]) + ' [' + fmt(qb[0]) + ', ' + fmt(qb[2]) + '] ' + m['unit']:<34}"
-                  f"{fmt(qc[1]) + ' [' + fmt(qc[0]) + ', ' + fmt(qc[2]) + '] ' + m['unit']:<34}"
-                  f"{won:>6.0%}  {v}")
+            rtxt = f"{qr[1]:.3f} [{qr[0]:.3f}, {qr[2]:.3f}]" if qr else "-"
+            print(f"  {m['name']:<14}{fmt(qb[1]) + ' [' + fmt(qb[0]) + ', ' + fmt(qb[2]) + '] ' + m['unit']:<32}"
+                  f"{fmt(qc[1]) + ' [' + fmt(qc[0]) + ', ' + fmt(qc[2]) + '] ' + m['unit']:<32}"
+                  f"{rtxt:<26}{won:>5.0%}  {v}")
     bt, ct = by_workload(base, True), by_workload(change, True)
     for w in sorted(set(bt) | set(ct)):
         print(f"\n{w} (traced): per-layer medians, base -> change")

@@ -6,13 +6,13 @@ and order-insensitive digest, and checks each result once against DuckDB
 through the entry's oracle SQL. An entry whose digest differs between the
 two JVMs, or that has no oracle or disagrees with it, is checked by row
 count only; one whose row count differs, or that fails, is left out of the
-workloads.
+workloads. An oracle still running after ORACLE_TIMEOUT_S is recorded as
+"timeout" and its entry keeps the digest check when the digest repeats.
 
-Usage: python3 perfbench/gen_expected.py [--sf sf0.001] [--oracle-timeout S]
-Writes perfbench/expected/<sf>.json. Run it at the reference commit only:
-the file is what later commits are checked against.
+Usage: python3 perfbench/gen_expected.py
+Writes perfbench/expected/sf0.001.json (run.EXPECTED). Run it at the
+reference commit only: the file is what later commits are checked against.
 """
-import argparse
 import json
 import math
 import os
@@ -24,13 +24,13 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 import build  # noqa: E402
 import run  # noqa: E402
 
-ORACLE_TIMEOUT_S = 600
+ORACLE_TIMEOUT_S = 3600
 TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
           "lineitem", "events", "documents", "embeddings"]
 
 
-def gen_once(classes, workdir, sf, out, dump=None):
-    args = ["--gen", out, "--data", os.path.join(build.BENCH, "data"), "--sf", sf]
+def gen_once(classes, workdir, out, dump=None):
+    args = ["--gen", out, "--data", run.DATA]
     if dump:
         args += ["--dump", dump]
     rc = run.run_jvm(run.java_cmd(classes, workdir, args), workdir, out + ".log", 3000)
@@ -58,11 +58,11 @@ def _close(a, b):
     return a == b
 
 
-def oracle_check(con, sql, dump_dir, timeout_s=ORACLE_TIMEOUT_S):
+def oracle_check(con, sql, dump_dir):
     """Spark's rows against DuckDB's: same column names, same multiset of
     rows, floats equal to 1e-6 relative. An oracle still running after
-    timeout_s is interrupted (DuckDB raises)."""
-    timer = threading.Timer(timeout_s, con.interrupt)
+    ORACLE_TIMEOUT_S is interrupted (DuckDB raises InterruptException)."""
+    timer = threading.Timer(ORACLE_TIMEOUT_S, con.interrupt)
     timer.start()
     try:
         want = con.execute(sql)
@@ -86,23 +86,18 @@ def oracle_check(con, sql, dump_dir, timeout_s=ORACLE_TIMEOUT_S):
 
 
 def main():
-    ap = argparse.ArgumentParser()
-    ap.add_argument("--sf", default="sf0.001")
-    ap.add_argument("--oracle-timeout", type=float, default=ORACLE_TIMEOUT_S)
-    a = ap.parse_args()
     import duckdb
     classes = build.build()
     work = os.path.join(build.build_dir(), "gen")
     shutil.rmtree(work, ignore_errors=True)
     os.makedirs(work)
     dump = os.path.join(work, "dump")
-    first = gen_once(classes, work, a.sf, os.path.join(work, "gen1.json"), dump)
-    second = gen_once(classes, work, a.sf, os.path.join(work, "gen2.json"))
+    first = gen_once(classes, work, os.path.join(work, "gen1.json"), dump)
+    second = gen_once(classes, work, os.path.join(work, "gen2.json"))
 
-    data = os.path.join(build.BENCH, "data", a.sf)
     con = duckdb.connect()
     for t in TABLES:
-        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{data}/{t}.parquet'")
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{run.DATA}/{t}.parquet'")
     entries, skipped = {}, {}
     for name in sorted(first):
         e1, e2 = first[name], second.get(name, {})
@@ -116,23 +111,26 @@ def main():
         stable = e1["digest"] == e2["digest"]
         if "oracle_sql" in e1:
             try:
-                err = oracle_check(con, e1["oracle_sql"], os.path.join(dump, name), a.oracle_timeout)
+                err = oracle_check(con, e1["oracle_sql"], os.path.join(dump, name))
+                rec["oracle"] = "pass" if err is None else f"FAIL: {err}"
+            except duckdb.InterruptException:
+                rec["oracle"] = "timeout"
             except Exception as ex:  # noqa: BLE001 - recorded per entry
-                err = f"oracle error: {ex}"
-            rec["oracle"] = "pass" if err is None else f"FAIL: {err}"
+                rec["oracle"] = f"FAIL: oracle error: {ex}"
         else:
             rec["oracle"] = "none (rows-only)"
-        # the digest is checked only where DuckDB agreed with it and it
-        # repeats across JVMs; everything else is checked by row count
-        rec["check"] = "digest" if stable and rec["oracle"] == "pass" else "rows"
+        # the digest is checked where it repeats across JVMs and DuckDB did
+        # not disagree with it; everything else is checked by row count
+        rec["check"] = "digest" if stable and rec["oracle"] in ("pass", "timeout") else "rows"
         entries[name] = rec
-    out = {"sf": a.sf, "entries": entries, "skipped": skipped}
-    path = os.path.join(build.BENCH, "expected", f"{a.sf}.json")
+    out = {"sf": run.SF, "entries": entries, "skipped": skipped}
+    path = run.EXPECTED
     with open(path, "w") as f:
         json.dump(out, f, indent=1, sort_keys=True)
     n_pass = sum(1 for e in entries.values() if e["oracle"] == "pass")
     n_fail = sum(1 for e in entries.values() if e["oracle"].startswith("FAIL"))
-    print(f"{len(entries)} entries, {n_pass} oracle pass, {n_fail} oracle fail, "
+    n_timeout = sum(1 for e in entries.values() if e["oracle"] == "timeout")
+    print(f"{len(entries)} entries, {n_pass} oracle pass, {n_fail} oracle fail, {n_timeout} oracle timeout, "
           f"{sum(1 for e in entries.values() if e['check'] == 'rows')} rows-only digests, "
           f"{len(skipped)} skipped -> {path}")
     shutil.rmtree(work, ignore_errors=True)

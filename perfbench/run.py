@@ -15,7 +15,6 @@ under <build dir>/results for perfbench/compare.py.
 """
 import argparse
 import glob
-import hashlib
 import json
 import os
 import signal
@@ -30,6 +29,9 @@ BENCH = build.BENCH
 ROOT = build.ROOT
 WORKLOADS = ("vtab_interactive", "batch_and_streaming")
 SF = "sf0.001"  # data scale of the entry workloads (see LAYERS.md)
+DATA = os.path.join(BENCH, "data", SF)
+DIMS = os.path.join(BENCH, "data", "sf0.1")  # nation and supplier of the interactive joins
+EXPECTED = os.path.join(BENCH, "expected", f"{SF}.json")
 DEADLINE_S = 170  # a run must end within 180 s, build excluded
 JAVA_OPENS = [
     "java.base/java.lang", "java.base/java.lang.invoke", "java.base/java.lang.reflect",
@@ -37,15 +39,6 @@ JAVA_OPENS = [
     "java.base/java.util.concurrent", "java.base/java.util.concurrent.atomic",
     "java.base/sun.nio.ch", "java.base/sun.nio.cs", "java.base/sun.security.action",
     "java.base/sun.util.calendar"]
-
-
-def tree_hash(paths):
-    h = hashlib.sha256()
-    for p in sorted(paths):
-        h.update(os.path.relpath(p, ROOT).encode())
-        with open(p, "rb") as f:
-            h.update(hashlib.sha256(f.read()).digest())
-    return h.hexdigest()[:16]
 
 
 def commit_id():
@@ -57,14 +50,14 @@ def commit_id():
         if r.returncode == 0:
             return r.stdout.strip()
     srcs, res = build.inputs()
-    return "src-" + tree_hash([s for s in srcs if not s.startswith(BENCH)] + res)
+    return "src-" + build.stamp([s for s in srcs if not s.startswith(BENCH)] + res)[:16]
 
 
 def bench_hash():
     """Hash of everything that decides what a run measures (docs excluded)."""
     files = [p for p in glob.glob(os.path.join(BENCH, "**", "*"), recursive=True)
              if os.path.isfile(p) and "__pycache__" not in p and not p.endswith(".md")]
-    return tree_hash(files + [os.path.join(ROOT, "BENCHMARK.json")])
+    return build.stamp(files + [os.path.join(ROOT, "BENCHMARK.json")])[:16]
 
 
 def java_cmd(classes, workdir, args):
@@ -128,8 +121,7 @@ def main():
     out = os.path.join(workdir, tag + ".json")
     spans = os.path.join(results, tag + ".spans.json")
     args = ["--workload", a.workload, "--seed", str(a.seed), "--seconds", str(a.seconds),
-            "--trace", str(a.trace), "--data", os.path.join(BENCH, "data"), "--sf", SF,
-            "--expected", os.path.join(BENCH, "expected", f"{SF}.json"),
+            "--trace", str(a.trace), "--data", DATA, "--dims", DIMS, "--expected", EXPECTED,
             "--max-ops", str(a.max_ops),
             "--corrupt", str(a.corrupt), "--out", out]
     if a.setups:

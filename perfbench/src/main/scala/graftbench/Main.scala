@@ -18,9 +18,11 @@ import graft.sources.api.{QueryCache, ScanLedger}
   * and write the measurements as JSON.
   *
   * Usage: graftbench.Main --workload W --seed N --seconds S --trace 0|1
-  *   --data DIR --expected FILE --out FILE [--spans FILE] [--sf sf0.001]
+  *   --data DIR --dims DIR --expected FILE --out FILE [--spans FILE]
   *   [--setups N] [--max-ops N] [--corrupt 1]
-  *   or: graftbench.Main --gen FILE --data DIR [--sf sf0.001] [--dump DIR]
+  *   or: graftbench.Main --gen FILE --data DIR [--dump DIR]
+  * --data is the directory of the entries' tables, --dims the one whose
+  * `nation` and `supplier` the interactive joins read.
   */
 object Main {
   private val mapper = new ObjectMapper()
@@ -99,15 +101,13 @@ object Main {
   /** Workload state built by set-up and read by the pass. */
   final case class Setup(s: SparkSession, pass: IndexedSeq[Op], warmMs: Map[String, Double])
 
-  def setUp(w: String, seed: Long, root: String, sf: String, expected: Map[String, Expected],
+  def setUp(w: String, seed: Long, dir: String, dims: String, expected: Map[String, Expected],
       corrupt: Boolean, maxOps: Int): Setup = {
     val s = session()
     val warm = mutable.LinkedHashMap[String, Double]()
-    val dir = s"$root/$sf"
     val pass: IndexedSeq[Op] = w match {
       case "vtab_interactive" =>
         Timed.configure(s, "seq", s"""{"n": $VtabKeys}""")
-        val dims = s"$root/sf0.1"
         Tables.t(s, dims, "nation").createOrReplaceTempView("bench_nation")
         Tables.t(s, dims, "supplier").createOrReplaceTempView("bench_supplier")
         val nations = s.sql("SELECT n_nationkey, n_name, n_regionkey FROM bench_nation").collect()
@@ -216,8 +216,8 @@ object Main {
     val seed = a("seed").toLong
     val seconds = a("seconds").toDouble
     val traced = a.getOrElse("trace", "0") == "1"
-    val root = a("data")
-    val sf = a.getOrElse("sf", "sf0.001")
+    val dir = a("data")
+    val dims = a("dims")
     val setups = a.get("setups").map(_.toInt).getOrElse(DefaultSetups(w))
     val maxOps = a.getOrElse("max-ops", "0").toInt
     val corrupt = a.getOrElse("corrupt", "0") == "1"
@@ -229,7 +229,7 @@ object Main {
     (1 to setups).foreach { _ =>
       if (st != null) stop(st.s)
       val t0 = System.nanoTime()
-      st = setUp(w, seed, root, sf, expected, corrupt, maxOps)
+      st = setUp(w, seed, dir, dims, expected, corrupt, maxOps)
       setupMs += ms(t0)
     }
     val spark = st.s
@@ -301,7 +301,7 @@ object Main {
     val storage = sc.getRDDStorageInfo
     val out = mapper.createObjectNode()
     out.put("workload", w); out.put("seed", seed); out.put("traced", traced)
-    out.put("sf", if (w == "vtab_interactive") s"n=$VtabKeys" else sf)
+    out.put("sf", if (w == "vtab_interactive") s"n=$VtabKeys" else Paths.get(dir).getFileName.toString)
     val fp = out.putObject("fingerprint")
     fp.put("cores", Runtime.getRuntime.availableProcessors())
     fp.put("heap_max_mb", Runtime.getRuntime.maxMemory() >> 20)
@@ -369,7 +369,7 @@ object Main {
       put("sources.api.cache_hit_ratio", if (hits + misses > 0) hits / (hits + misses) else 0.0)
       put("sources.api.cache_rows", QueryCache.currentWeight.toDouble)
       put("sources.api.rows_scanned", complete.map(_.rowsScanned.toDouble).sum)
-      put("sources.api.configure_ms", Timed.configureMs)
+      put("sources.api.configure_ms", gd("configure_ms"))
       Seq("analysis", "optimization", "planning").foreach { ph =>
         put(s"catalyst.${ph}_ms", spans.filter(_.name == s"catalyst.$ph").map(_.dur).sum)
       }
@@ -439,9 +439,7 @@ object Main {
   /** Records each non-vt_ entry's row count and digest, and optionally dumps
     * each result as parquet for the DuckDB oracle check (gen_expected.py). */
   def gen(a: Map[String, String]): Unit = {
-    val root = a("data")
-    val sf = a.getOrElse("sf", "sf0.001")
-    val dir = s"$root/$sf"
+    val dir = a("data")
     val s = session()
     touchTables(s, dir)
     WarmStages.foreach { case (_, f) => f(s, dir) }
