@@ -872,11 +872,8 @@ object PlanContracts {
   }
 
   /** Run `body` under the big-stats simulation (see class doc). */
-  def withBigStats[T](s: SparkSession)(body: => T): T = {
-    val prev = s.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try body finally s.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-  }
+  def withBigStats[T](s: SparkSession)(body: => T): T =
+    Scoped.withConf(s, "spark.sql.autoBroadcastJoinThreshold" -> "-1")(body)
 
   /** Evaluate every contract for one entry; returns (desc, pass) plus the
     * plan text for reporting. */

@@ -64,6 +64,24 @@ object Tables {
     all.foreach(n => t(spark, dir, n).createOrReplaceTempView(n))
 }
 
+/** The one way to run work under changed session settings: set `kvs`, run
+  * `body`, and restore every key in `finally` — a key that was unset
+  * before is unset again (not pinned to its default), so a throw inside
+  * `body` can never leave a setting behind on a shared session. */
+object Scoped {
+  def withConf[T](s: SparkSession, kvs: (String, String)*)(body: => T): T = {
+    val set = s.conf.getAll // the explicitly set keys only, no defaults
+    val prev = kvs.map { case (k, _) => k -> set.get(k) }
+    try {
+      kvs.foreach { case (k, v) => s.conf.set(k, v) }
+      body
+    } finally prev.foreach {
+      case (k, Some(v)) => s.conf.set(k, v)
+      case (k, None) => s.conf.unset(k)
+    }
+  }
+}
+
 /** Shared exactness helpers (SURVEY §6): money-ish doubles in the test data
   * are 2-decimal exact, so casting to DECIMAL and summing is exact in both
   * Spark and DuckDB; the final cast to DOUBLE is then bit-identical. */

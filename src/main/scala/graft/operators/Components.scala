@@ -66,11 +66,8 @@ object Components {
     val edges = p2.union(p2.select(col("ib"), col("ia")))
       .toDF("src", "dst").persist()
     val nEdges = edges.count() // materialize once; the loop reads the cached graph
-    val aqeWas = s.conf.get("spark.sql.adaptive.enabled", "true")
-    val shufWas = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.adaptive.enabled", "false")
-    s.conf.set("spark.sql.shuffle.partitions", loopPartitions(nEdges).toString)
-    try {
+    try graft.Scoped.withConf(s, "spark.sql.adaptive.enabled" -> "false",
+        "spark.sql.shuffle.partitions" -> loopPartitions(nEdges).toString) {
       // Per-round snapshot: persist the round's RDD and rebuild a leaf
       // DataFrame over it (lineage truncation — the loop body references
       // `labels` three times per round: identity ∪ neighbor-propagate ∪
@@ -130,10 +127,6 @@ object Components {
       if (scopedRelease) OpCache.trackHookScoped(s, () => finalRdd.unpersist(false))
       else OpCache.trackHook(s, () => finalRdd.unpersist(false))
       labels
-    } finally {
-      edges.unpersist()
-      s.conf.set("spark.sql.adaptive.enabled", aqeWas)
-      s.conf.set("spark.sql.shuffle.partitions", shufWas)
-    }
+    } finally edges.unpersist()
   }
 }

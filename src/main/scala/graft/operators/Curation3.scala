@@ -116,21 +116,15 @@ object Curation3 {
       // AQE-off into the rest of a shared session.
       val loopWidth = Components
         .loopPartitions(2L * Similarity.minhashPairCount(s, d))
-      val aqeWas = s.conf.get("spark.sql.adaptive.enabled", "true")
-      val shufWas = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.adaptive.enabled", "false")
       // loop width from the MATERIALIZED pair-graph size (the Components
       // discipline — AQE is off, so the width must be derived, and the
       // working set is the duplication-proportional pair graph, never the
       // corpus or a per-host constant)
-      s.conf.set("spark.sql.shuffle.partitions", loopWidth.toString)
-      try {
+      graft.Scoped.withConf(s, "spark.sql.adaptive.enabled" -> "false",
+          "spark.sql.shuffle.partitions" -> loopWidth.toString) {
         val out = OpCache.track(s, repRankChain(s, d).persist())
         out.count()
         out
-      } finally {
-        s.conf.set("spark.sql.adaptive.enabled", aqeWas)
-        s.conf.set("spark.sql.shuffle.partitions", shufWas)
       }
     },
       Some(s"""${Similarity.minhashPairsSql.replaceFirst("WITH ", "WITH RECURSIVE ")},

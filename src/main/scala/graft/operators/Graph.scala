@@ -148,19 +148,11 @@ object Graph {
       // iteration pays exactly ONE exchange — the semantic groupBy(dst)
       // of the node-scaled contribution stream. The returned snapshot is
       // the materialized final ranks (all work inside the entry).
-      val aqeWas = s.conf.get("spark.sql.adaptive.enabled", "true")
-      val shufWas = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.adaptive.enabled", "false")
-      graphPartitions(d).foreach(n =>
-        s.conf.set("spark.sql.shuffle.partitions", n.toString))
-      try {
-        val ranks = pagerankChain(s, d)
-        val out = OpCache.track(s, ranks.persist())
+      graft.Scoped.withConf(s, Seq("spark.sql.adaptive.enabled" -> "false") ++
+          graphPartitions(d).map(n => "spark.sql.shuffle.partitions" -> n.toString): _*) {
+        val out = OpCache.track(s, pagerankChain(s, d).persist())
         out.count()
         out
-      } finally {
-        s.conf.set("spark.sql.adaptive.enabled", aqeWas)
-        s.conf.set("spark.sql.shuffle.partitions", shufWas)
       }
     },
       Some {

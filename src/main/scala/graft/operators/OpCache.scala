@@ -14,8 +14,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *      per-object ConcurrentHashMap held its persists forever and keyed
   *      them by identityHashCode, which can collide after GC).
   *
-  * Keys are the SparkSession OBJECT in a weak identity map: no hash
-  * collisions by construction. NOTE the weak keys alone do NOT reclaim a
+  * All of a session's state is one record, keyed by the SparkSession
+  * OBJECT in one weak map: no hash collisions by construction. NOTE the weak keys alone do NOT reclaim a
   * dropped session's entries — the map's DataFrame values strongly
   * reference their session (a Dataset holds its SparkSession), so the
   * value chain keeps the weak key alive. `release(session)` is therefore
@@ -27,43 +27,27 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * both safe and the actual leak fix for sessions that died without
   * release(). */
 object OpCache {
-  private val memos =
-    new java.util.WeakHashMap[SparkSession, java.util.HashMap[String, DataFrame]]()
-  private val longs =
-    new java.util.WeakHashMap[SparkSession, java.util.HashMap[String, java.lang.Long]]()
-  private val pinned =
-    new java.util.WeakHashMap[SparkSession, java.util.ArrayList[DataFrame]]()
+  /** Everything OpCache holds for one session. */
+  private final class Entry {
+    val memos = new java.util.HashMap[String, DataFrame]()
+    val longs = new java.util.HashMap[String, java.lang.Long]()
+    val pinned = new java.util.ArrayList[DataFrame]()
+    val hooks = new java.util.ArrayList[() => Unit]()
+    val scopedHooks = new java.util.ArrayList[() => Unit]()
+  }
+  private val entries = new java.util.WeakHashMap[SparkSession, Entry]()
 
-  /** Drop every entry belonging to a stopped SparkContext (see class
-    * doc). Caller must hold the monitor. */
-  private def sweepStopped(): Unit = {
-    val dead = new java.util.ArrayList[SparkSession]()
-    memos.keySet().forEach { s => if (s.sparkContext.isStopped) dead.add(s) }
-    pinned.keySet().forEach { s =>
-      if (s.sparkContext.isStopped && !dead.contains(s)) dead.add(s)
-    }
-    longs.keySet().forEach { s =>
-      if (s.sparkContext.isStopped && !dead.contains(s)) dead.add(s)
-    }
-    hooks.keySet().forEach { s =>
-      if (s.sparkContext.isStopped && !dead.contains(s)) dead.add(s)
-    }
-    scopedHooks.keySet().forEach { s =>
-      if (s.sparkContext.isStopped && !dead.contains(s)) dead.add(s)
-    }
-    dead.forEach { s =>
-      memos.remove(s); pinned.remove(s); longs.remove(s); hooks.remove(s)
-      scopedHooks.remove(s); ()
-    }
+  /** `s`'s record, created on first use, after dropping every record of a
+    * STOPPED SparkContext (see class doc). Caller must hold the monitor. */
+  private def entry(s: SparkSession): Entry = {
+    entries.keySet().removeIf(_.sparkContext.isStopped)
+    entries.computeIfAbsent(s, _ => new Entry)
   }
 
   /** Record a DataFrame this package persisted so release() can free it.
     * Returns the argument for inline use. */
   def track(s: SparkSession, df: DataFrame): DataFrame = synchronized {
-    sweepStopped()
-    var l = pinned.get(s)
-    if (l == null) { l = new java.util.ArrayList[DataFrame](); pinned.put(s, l) }
-    l.add(df)
+    entry(s).pinned.add(df)
     df
   }
 
@@ -73,25 +57,14 @@ object OpCache {
     * every concurrent session on one build) with a double-checked put — a
     * losing racer unpersists its redundant copy. */
   def memo(s: SparkSession, key: String)(build: => DataFrame): DataFrame = {
-    val cached = synchronized {
-      sweepStopped()
-      var m = memos.get(s)
-      if (m == null) { m = new java.util.HashMap[String, DataFrame](); memos.put(s, m) }
-      m.get(key)
-    }
+    val cached = synchronized(entry(s).memos.get(key))
     if (cached != null) return cached
     val built = build
     synchronized {
-      val m = memos.get(s)
-      val prior = if (m == null) null else m.get(key)
+      val e = entry(s)
+      val prior = e.memos.get(key)
       if (prior != null) { built.unpersist(); prior }
-      else {
-        track(s, built)
-        var mm = memos.get(s)
-        if (mm == null) { mm = new java.util.HashMap[String, DataFrame](); memos.put(s, mm) }
-        mm.put(key, built)
-        built
-      }
+      else { e.pinned.add(built); e.memos.put(key, built); built }
     }
   }
 
@@ -99,34 +72,19 @@ object OpCache {
     * that parameterize quantizer sizes. Same build-outside-the-lock shape
     * as memo: the count job must not run under the OpCache monitor. */
   def memoLong(s: SparkSession, key: String)(build: => Long): Long = {
-    val cached = synchronized {
-      sweepStopped()
-      var m = longs.get(s)
-      if (m == null) { m = new java.util.HashMap[String, java.lang.Long](); longs.put(s, m) }
-      m.get(key)
-    }
+    val cached = synchronized(entry(s).longs.get(key))
     if (cached != null) return cached.longValue()
     val v = build
     synchronized {
-      var m = longs.get(s)
-      if (m == null) { m = new java.util.HashMap[String, java.lang.Long](); longs.put(s, m) }
-      val prior = m.get(key)
-      if (prior != null) prior.longValue() else { m.put(key, v); v }
+      val prior = entry(s).longs.putIfAbsent(key, v)
+      if (prior != null) prior.longValue() else v
     }
   }
-
-  private val hooks =
-    new java.util.WeakHashMap[SparkSession, java.util.ArrayList[() => Unit]]()
-  private val scopedHooks =
-    new java.util.WeakHashMap[SparkSession, java.util.ArrayList[() => Unit]]()
 
   /** Register a custom release action (e.g. unpersisting an RDD-backed
     * snapshot a DataFrame.unpersist can't reach). */
   def trackHook(s: SparkSession, hook: () => Unit): Unit = synchronized {
-    sweepStopped()
-    var l = hooks.get(s)
-    if (l == null) { l = new java.util.ArrayList[() => Unit](); hooks.put(s, l) }
-    l.add(hook)
+    entry(s).hooks.add(hook); ()
   }
 
   /** Register an ENTRY-SCOPED release action: state that is consumed
@@ -135,10 +93,7 @@ object OpCache {
     * finishes. Run by releaseScoped() — and by release() as a backstop
     * for runtimes that never call releaseScoped. */
   def trackHookScoped(s: SparkSession, hook: () => Unit): Unit = synchronized {
-    sweepStopped()
-    var l = scopedHooks.get(s)
-    if (l == null) { l = new java.util.ArrayList[() => Unit](); scopedHooks.put(s, l) }
-    l.add(hook)
+    entry(s).scopedHooks.add(hook); ()
   }
 
   /** Release ENTRY-SCOPED state between entries: unpersist every pinned
@@ -152,42 +107,38 @@ object OpCache {
     * completes. The deliberate warmup memos (the shared feature store)
     * are kept. */
   def releaseScoped(s: SparkSession): Unit = synchronized {
-    val keep = java.util.Collections.newSetFromMap(
-      new java.util.IdentityHashMap[DataFrame, java.lang.Boolean]())
-    val m = memos.get(s)
-    if (m != null) m.values().forEach { df => keep.add(df); () }
-    val l = pinned.get(s)
-    if (l != null) {
-      val it = l.iterator()
-      while (it.hasNext) {
-        val df = it.next()
-        if (!keep.contains(df)) { df.unpersist(); it.remove() }
+    val e = entries.get(s)
+    if (e != null) {
+      val keep = java.util.Collections.newSetFromMap(
+        new java.util.IdentityHashMap[DataFrame, java.lang.Boolean]())
+      keep.addAll(e.memos.values())
+      e.pinned.removeIf { df =>
+        val drop = !keep.contains(df)
+        if (drop) df.unpersist()
+        drop
       }
+      val h = new java.util.ArrayList(e.scopedHooks)
+      e.scopedHooks.clear()
+      h.forEach { f => f() }
     }
-    val h = scopedHooks.remove(s)
-    if (h != null) h.forEach { f => f() }
-    ()
   }
 
   /** Unpersist every DataFrame this package pinned for `s` and drop its
     * memo tables — the explicit end of the feature-store lifecycle
     * (Verify/Bench call this when a session's query set is done). */
   def release(s: SparkSession): Unit = synchronized {
-    val l = pinned.remove(s)
-    if (l != null) l.forEach { df => df.unpersist(); () }
-    val h = hooks.remove(s)
-    if (h != null) h.forEach { f => f() }
-    val sh = scopedHooks.remove(s)
-    if (sh != null) sh.forEach { f => f() }
-    memos.remove(s)
-    longs.remove(s)
-    ()
+    val e = entries.remove(s)
+    if (e != null) {
+      e.pinned.forEach { df => df.unpersist(); () }
+      e.hooks.forEach { f => f() }
+      e.scopedHooks.forEach { f => f() }
+    }
   }
 
   /** Test hook: the DataFrames currently pinned for `s`. */
   private[graft] def trackedFor(s: SparkSession): Seq[DataFrame] = synchronized {
-    val l = pinned.get(s)
-    if (l == null) Seq.empty
-    else { val b = Seq.newBuilder[DataFrame]; l.forEach(b += _); b.result() }
+    val e = entries.get(s)
+    if (e == null) Seq.empty
+    else { val b = Seq.newBuilder[DataFrame]; e.pinned.forEach(b += _); b.result() }
   }
 }

@@ -107,7 +107,6 @@ object Sinks {
     // the build runs ONCE per dataset (memoized below) and queries reuse
     // it; timing the build into every query would measure the wrong thing.
     GraftQuery("q_bucketed_join", (s, d) => {
-      s.conf.set("spark.sql.sources.bucketing.autoBucketedScan.enabled", "true")
       val (lt, ot) = bucketedTables(s, d)
       s.table(lt)
         .join(s.table(ot), col("l_orderkey") === col("o_orderkey"))

@@ -3,20 +3,21 @@ package graft.streaming
 import graft.{GraftQuery, Exact}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, OutputMode}
+import java.nio.file.{Files, Path, Paths}
 import java.util.concurrent.atomic.AtomicLong
 
 /** SURVEY §2.4 — Structured Streaming over the events table. Each entry
-  * drives a real streaming query (readStream → transform → memory sink,
-  * processAllAvailable) and returns the sink table, so the driver's batch
-  * oracle can hash-check streaming semantics. */
+  * drives a real streaming query through `run` (start → drain every
+  * available input → stop) and returns its sink's contents, so the
+  * batch oracle can hash-check streaming semantics. */
 object Streams {
   import Exact._
 
   private val runId = new AtomicLong(0)
 
   private def eventsStream(s: SparkSession, d: String): DataFrame = {
-    val schema = s.read.parquet(s"$d/events.parquet").schema
+    val schema = rawEvents(s, d).schema
     // glob (not a bare file path): FileStreamSource requires a directory or
     // pattern to poll, exactly like a landing bucket in production. The ts
     // layout varies by driver generation (nanos BIGINT vs TIMESTAMP_NTZ);
@@ -63,7 +64,7 @@ object Streams {
     * `spark.graft.stream.checkpointDir` to durable storage (and entries
     * whose SEMANTICS are the checkpoint — st_recovery's restart — keep
     * their own explicit dirs). Each run's dir is removed after stop
-    * (dropCkpt), which also closes the scratch leak Spark's best-effort
+    * (deleteTree), which also closes the scratch leak Spark's best-effort
     * auto-temp checkpoints had.
     *
     * The per-run names come from a per-JVM counter, so the root is made
@@ -72,12 +73,11 @@ object Streams {
     * the OTHER process's live checkpoint mid-query. The wipe can now only
     * ever hit this process's own dirs. */
   private[streaming] def ckptDir(s: SparkSession, name: String): String = {
-    import java.nio.file._
     val base = s.conf.get("spark.graft.stream.checkpointDir",
       sys.props("java.io.tmpdir") + "/graft_ckpt")
     sweepDeadPidRoots(base)
     val p = Paths.get(base, s"p${ProcessHandle.current().pid()}", name)
-    dropCkpt(p.toString) // wipe a stale dir from an interrupted prior run
+    deleteTree(p.toString) // wipe a stale dir from an interrupted prior run
     Files.createDirectories(p)
     p.toString
   }
@@ -90,7 +90,6 @@ object Streams {
   private val sweptBases = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
   private def sweepDeadPidRoots(base: String): Unit =
     if (sweptBases.add(base)) {
-      import java.nio.file._
       val b = Paths.get(base)
       if (Files.isDirectory(b)) {
         val ls = Files.list(b)
@@ -101,7 +100,7 @@ object Streams {
               n.drop(1).toLongOption.exists(pid =>
                 pid != ProcessHandle.current().pid() &&
                   !ProcessHandle.of(pid).map[Boolean](_.isAlive).orElse(false)))
-            try dropCkpt(q.toString) catch { case _: Exception => () }
+            try deleteTree(q.toString) catch { case _: Exception => () }
         } finally ls.close()
       }
     }
@@ -110,10 +109,11 @@ object Streams {
     * checkpoints at tmpfs when available and no explicit dir is set. */
   def useTmpfsCheckpoints(s: SparkSession): Unit =
     if (s.conf.getOption("spark.graft.stream.checkpointDir").isEmpty &&
-        java.nio.file.Files.isWritable(java.nio.file.Paths.get("/dev/shm")))
+        Files.isWritable(Paths.get("/dev/shm")))
       s.conf.set("spark.graft.stream.checkpointDir", "/dev/shm/graft_ckpt")
-  private[streaming] def dropCkpt(dir: String): Unit = {
-    import java.nio.file._
+
+  /** Recursive delete; a missing `dir` is a no-op. */
+  private[streaming] def deleteTree(dir: String): Unit = {
     val p = Paths.get(dir)
     if (Files.exists(p)) {
       val walk = Files.walk(p)
@@ -123,55 +123,59 @@ object Streams {
     }
   }
 
-  private def runToTable(s: SparkSession, df: DataFrame, mode: OutputMode,
-      noDataBatches: Boolean = true): DataFrame = {
+  /** Streaming state width, a constant: it locks into the checkpoint at
+    * first start and should be sized to the STREAM rate, not inherited
+    * from the session's batch shuffle width — a batch width tuned for
+    * TB-scale scans scatters a replay's state into hundreds of near-empty
+    * state-store files whose per-batch commit I/O dominates (measured:
+    * 32 → 8 partitions halves stream entries at sf0.1; r14 width sweep
+    * over the 5 heaviest entries at 32 cores: 16/8/4/2 monotone down to a
+    * knee at 4 — e.g. st_interval_join 2.64/2.19/1.68/1.62 s, st_late_data
+    * 3.23/2.81/2.22/2.26 s — so the replay width is 4). Scoped to the
+    * query start; batch plans are untouched. */
+  private val StateWidth = "spark.sql.shuffle.partitions" -> "4"
+
+  /** The one stream lifecycle: start `w` (named, with its checkpoint)
+    * under the start-time `confs` — restored right after start — drain
+    * every available input, stop, and record the final state-store size.
+    * Stop runs in `finally`: a throwing batch ends its query by itself,
+    * but a throw on the caller's side (an interrupted drain) would
+    * otherwise leave the query running on a shared session. The checkpoint is scratch (a fresh
+    * ckptDir, dropped in `finally` — with unique run names no later
+    * stale-wipe would ever reclaim a leaked one) unless the caller passes
+    * its own in `keptCkpt` (st_recovery's restart). Returns the query
+    * name, which is the memory sink's table name. */
+  private[streaming] def run(s: SparkSession, w: DataStreamWriter[_],
+      confs: Seq[(String, String)] = Nil, keptCkpt: Option[String] = None): String = {
     val name = s"graft_stream_${runId.incrementAndGet()}"
-    // Streaming state partitioning is its own deployment knob: it locks
-    // into the checkpoint at first start and should be sized to the STREAM
-    // rate, not inherited from the session's batch shuffle width — a batch
-    // width tuned for TB-scale scans scatters a replay's state into
-    // hundreds of near-empty state-store files whose per-batch commit I/O
-    // dominates (measured: 32 → 8 partitions halves stream entries at
-    // sf0.1; r14 width sweep over the 5 heaviest entries at 32 cores:
-    // 16/8/4/2 monotone down to a knee at 4 — e.g. st_interval_join
-    // 2.64/2.19/1.68/1.62 s, st_late_data 3.23/2.81/2.22/2.26 s — so the
-    // replay default is 4; production sizes by stream rate via the conf).
-    // Scoped to the query start; batch plans are untouched.
-    //
-    // noDataBatches=false skips the zero-input micro-batch Spark schedules
-    // after a watermark advance. That batch exists to EMIT results a
-    // watermark unlocks (append-mode aggregations) and to evict state —
-    // for an operator whose results emit eagerly in the data batch (inner
-    // stream-stream interval join), it re-runs the whole stateful plan for
-    // nothing (measured: 0.9 s of the old 2.3 s at sf0.1). Entries whose
-    // final windows flush on watermark advance must keep it true.
-    val was = s.conf.get("spark.sql.shuffle.partitions")
-    val noDataWas = s.conf.get("spark.sql.streaming.noDataMicroBatches.enabled", "true")
-    s.conf.set("spark.sql.shuffle.partitions",
-      s.conf.get("spark.graft.stream.statePartitions", "4"))
-    s.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", noDataBatches.toString)
-    val ckpt = ckptDir(s, name)
-    val q = try df.writeStream.outputMode(mode).format("memory")
-      .option("checkpointLocation", ckpt).queryName(name).start()
-    finally {
-      s.conf.set("spark.sql.shuffle.partitions", was)
-      s.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", noDataWas)
-    }
-    // dropCkpt in finally: a throw between start and stop must not leak
-    // the checkpoint dir (with unique run names no later stale-wipe would
-    // ever reclaim it)
+    val ckpt = keptCkpt.getOrElse(ckptDir(s, name))
     try {
+      val q = graft.Scoped.withConf(s, confs: _*)(
+        w.queryName(name).option("checkpointLocation", ckpt).start())
       try {
         q.processAllAvailable()
-        if (sys.env.contains("SPARK_GRAFT_STREAM_DEBUG"))
-          q.recentProgress.foreach(p => System.err.println(p.json))
         // expose the final state-store size for the boundedness spec
         lastStateRows = q.recentProgress.toSeq
           .flatMap(_.stateOperators.map(_.numRowsTotal)).lastOption.getOrElse(-1L)
       } finally q.stop()
-    } finally dropCkpt(ckpt) // replay scratch: one live checkpoint max, then gone
-    s.table(name)
+    } finally if (keptCkpt.isEmpty) deleteTree(ckpt)
+    name
   }
+
+  /** Run `df` into a memory sink at the replay's state width and return
+    * the sink table.
+    *
+    * noDataBatches=false skips the zero-input micro-batch Spark schedules
+    * after a watermark advance. That batch exists to EMIT results a
+    * watermark unlocks (append-mode aggregations) and to evict state —
+    * for an operator whose results emit eagerly in the data batch (inner
+    * stream-stream interval join), it re-runs the whole stateful plan for
+    * nothing (measured: 0.9 s of the old 2.3 s at sf0.1). Entries whose
+    * final windows flush on watermark advance must keep it true. */
+  private def runToTable(s: SparkSession, df: DataFrame, mode: OutputMode,
+      noDataBatches: Boolean = true): DataFrame =
+    s.table(run(s, df.writeStream.outputMode(mode).format("memory"), Seq(StateWidth,
+      "spark.sql.streaming.noDataMicroBatches.enabled" -> noDataBatches.toString)))
 
   /** numRowsTotal of the last state operator of the last run (spec hook:
     * proves sessionization state is O(users), not O(events)). */
@@ -195,12 +199,6 @@ object Streams {
     * up as a confusing one-extra-row oracle diff). */
   private[streaming] val SentinelMicros = 4102444800000000L
 
-  /** Stage `events.parquet` plus one far-future sentinel event (user -1)
-    * into a temp dir. The sentinel advances the event-time watermark past
-    * every real event after the real batch commits, so every open session
-    * times out and flushes through the NORMAL timeout path — the finite
-    * replay ends exactly like an infinite stream would, with no
-    * special-case end-of-stream logic in the operator. */
   /** Fixed scratch dir per (dataset, kind), WIPED before reuse. Fresh
     * createTempDirectory scratch leaked one full staged replay per JVM
     * run — 37 GB of /tmp after a round of sf10 tooling runs, until
@@ -210,44 +208,75 @@ object Streams {
     * replay from an older plan must never be resumed). Bench/Verify
     * discipline is single-JVM (concurrent JVMs contaminate timings
     * anyway), so cross-process clobbering is out of contract. */
-  private def scratchDir(d: String, kind: String): java.nio.file.Path = {
-    import java.nio.file._
+  private def scratchDir(d: String, kind: String): Path = {
     val p = Paths.get(sys.props("java.io.tmpdir"),
       s"graft_${kind}_${java.lang.Integer.toHexString(d.hashCode)}")
-    if (Files.exists(p)) {
-      val walk = Files.walk(p)
-      try walk.sorted(java.util.Comparator.reverseOrder())
-        .forEach((q: Path) => Files.delete(q))
-      finally walk.close()
-    }
+    deleteTree(p.toString)
     Files.createDirectories(p)
-    p
   }
 
-  private val stagedDirs = new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private def stageWithSentinel(s: SparkSession, d: String): String =
-    stagedDirs.computeIfAbsent(d, _ => {
-      import java.nio.file._
-      val staged = scratchDir(d, "sess_src")
-      val dst = staged.resolve("events.parquet")
-      Files.copy(Paths.get(s"$d/events.parquet"), dst)
-      Files.setLastModifiedTime(dst,
-        attribute.FileTime.fromMillis(System.currentTimeMillis() - 60000))
-      // sentinel: one event in year 2100, written in the raw ts layout
-      val tmp = scratchDir(d, "sess_sentinel")
-      val raw = s.read.parquet(s"$d/events.parquet")
-      raw.limit(1)
-        .withColumn("user_id", org.apache.spark.sql.functions.lit(-1L))
-        .withColumn("event_id", org.apache.spark.sql.functions.lit(-1L))
-        .withColumn("ts", tsLitLike(raw, SentinelMicros))
-        .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-      val part = Files.list(tmp).filter(_.getFileName.toString.endsWith(".parquet"))
-        .findFirst().get()
-      Files.copy(part, staged.resolve("zz_sentinel.parquet"))
-      staged.toString
+  /** One file of a staged replay: its name in the staged dir, its mtime
+    * `ageMs` before now (maxFilesPerTrigger=1 + mtime spacing make the
+    * batch boundaries, and therefore the watermark sequence, fully
+    * deterministic), and its bytes — a source file copied as-is (Left) or
+    * a DataFrame written as one parquet file (Right). */
+  private final case class Part(name: String, ageMs: Long, src: Either[String, DataFrame])
+
+  /** Write `p` into the staged dir `dir` of replay `kind` over `d`. */
+  private def put(d: String, kind: String, dir: Path, p: Part): Unit = {
+    val dst = dir.resolve(p.name)
+    p.src match {
+      case Left(file) => Files.copy(Paths.get(file), dst)
+      case Right(df) =>
+        val tmp = scratchDir(d, s"${kind}_part")
+        df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
+        val ls = Files.list(tmp)
+        try Files.copy(ls.filter(_.getFileName.toString.endsWith(".parquet"))
+          .findFirst().get(), dst)
+        finally ls.close()
+    }
+    Files.setLastModifiedTime(dst,
+      java.nio.file.attribute.FileTime.fromMillis(System.currentTimeMillis() - p.ageMs))
+  }
+
+  /** Staged replay dirs, one per (kind, data dir) per JVM. */
+  private val stagedDirs = new java.util.concurrent.ConcurrentHashMap[(String, String), String]()
+
+  /** Stage replay `kind` over `d` once: its `parts` into a fresh scratch
+    * dir, whose path every later call reuses. */
+  private def stage(d: String, kind: String)(parts: => Seq[Part]): String =
+    stagedDirs.computeIfAbsent((kind, d), _ => {
+      val dir = scratchDir(d, s"${kind}_src")
+      parts.foreach(put(d, kind, dir, _))
+      dir.toString
     })
 
-  /** Stage a deterministic 4-batch replay for the late-data entry:
+  private def rawEvents(s: SparkSession, d: String): DataFrame =
+    s.read.parquet(s"$d/events.parquet") // ts in raw on-disk layout
+
+  /** Two mtime-ordered batches of `df`: the rows where `first` holds,
+    * then the rest. */
+  private def twoBatches(df: DataFrame, first: org.apache.spark.sql.Column,
+      names: (String, String)): Seq[Part] =
+    Seq(Part(names._1, 120000, Right(df.filter(first))),
+      Part(names._2, 60000, Right(df.filter(!first))))
+
+  /** `events.parquet` plus one far-future sentinel event (user -1). The
+    * sentinel advances the event-time watermark past every real event
+    * after the real batch commits, so every open session times out and
+    * flushes through the NORMAL timeout path — the finite replay ends
+    * exactly like an infinite stream would, with no special-case
+    * end-of-stream logic in the operator. */
+  private def stageWithSentinel(s: SparkSession, d: String): String =
+    stage(d, "sess") {
+      val raw = rawEvents(s, d)
+      Seq(Part("events.parquet", 60000, Left(s"$d/events.parquet")),
+        Part("zz_sentinel.parquet", 0, Right(raw.limit(1)
+          .withColumn("user_id", lit(-1L)).withColumn("event_id", lit(-1L))
+          .withColumn("ts", tsLitLike(raw, SentinelMicros)))))
+    }
+
+  /** A deterministic 4-batch replay for the late-data entry:
     * 00_ontime = even users, 01_tick = one clock-only row (Spark's late
     * filter uses the watermark from TWO commits back — SPARK-40925 made
     * late filtering lag eviction by one batch so chained stateful
@@ -256,45 +285,86 @@ object Streams {
     * 02_late = odd users (now genuinely filtered against the on-time
     * watermark), zz_sentinel = one year-2100 event (flushes every
     * surviving window through the normal eviction path).
-    * maxFilesPerTrigger=1 + mtime spacing make the batch boundaries, and
-    * therefore the whole watermark sequence, fully deterministic. */
-  private val lateDirs = new java.util.concurrent.ConcurrentHashMap[String, String]()
+    *
+    * The tick and sentinel rows flow through the aggregation UNFILTERED:
+    * a pre-agg filter would be pushed below the EventTimeWatermark node
+    * into the scan, and rows filtered at the scan never reach the
+    * event-time stats — the sentinel would stop advancing the clock.
+    * Instead both rows are constructed to be harmless: the tick lands in
+    * the first window with value 0.00 at the corpus epoch (the oracle
+    * mirrors that one row), and the sentinel's year-2100 window can never
+    * be passed by the watermark, so it never emits in Append mode. */
   private def stageLate(s: SparkSession, d: String): String =
-    lateDirs.computeIfAbsent(d, _ => {
-      import java.nio.file._
-      val staged = scratchDir(d, "late_src")
-      val raw = s.read.parquet(s"$d/events.parquet") // ts in raw on-disk layout
-      def put(df: org.apache.spark.sql.DataFrame, name: String, ageMs: Long): Unit = {
-        val tmp = scratchDir(d, "late_part")
-        df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-        val part = Files.list(tmp).filter(_.getFileName.toString.endsWith(".parquet"))
-          .findFirst().get()
-        val dst = staged.resolve(name)
-        Files.copy(part, dst)
-        Files.setLastModifiedTime(dst,
-          attribute.FileTime.fromMillis(System.currentTimeMillis() - ageMs))
+    stage(d, "late") {
+      val raw = rawEvents(s, d)
+      Seq(Part("00_ontime.parquet", 180000, Right(raw.filter(col("user_id") % 2 === 0))),
+        Part("01_tick.parquet", 120000, Right(raw.limit(1)
+          .withColumn("user_id", lit(-2L)).withColumn("event_id", lit(-2L))
+          .withColumn("event_type", lit("tick")).withColumn("value", lit(0.0))
+          .withColumn("ts", tsLitLike(raw, 1704067200000000L)))), // 2024-01-01T00:00Z
+        Part("02_late.parquet", 60000, Right(raw.filter(col("user_id") % 2 =!= 0))),
+        Part("zz_sentinel.parquet", 0, Right(raw.limit(1)
+          .withColumn("user_id", lit(-1L)).withColumn("event_id", lit(-1L))
+          .withColumn("event_type", lit("sentinel")).withColumn("value", lit(0.0))
+          .withColumn("ts", tsLitLike(raw, SentinelMicros)))))
+    }
+
+  /** A deterministic 2-batch replay: even users, then odd users. */
+  private def stageEvensOdds(s: SparkSession, d: String): String =
+    stage(d, "eo")(twoBatches(rawEvents(s, d), col("user_id") % 2 === 0,
+      ("00_evens.parquet", "01_odds.parquet")))
+
+  /** st_cdc's staging: two batches split by EVENT id parity (not user id —
+    * a key's changes must land in BOTH batches, or the standing-target
+    * merge never exercises a cross-batch conflict). */
+  private def stageCdcBatches(s: SparkSession, d: String): String =
+    stage(d, "cdc")(twoBatches(rawEvents(s, d), col("event_id") % 2 === 0,
+      ("00_evens.parquet", "01_odds.parquet")))
+
+  /** The crawl delta (doc_id % 10 == 0, dd_incremental's split) as a
+    * deterministic 2-batch document replay: 00 = doc_id % 20 == 0,
+    * 01 = the rest — so the standing-index append between the batches is
+    * observable (batch 2 can match batch-1 survivors). */
+  private def stageDeltaDocs(s: SparkSession, d: String): String =
+    stage(d, "si")(twoBatches(s.read.parquet(s"$d/documents.parquet")
+      .select("doc_id", "text").filter(col("doc_id") % 10 === 0),
+      col("doc_id") % 20 === 0, ("00_b1.parquet", "01_b2.parquet")))
+
+  /** Single-batch replay + a year-2100 sentinel whose event_type is the
+    * literal 'sentinel', so BOTH sides of a two-stream join can isin-keep
+    * it through their type filters (stageWithSentinel's sentinel inherits
+    * an arbitrary real type — fine for unfiltered streams, wrong for
+    * per-type sides). */
+  private def stageBothSentinel(s: SparkSession, d: String): String =
+    stage(d, "lj") {
+      val raw = rawEvents(s, d)
+      Seq(Part("events.parquet", 0, Left(s"$d/events.parquet")),
+        Part("zz_sentinel.parquet", 0, Right(raw.limit(1)
+          .withColumn("user_id", lit(-1L)).withColumn("event_id", lit(-1L))
+          .withColumn("event_type", lit("sentinel"))
+          .withColumn("ts", tsLitLike(raw, SentinelMicros)))))
+    }
+
+  /** A 3-batch replay: 00 = the corpus, 01 = one tick row (lets the
+    * lagged eviction watermark catch up to the base batch — see
+    * st_dedup_watermark), 02 = the SAME events shifted one year later
+    * (raw ts layout preserved) — the watermark sequence the TTL dedup
+    * contract depends on. */
+  private def stageYearReplay(s: SparkSession, d: String): String =
+    stage(d, "ttl") {
+      import org.apache.spark.sql.types.LongType
+      val raw = rawEvents(s, d)
+      val shifted = raw.schema("ts").dataType match {
+        case LongType => raw.withColumn("ts", col("ts") + lit(365L * 86400L * 1000000000L))
+        case _ => raw.withColumn("ts", expr("ts + INTERVAL 365 DAYS"))
       }
-      // The tick and sentinel rows flow through the aggregation UNFILTERED:
-      // a pre-agg filter would be pushed below the EventTimeWatermark node
-      // into the scan, and rows filtered at the scan never reach the
-      // event-time stats — the sentinel would stop advancing the clock.
-      // Instead both rows are constructed to be harmless: the tick lands in
-      // the first window with value 0.00 at the corpus epoch (the oracle
-      // mirrors that one row), and the sentinel's year-2100 window can
-      // never be passed by the watermark, so it never emits in Append mode.
-      put(raw.filter(col("user_id") % 2 === 0), "00_ontime.parquet", 180000)
-      put(raw.limit(1)
-        .withColumn("user_id", lit(-2L)).withColumn("event_id", lit(-2L))
-        .withColumn("event_type", lit("tick")).withColumn("value", lit(0.0))
-        .withColumn("ts", tsLitLike(raw, 1704067200000000L)), // 2024-01-01T00:00Z
-        "01_tick.parquet", 120000)
-      put(raw.filter(col("user_id") % 2 =!= 0), "02_late.parquet", 60000)
-      put(raw.limit(1)
-        .withColumn("user_id", lit(-1L)).withColumn("event_id", lit(-1L))
-        .withColumn("event_type", lit("sentinel")).withColumn("value", lit(0.0))
-        .withColumn("ts", tsLitLike(raw, SentinelMicros)), "zz_sentinel.parquet", 0)
-      staged.toString
-    })
+      Seq(Part("00_base.parquet", 180000, Right(raw)),
+        // tick = the max-ts row re-badged (adds no event-time mass, so the
+        // watermark after the tick batch is exactly max(base) - delay)
+        Part("01_tick.parquet", 120000, Right(raw.orderBy(desc("ts")).limit(1)
+          .withColumn("event_id", lit(-2L)).withColumn("user_id", lit(-2L)))),
+        Part("02_replay.parquet", 60000, Right(shifted)))
+    }
 
   /** Pre-build the memoized staged replay dirs (bench warmup: staging
     * writes files with Spark jobs — harness setup, not operator work). */
@@ -331,7 +401,7 @@ object Streams {
     // ends the finite replay through that same timeout path.
     GraftQuery("st_sessionize", (s, d) => {
       import s.implicits._
-      val schema = s.read.parquet(s"$d/events.parquet").schema
+      val schema = rawEvents(s, d).schema
       val evs = s.readStream.schema(schema)
         .option("maxFilesPerTrigger", "1") // real batch, then sentinel batch
         .parquet(s"${stageWithSentinel(s, d)}/*.parquet")
@@ -500,25 +570,9 @@ object Streams {
     // reproduces exactly that union — update semantics as a hash-checked
     // contract, not a trust-me.
     GraftQuery("st_update_mode", (s, d) => {
-      import java.nio.file._
-      val staged = scratchDir(d, "upd_src")
-      val raw = s.read.parquet(s"$d/events.parquet")
-      def put(df: org.apache.spark.sql.DataFrame, name: String, ageMs: Long): Unit = {
-        val tmp = scratchDir(d, "upd_part")
-        df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-        val part = Files.list(tmp).filter(_.getFileName.toString.endsWith(".parquet"))
-          .findFirst().get()
-        val dst = staged.resolve(name)
-        Files.copy(part, dst)
-        Files.setLastModifiedTime(dst,
-          attribute.FileTime.fromMillis(System.currentTimeMillis() - ageMs))
-      }
-      put(raw.filter(col("user_id") % 2 === 0), "00_evens.parquet", 120000)
-      put(raw.filter(col("user_id") % 2 =!= 0), "01_odds.parquet", 60000)
-      val schema = raw.schema
-      val agg = s.readStream.schema(schema)
+      val agg = s.readStream.schema(rawEvents(s, d).schema)
         .option("maxFilesPerTrigger", "1")
-        .parquet(s"$staged/*.parquet")
+        .parquet(s"${stageEvensOdds(s, d)}/*.parquet")
         .transform(graft.Tables.tsNormalized)
         .groupBy(window(col("ts"), "6 hours"))
         .agg(count(lit(1)).as("n"), sumd(d2(col("value"))).as("total"))
@@ -551,41 +605,23 @@ object Streams {
     // what the oracle checks. Without recovery this double-emits (state
     // lost) or double-reads (offsets lost); either breaks the hash.
     GraftQuery("st_recovery", (s, d) => {
-      import java.nio.file._
       val staged = scratchDir(d, "recov_src")
       val ckpt = scratchDir(d, "recov_ckpt").toString
       val outDir = scratchDir(d, "recov_out").toString
-      val raw = s.read.parquet(s"$d/events.parquet")
-      def put(df: org.apache.spark.sql.DataFrame, name: String): Unit = {
-        val tmp = scratchDir(d, "recov_part")
-        df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-        val part = Files.list(tmp).filter(_.getFileName.toString.endsWith(".parquet"))
-          .findFirst().get()
-        Files.copy(part, staged.resolve(name))
-      }
-      val schema = raw.schema
-      def run(): Unit = {
-        val dedup = s.readStream.schema(schema).parquet(s"$staged/*.parquet")
+      val raw = rawEvents(s, d)
+      // run 1 sees the even users; run 2 restarts from the same checkpoint
+      // after the full set lands (every batch-1 key repeats). Both start
+      // at runToTable's state width (it locks into the checkpoint at first
+      // start); the checkpoint is this entry's semantics, so run keeps it.
+      Seq(Part("01_first.parquet", 0, Right(raw.filter(col("user_id") % 2 === 0))),
+          Part("02_rest.parquet", 0, Right(raw))).foreach { p =>
+        put(d, "recov", staged, p)
+        run(s, s.readStream.schema(raw.schema).parquet(s"$staged/*.parquet")
           .select(col("event_type"), col("value"))
           .dropDuplicates("event_type", "value")
-        // same state-width scoping as runToTable: replay-rate state width
-        // (default 4 — the measured knee), not the session's batch shuffle
-        // width (locks into the checkpoint at first start)
-        val was = s.conf.get("spark.sql.shuffle.partitions")
-        s.conf.set("spark.sql.shuffle.partitions",
-          s.conf.get("spark.graft.stream.statePartitions", "4"))
-        val q = try dedup.writeStream.outputMode(OutputMode.Append())
-          .option("checkpointLocation", ckpt)
-          .option("path", outDir)
-          .format("parquet").start()
-        finally s.conf.set("spark.sql.shuffle.partitions", was)
-        q.processAllAvailable()
-        q.stop()
+          .writeStream.outputMode(OutputMode.Append())
+          .option("path", outDir).format("parquet"), Seq(StateWidth), Some(ckpt))
       }
-      put(raw.filter(col("user_id") % 2 === 0), "01_first.parquet")
-      run()
-      put(raw, "02_rest.parquet") // full set: every batch-1 key repeats
-      run()
       // batch read honors the sink's _spark_metadata exactly-once manifest
       s.read.parquet(outDir).select("event_type", "value")
     },
@@ -600,7 +636,7 @@ object Streams {
     // the watermark, so it never emits and needs no filtering (a pre-agg
     // filter would be pushed below the watermark node — see st_late_data).
     GraftQuery("st_session_window", (s, d) => {
-      val schema = s.read.parquet(s"$d/events.parquet").schema
+      val schema = rawEvents(s, d).schema
       val evs = s.readStream.schema(schema)
         .option("maxFilesPerTrigger", "1")
         .parquet(s"${stageWithSentinel(s, d)}/*.parquet")
@@ -643,7 +679,7 @@ object Streams {
     // streaming aggregation: state for a window is freed exactly when the
     // watermark passes it, which is what bounds state at 100 TB/day rates.
     GraftQuery("st_late_data", (s, d) => {
-      val schema = s.read.parquet(s"$d/events.parquet").schema
+      val schema = rawEvents(s, d).schema
       val evs = s.readStream.schema(schema)
         .option("maxFilesPerTrigger", "1")
         .parquet(s"${stageLate(s, d)}/*.parquet")
@@ -712,7 +748,7 @@ object Streams {
     // stream-length-bounded.
     GraftQuery("st_left_join", (s, d) => {
       val staged = stageBothSentinel(s, d)
-      val schema = s.read.parquet(s"$d/events.parquet").schema
+      val schema = rawEvents(s, d).schema
       def side(types: Seq[String], idAs: String, userAs: String, tsAs: String) =
         s.readStream.schema(schema).parquet(s"$staged/*.parquet")
           .transform(graft.Tables.tsNormalized)
@@ -761,7 +797,7 @@ object Streams {
     // duplicate would be dropped (observed: 1000 rows, zero re-emits).
     GraftQuery("st_dedup_watermark", (s, d) => {
       val staged = stageYearReplay(s, d)
-      val schema = s.read.parquet(s"$d/events.parquet").schema
+      val schema = rawEvents(s, d).schema
       val evs = s.readStream.schema(schema)
         .option("maxFilesPerTrigger", "1") // base batch, tick, replay batch
         .parquet(s"$staged/*.parquet")
@@ -807,13 +843,11 @@ object Streams {
     // the (small) per-batch aggregate against the target — the same
     // single-shuffle shape as q_merge_upsert, once per trigger.
     GraftQuery("st_foreach_batch", (s, d) => {
-      import java.nio.file._
       val staged = stageEvensOdds(s, d)
       val tgt = scratchDir(d, "fb_tgt")
       val cur = tgt.resolve("cur")
-      val schema = s.read.parquet(s"$d/events.parquet").schema
-      val fbCkpt = ckptDir(s, s"graft_fb_${runId.incrementAndGet()}")
-      val q = s.readStream.schema(schema)
+      val schema = rawEvents(s, d).schema
+      run(s, s.readStream.schema(schema)
         .option("maxFilesPerTrigger", "1") // evens batch, then odds batch
         .parquet(s"$staged/*.parquet")
         .transform(graft.Tables.tsNormalized)
@@ -847,11 +881,7 @@ object Streams {
           }
           Files.move(next, cur)
           ()
-        }
-        .option("checkpointLocation", fbCkpt)
-        .start()
-      try { try q.processAllAvailable() finally q.stop() }
-      finally dropCkpt(fbCkpt) // in finally: no leak on a mid-run throw
+        })
       s.read.parquet(cur.toString)
         .select(col("event_type"), col("n"), col("total").cast("double").as("total"))
     },
@@ -884,13 +914,11 @@ object Streams {
     // nothing rescans history. Oracle: one window over the whole corpus
     // picking each key's (ts, event_id)-max change, deletes filtered.
     GraftQuery("st_cdc", (s, d) => {
-      import java.nio.file._
       val staged = stageCdcBatches(s, d)
       val tgt = scratchDir(d, "cdc_tgt")
       val cur = tgt.resolve("cur")
-      val schema = s.read.parquet(s"$d/events.parquet").schema
-      val fbCkpt = ckptDir(s, s"graft_fb_${runId.incrementAndGet()}")
-      val q = s.readStream.schema(schema)
+      val schema = rawEvents(s, d).schema
+      run(s, s.readStream.schema(schema)
         .option("maxFilesPerTrigger", "1") // evens batch, then odds batch
         .parquet(s"$staged/*.parquet")
         .transform(graft.Tables.tsNormalized)
@@ -922,11 +950,7 @@ object Streams {
           }
           Files.move(next, cur)
           ()
-        }
-        .option("checkpointLocation", fbCkpt)
-        .start()
-      try { try q.processAllAvailable() finally q.stop() }
-      finally dropCkpt(fbCkpt) // in finally: no leak on a mid-run throw
+        })
       s.read.parquet(cur.toString)
         .filter(!col("ch.del"))
         .select(col("user_id"), col("ch.value").as("value"),
@@ -964,7 +988,7 @@ object Streams {
     // (window, type) — none grow with stream length.
     GraftQuery("st_pipeline_monitor", (s, d) => {
       val staged = stageWithSentinel(s, d)
-      val schema = s.read.parquet(s"$d/events.parquet").schema
+      val schema = rawEvents(s, d).schema
       val evs = s.readStream.schema(schema)
         .option("maxFilesPerTrigger", "1") // corpus batch, then sentinel
         .parquet(s"$staged/*.parquet")
@@ -1031,7 +1055,6 @@ object Streams {
     // but never batch-1 dups (not appended). Same md5 chain as
     // dd_minhash_lsh → memoizable in the sf1+/sf10 sweeps (OracleMemo).
     GraftQuery("st_incremental", (s, d) => {
-      import java.nio.file._
       graft.functions.F.register(s)
       val staged = stageDeltaDocs(s, d)
       val idxDir = scratchDir(d, "si_idx").toString
@@ -1055,8 +1078,7 @@ object Streams {
           "nid BIGINT, oid BIGINT, jacc DOUBLE"))
         .write.mode("overwrite").parquet(outDir)
       val schema = s.read.parquet(s"$staged/00_b1.parquet").schema
-      val fbCkpt = ckptDir(s, s"graft_fb_${runId.incrementAndGet()}")
-      val q = s.readStream.schema(schema)
+      run(s, s.readStream.schema(schema)
         .option("maxFilesPerTrigger", "1") // delta batch 1, then batch 2
         .parquet(s"$staged/*.parquet")
         .writeStream.foreachBatch { (batch: org.apache.spark.sql.Dataset[
@@ -1095,11 +1117,7 @@ object Streams {
             .write.mode("append").parquet(idxDir)
           pairs.unpersist(); b.unpersist()
           ()
-        }
-        .option("checkpointLocation", fbCkpt)
-        .start()
-      try { try q.processAllAvailable() finally q.stop() }
-      finally dropCkpt(fbCkpt) // in finally: no leak on a mid-run throw
+        })
       s.read.parquet(outDir)
     },
       Some(s"""WITH d AS (${graft.operators.DuckSql.shingles("documents", "doc_id", 5)}),
@@ -1294,140 +1312,4 @@ object Streams {
     },
       Some(graft.operators.DataQuality.outlierSql))
   )
-
-  /** Stage a deterministic 2-batch replay (even users, then odd users;
-    * mtime-ordered for maxFilesPerTrigger=1). */
-  /** Stage the crawl delta (doc_id % 10 == 0, dd_incremental's split) as
-    * a deterministic 2-batch document replay: 00 = doc_id % 20 == 0,
-    * 01 = the rest, mtime-ordered for maxFilesPerTrigger=1 — so the
-    * standing-index append between the batches is observable (batch 2
-    * can match batch-1 survivors). */
-  private val deltaDirs = new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private def stageDeltaDocs(s: SparkSession, d: String): String =
-    deltaDirs.computeIfAbsent(d, _ => {
-      import java.nio.file._
-      val staged = scratchDir(d, "si_src")
-      val delta = s.read.parquet(s"$d/documents.parquet")
-        .select("doc_id", "text").filter(col("doc_id") % 10 === 0)
-      def put(df: org.apache.spark.sql.DataFrame, name: String, ageMs: Long): Unit = {
-        val tmp = scratchDir(d, "si_part")
-        df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-        val part = Files.list(tmp).filter(_.getFileName.toString.endsWith(".parquet"))
-          .findFirst().get()
-        val dst = staged.resolve(name)
-        Files.copy(part, dst)
-        Files.setLastModifiedTime(dst,
-          attribute.FileTime.fromMillis(System.currentTimeMillis() - ageMs))
-      }
-      put(delta.filter(col("doc_id") % 20 === 0), "00_b1.parquet", 120000)
-      put(delta.filter(col("doc_id") % 20 =!= 0), "01_b2.parquet", 60000)
-      staged.toString
-    })
-
-  private val eoDirs = new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private def stageEvensOdds(s: SparkSession, d: String): String =
-    eoDirs.computeIfAbsent(d, _ => {
-      import java.nio.file._
-      val staged = scratchDir(d, "eo_src")
-      val raw = s.read.parquet(s"$d/events.parquet")
-      def put(df: org.apache.spark.sql.DataFrame, name: String, ageMs: Long): Unit = {
-        val tmp = scratchDir(d, "eo_part")
-        df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-        val part = Files.list(tmp).filter(_.getFileName.toString.endsWith(".parquet"))
-          .findFirst().get()
-        val dst = staged.resolve(name)
-        Files.copy(part, dst)
-        Files.setLastModifiedTime(dst,
-          attribute.FileTime.fromMillis(System.currentTimeMillis() - ageMs))
-      }
-      put(raw.filter(col("user_id") % 2 === 0), "00_evens.parquet", 120000)
-      put(raw.filter(col("user_id") % 2 =!= 0), "01_odds.parquet", 60000)
-      staged.toString
-    })
-
-  /** st_cdc's staging: two batches split by EVENT id parity (not user id —
-    * a key's changes must land in BOTH batches, or the standing-target
-    * merge never exercises a cross-batch conflict). */
-  private val cdcDirs = new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private def stageCdcBatches(s: SparkSession, d: String): String =
-    cdcDirs.computeIfAbsent(d, _ => {
-      import java.nio.file._
-      val staged = scratchDir(d, "cdc_src")
-      val raw = s.read.parquet(s"$d/events.parquet")
-      def put(df: org.apache.spark.sql.DataFrame, name: String, ageMs: Long): Unit = {
-        val tmp = scratchDir(d, "cdc_part")
-        df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-        val part = Files.list(tmp).filter(_.getFileName.toString.endsWith(".parquet"))
-          .findFirst().get()
-        val dst = staged.resolve(name)
-        Files.copy(part, dst)
-        Files.setLastModifiedTime(dst,
-          attribute.FileTime.fromMillis(System.currentTimeMillis() - ageMs))
-      }
-      put(raw.filter(col("event_id") % 2 === 0), "00_evens.parquet", 120000)
-      put(raw.filter(col("event_id") % 2 =!= 0), "01_odds.parquet", 60000)
-      staged.toString
-    })
-
-  /** Staged single-batch replay + a year-2100 sentinel whose event_type
-    * is the literal 'sentinel', so BOTH sides of a two-stream join can
-    * isin-keep it through their type filters (stageWithSentinel's
-    * sentinel inherits an arbitrary real type — fine for unfiltered
-    * streams, wrong for per-type sides). */
-  private val bothDirs = new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private def stageBothSentinel(s: SparkSession, d: String): String =
-    bothDirs.computeIfAbsent(d, _ => {
-      import java.nio.file._
-      val staged = scratchDir(d, "lj_src")
-      Files.copy(Paths.get(s"$d/events.parquet"), staged.resolve("events.parquet"))
-      val tmp = scratchDir(d, "lj_sentinel")
-      val raw = s.read.parquet(s"$d/events.parquet")
-      raw.limit(1)
-        .withColumn("user_id", lit(-1L)).withColumn("event_id", lit(-1L))
-        .withColumn("event_type", lit("sentinel"))
-        .withColumn("ts", tsLitLike(raw, SentinelMicros))
-        .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-      val part = Files.list(tmp).filter(_.getFileName.toString.endsWith(".parquet"))
-        .findFirst().get()
-      Files.copy(part, staged.resolve("zz_sentinel.parquet"))
-      staged.toString
-    })
-
-  /** Stage a 3-batch replay: 00 = the corpus, 01 = one tick row (lets
-    * the lagged eviction watermark catch up to the base batch — see
-    * st_dedup_watermark), 02 = the SAME events shifted one year later
-    * (raw ts layout preserved), mtime-ordered so maxFilesPerTrigger=1
-    * makes the batch boundaries — and therefore the watermark sequence
-    * the TTL dedup contract depends on — deterministic. */
-  private val replayDirs = new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private def stageYearReplay(s: SparkSession, d: String): String =
-    replayDirs.computeIfAbsent(d, _ => {
-      import java.nio.file._
-      val staged = scratchDir(d, "ttl_src")
-      val raw = s.read.parquet(s"$d/events.parquet")
-      def put(df: org.apache.spark.sql.DataFrame, name: String, ageMs: Long): Unit = {
-        val tmp = scratchDir(d, "ttl_part")
-        df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-        val part = Files.list(tmp).filter(_.getFileName.toString.endsWith(".parquet"))
-          .findFirst().get()
-        val dst = staged.resolve(name)
-        Files.copy(part, dst)
-        Files.setLastModifiedTime(dst,
-          attribute.FileTime.fromMillis(System.currentTimeMillis() - ageMs))
-      }
-      import org.apache.spark.sql.types.{LongType, TimestampNTZType}
-      val shifted = raw.schema("ts").dataType match {
-        case LongType => raw.withColumn("ts", col("ts") + lit(365L * 86400L * 1000000000L))
-        case TimestampNTZType => raw.withColumn("ts", expr("ts + INTERVAL 365 DAYS"))
-        case _ => raw.withColumn("ts", expr("ts + INTERVAL 365 DAYS"))
-      }
-      put(raw, "00_base.parquet", 180000)
-      // tick = the max-ts row re-badged (adds no event-time mass, so the
-      // watermark after the tick batch is exactly max(base) - delay)
-      put(raw.orderBy(org.apache.spark.sql.functions.desc("ts")).limit(1)
-        .withColumn("event_id", lit(-2L)).withColumn("user_id", lit(-2L)),
-        "01_tick.parquet", 120000)
-      put(shifted, "02_replay.parquet", 60000)
-      staged.toString
-    })
 }

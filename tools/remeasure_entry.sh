@@ -1,7 +1,7 @@
 #!/bin/bash
 # Re-measure ONE entry (or a regex of entries) at the three bench scales and
 # splice the fresh pooled minima into the committed artifacts — for when a
-# single operator's plan changed and a full rebaseline (tools/rebaseline_r9.sh)
+# single operator's plan changed and a full rebaseline of every entry
 # would waste an hour re-timing 177 unchanged entries.
 #
 # Usage: tools/remeasure_entry.sh '^dd_span_scrub$'
