@@ -1,7 +1,7 @@
 package graft.sources.api
 
 import java.util
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{GraftBridge, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog._
@@ -21,6 +21,13 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   *   - SupportsPushDownLimit        ↔ SQLITE_INDEX_CONSTRAINT_LIMIT (table.go:56)
   *   - InputPartition (serialized QueryContext) ↔ IndexString JSON (table.go:224)
   *   - required-key validation at build() ↔ allRequiredKeyColsInConstraints
+  *   - a run of splits read in order by one task ↔ the one cursor (cursor.go)
+  *
+  * A split (ApiSplit) is the unit of plugin call, retry, QueryCache key and
+  * ScanLedger count. A Spark task is not: `GraftInputPartition.pack` groups
+  * the splits into contiguous runs, at most leaf parallelism of them, and
+  * the reader walks a run's splits lazily — so an 800-page scan is one task
+  * per core, and a one-split lookup or ordered page stays one task.
   *
   * Like the reference (ConstraintUsage.Omit=false keeps SQLite re-checking
   * every constraint), ALL filters are also returned as residual: the source
@@ -367,7 +374,7 @@ case class GraftScan(pluginAlias: String, table: ApiTable, config: PluginConfig,
     val eqc = effectiveQc
     val ss = table.splits(eqc, config)
     ScanLedger.lastSplitCount = ss.length
-    ss.map(s => GraftInputPartition(s, eqc): InputPartition).toArray
+    GraftInputPartition.pack(ss, eqc)
   }
   override def createReaderFactory(): PartitionReaderFactory =
     GraftReaderFactory(pluginAlias, table, config, cacheEnabled, cacheTtl, pushedAggs)
@@ -408,15 +415,31 @@ class GraftMicroBatchStream(scan: GraftScan)
     val keyCol = scan.table.keyColumns.headOption.map(_.name).getOrElse("id")
     val qc = QueryContext(scan.qc.columns,
       scan.qc.quals ++ Seq(Qual(keyCol, ">=", lo), Qual(keyCol, "<", hi)), None)
-    scan.table.splits(qc, scan.config)
-      .map(s => GraftInputPartition(s, qc): InputPartition).toArray
+    GraftInputPartition.pack(scan.table.splits(qc, scan.config), qc)
   }
   override def createReaderFactory(): PartitionReaderFactory =
     GraftReaderFactory(scan.pluginAlias, scan.table, scan.config,
       cacheEnabled = false, scan.cacheTtl)
 }
 
-case class GraftInputPartition(split: ApiSplit, qc: QueryContext) extends InputPartition
+/** One Spark task's share of a scan: a contiguous run of splits, in split
+  * order, read one after another under the same QueryContext. */
+case class GraftInputPartition(splits: Seq[ApiSplit], qc: QueryContext) extends InputPartition
+
+object GraftInputPartition {
+  /** Groups `splits` into at most leaf-parallelism contiguous runs of
+    * near-equal length (`spark.sql.leafNodeDefaultParallelism` when set,
+    * else the default parallelism — what Spark gives leaf scans such as
+    * `range`). Parallelism then follows the cluster, not how the remote
+    * source pages its data; concatenating the runs gives the split order. */
+  def pack(splits: Seq[ApiSplit], qc: QueryContext): Array[InputPartition] = {
+    val ss = splits.toIndexedSeq
+    val k = math.min(ss.length, GraftBridge.leafParallelism(SparkSession.active))
+    def start(i: Int): Int = (i.toLong * ss.length / k).toInt
+    Array.tabulate[InputPartition](k)(i =>
+      GraftInputPartition(ss.slice(start(i), start(i + 1)), qc))
+  }
+}
 
 case class GraftReaderFactory(pluginAlias: String, table: ApiTable,
     config: PluginConfig, cacheEnabled: Boolean, cacheTtl: Long,
@@ -426,34 +449,34 @@ case class GraftReaderFactory(pluginAlias: String, table: ApiTable,
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
     val p = partition.asInstanceOf[GraftInputPartition]
     new PartitionReader[InternalRow] {
-      private val it: Iterator[Array[Any]] = {
+      // Transient API failures retry at split granularity (the reference
+      // SDK's RetryConfig analog): a rate-limited page re-fetches without
+      // failing the whole Spark task. Attempt count from connection
+      // config; backoff is skipped for determinism in local runs (a
+      // production plugin sleeps inside its own scan()).
+      private def withRetry(f: => Iterator[Array[Any]]): Iterator[Array[Any]] = {
+        val attempts = config.extra.get("retry_attempts").map(_.toInt).getOrElse(3)
+        var last: Throwable = null
+        var i = 0
+        while (i < attempts) {
+          try return f
+          catch { case e: TransientApiError =>
+            last = e; ScanLedger.retries.incrementAndGet()
+          }
+          i += 1
+        }
+        throw last
+      }
+      private def read(split: ApiSplit): Iterator[Array[Any]] = {
         // pushed aggregate: one closed-form partial row per split, no
         // pagination, no cache involvement (nothing heavy to cache)
-        // Transient API failures retry at split granularity (the reference
-        // SDK's RetryConfig analog): a rate-limited page re-fetches without
-        // failing the whole Spark task. Attempt count from connection
-        // config; backoff is skipped for determinism in local runs (a
-        // production plugin sleeps inside its own scan()).
-        def withRetry(f: => Iterator[Array[Any]]): Iterator[Array[Any]] = {
-          val attempts = config.extra.get("retry_attempts").map(_.toInt).getOrElse(3)
-          var last: Throwable = null
-          var i = 0
-          while (i < attempts) {
-            try return f
-            catch { case e: TransientApiError =>
-              last = e; ScanLedger.retries.incrementAndGet()
-            }
-            i += 1
-          }
-          throw last
-        }
         def fetch = pushedAggs match {
           case Some(aggs) =>
-            Iterator.single(table.aggregateSplit(p.split, p.qc, config, aggs).getOrElse(
+            Iterator.single(table.aggregateSplit(split, p.qc, config, aggs).getOrElse(
               throw new IllegalStateException(
                 s"plugin accepted aggregate pushdown but returned no row for $aggs")))
           case None =>
-            ScanLedger.record(p.qc); withRetry(table.scan(p.split, p.qc, config))
+            ScanLedger.record(p.qc); withRetry(table.scan(split, p.qc, config))
         }
         if (cacheEnabled && pushedAggs.isEmpty)
           // config is part of the key: two connections with identical splits
@@ -463,9 +486,12 @@ case class GraftReaderFactory(pluginAlias: String, table: ApiTable,
           // at best, hash-collision row mixups at worst).
           QueryCache.getOrFetch(
             s"$pluginAlias/${table.name}/" +
-              QueryCache.stableKey(config, p.split, p.qc), cacheTtl)(fetch)
+              QueryCache.stableKey(config, split, p.qc), cacheTtl)(fetch)
         else fetch
       }
+      // splits are fetched lazily, one after another: a LIMIT or an
+      // executeTake that has its rows stops before the next API page
+      private val it: Iterator[Array[Any]] = p.splits.iterator.flatMap(read)
       private var current: Array[Any] = _
       override def next(): Boolean = { if (it.hasNext) { current = it.next(); true } else false }
       override def get(): InternalRow = new GenericInternalRow(current.asInstanceOf[Array[Any]])

@@ -50,8 +50,11 @@ final case class KeyColumn(
     required: Boolean,
     operators: Seq[String] = Seq("=")) extends Serializable
 
-/** A unit of scan parallelism — the Spark analog of one plugin pagination
-  * stream. A 1000-executor cluster fans out one split per API page range. */
+/** One API page range of a scan: the unit of plugin call (`scan` or
+  * `aggregateSplit`), of transient-error retry, of QueryCache key and of
+  * ScanLedger count. It is not the unit of Spark scheduling: a Spark task
+  * reads a contiguous run of splits, and a scan has at most leaf
+  * parallelism of those runs (GraftInputPartition.pack). */
 trait ApiSplit extends Serializable
 
 /** A plugin-backed table. Implementations must be Serializable (they are
@@ -176,7 +179,8 @@ object PluginRegistry {
   * Bounded: LRU over a row-count weight budget, plus an expired-entry
   * sweep on every insert — a long-lived executor serving many distinct
   * (split, qual, config) keys stays within `maxWeight` rows instead of
-  * pinning every split it ever read. */
+  * pinning every split it ever read. A single fetch of more than
+  * `maxWeight` rows is returned without being cached. */
 object QueryCache {
   private case class Entry(deadlineMs: Long, rows: Vector[Array[Any]])
   /** Row-count budget across all entries (~tens of MB at typical widths). */
@@ -195,6 +199,9 @@ object QueryCache {
     }
     misses.incrementAndGet()
     val rows = fetch.toVector // fetch outside the lock: slow plugin calls must not serialize
+    // an entry larger than the whole budget is served uncached: keeping it
+    // would evict every other entry and still leave the cache over budget
+    if (rows.length > maxWeight) return rows.iterator
     cache.synchronized {
       val prev = cache.put(key, Entry(now + ttlSeconds * 1000, rows))
       weight += rows.length - (if (prev != null) prev.rows.length else 0)

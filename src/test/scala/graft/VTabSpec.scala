@@ -17,6 +17,13 @@ class VTabSpec extends SparkSpec {
     try f finally spark.conf.set("spark.graft.cache.enabled", "true")
   }
 
+  /** `seq` at 2,000,000 keys: 800 splits of 2,500 rows. */
+  private val bigN = 2000000L
+  private def atBigN[T](f: => T): T = {
+    GraftConfigure.configure(spark, "seq", s"""{"n": $bigN}""")
+    try f finally GraftConfigure.configure(spark, "seq", """{"n": 10000}""")
+  }
+
   test("qual pushdown narrows the key range to one split") {
     noCache {
       ScanLedger.reset()
@@ -234,6 +241,20 @@ class VTabSpec extends SparkSpec {
         served = true; Iterator.empty
       }
       assert(!served, "most recent entry must still be cached")
+      // a fetch larger than the whole budget is served but not cached: it
+      // must neither evict the entries already held nor overrun the budget
+      val sizeBefore = QueryCache.size
+      val big = QueryCache.getOrFetch("oversized", ttlSeconds = 300)(
+        Iterator.fill(150)(Array[Any](-1)))
+      assert(big.length == 150, "an oversized fetch must still return all its rows")
+      assert(QueryCache.currentWeight <= 100,
+        s"weight ${QueryCache.currentWeight} exceeds budget after an oversized fetch")
+      assert(QueryCache.size == sizeBefore, "earlier entries must survive an oversized fetch")
+      served = false
+      QueryCache.getOrFetch("key_49", ttlSeconds = 300) {
+        served = true; Iterator.empty
+      }
+      assert(!served, "an oversized fetch must not evict earlier entries")
     } finally { QueryCache.maxWeight = oldMax; QueryCache.clear() }
   }
 
@@ -363,6 +384,75 @@ class VTabSpec extends SparkSpec {
     // 10000 / 2500 page size = 4 splits, each failed exactly once
     assert(ScanLedger.retries.get() === 4L,
       s"expected one retry per split, got ${ScanLedger.retries.get()}")
+  }
+
+  test("packed scan: 800 splits run as at most leaf-parallelism tasks") {
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
+    atBigN {
+      noCache {
+        ScanLedger.reset()
+        // sum(x) keeps the aggregate off the pushdown path: a row scan
+        val df = numbers.agg(count(lit(1)), sum(col("x")))
+        val r = df.head()
+        var wantSum = 0L
+        var i = 0L
+        while (i < bigN) { wantSum += (i * 7) % 97; i += 1 }
+        assert((r.getLong(0), r.getLong(1)) == ((bigN, wantSum)))
+        assert(ScanLedger.lastSplitCount == 800, s"got ${ScanLedger.lastSplitCount} splits")
+        assert(ScanLedger.scans.get() == 800L, "every split is one plugin call")
+        val scan = new AdaptiveSparkPlanHelper {}
+          .collectFirst(df.queryExecution.executedPlan) { case b: BatchScanExec => b }.get
+        val parts = scan.inputRDD.getNumPartitions
+        assert(parts > 1 && parts <= spark.sparkContext.defaultParallelism,
+          s"800 splits must pack into at most ${spark.sparkContext.defaultParallelism} " +
+            s"partitions, got $parts")
+      }
+    }
+  }
+
+  test("packed scan: transient failures still retry once per split, not per task") {
+    atBigN {
+      noCache {
+        ScanLedger.reset()
+        val df = spark.read.format("graft").option("plugin", "seq")
+          .option("table", "flaky").load()
+        assert(df.count() === bigN)
+        assert(ScanLedger.retries.get() === 800L,
+          s"expected one retry per split, got ${ScanLedger.retries.get()}")
+      }
+    }
+  }
+
+  test("packed scan: a repeat scan is served per split from the cache") {
+    atBigN {
+      QueryCache.clear()
+      ScanLedger.reset()
+      // 200 splits, 500,000 rows: within the cache's row budget
+      val q = numbers.filter(col("id") < 500000L).agg(sum(col("x")))
+      val first = q.head().getLong(0)
+      assert(ScanLedger.lastSplitCount == 200)
+      val fetched = ScanLedger.scans.get()
+      assert(fetched == 200L, s"one plugin call per split, got $fetched")
+      assert(q.head().getLong(0) == first)
+      assert(ScanLedger.scans.get() == fetched, "second scan must be served from cache")
+      assert(QueryCache.hits.get() == 200L, s"got ${QueryCache.hits.get()} cache hits")
+      QueryCache.clear()
+    }
+  }
+
+  test("packed scan: LIMIT over a residual filter reads a packed run lazily") {
+    atBigN {
+      noCache {
+        ScanLedger.reset()
+        val ids = spark.sql("SELECT id FROM graft.seq.numbers WHERE x = 3 LIMIT 5")
+          .collect().map(_.getLong(0))
+        assert(ids.length == 5 && ids.forall(i => (i * 7) % 97 == 3), ids.mkString(","))
+        assert(ScanLedger.scans.get() <= 2L,
+          s"LIMIT 5 must stop fetching pages once it has its rows, fetched " +
+            s"${ScanLedger.scans.get()} of ${ScanLedger.lastSplitCount} splits")
+      }
+    }
   }
 
   test("config table emits valid JSON even with quotes in values") {
