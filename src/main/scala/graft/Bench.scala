@@ -50,40 +50,9 @@ private class BenchTelemetry extends org.apache.spark.scheduler.SparkListener {
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      math.min(32, Runtime.getRuntime.availableProcessors()).toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    Graft.init(spark) // the standard session: functions + TopK strategy/rewrite + catalog
-
-    // JVM/codegen/IO warmup (not timed): touch every table so page cache
-    // and file listings are hot, then run one full query. q_bucketed_join's
-    // one-time bucketed-table build (an index write, amortized across
-    // queries in production) also runs here so its timed region measures
-    // the join itself.
-    Tables.all.foreach(t => Tables.t(spark, sfDir, t).write.format("noop")
-      .mode("overwrite").save())
-    SparkEntry.queries("q_agg_basic")(spark, sfDir).write.format("noop")
-      .mode("overwrite").save()
-    SparkEntry.queries("q_bucketed_join")(spark, sfDir).write.format("noop")
-      .mode("overwrite").save()
-    // ... as does the shared verified-near-dup-pair index (memoized in
-    // Similarity.minhashPairs; dd_minhash_lsh/dd_cluster then time reads
-    // of the persisted snapshot, the production shape).
-    operators.Similarity.warmSharedIndex(spark, sfDir)
-    operators.Similarity.warmVecs(spark, sfDir)
-    operators.TextOps.warmGram3(spark, sfDir)
-    operators.Multimodal.warmPhashIndex(spark, sfDir)
-    operators.Curation2.warmBpe(spark, sfDir)
-    streaming.Streams.useTmpfsCheckpoints(spark) // replay ckpts are scratch
-    streaming.Streams.warmStaging(spark, sfDir)
+    val cpus = GraftSession.cores
+    val spark = GraftSession(cpus)
+    warmUp(spark, sfDir)
 
     val telemetry = new BenchTelemetry
     spark.sparkContext.addSparkListener(telemetry)
@@ -127,7 +96,8 @@ object Bench {
     def jsonList(ns: Seq[String]): String = ns.map("\"" + _ + "\"").mkString("[", ",", "]")
     val total = results.map(_._2).sum
 
-    // Full per-query timings to a file (the stdout capture downstream keeps
+    // Full per-query timings to a file named per core count, so a run at
+    // another width keeps this one's (the stdout capture downstream keeps
     // only a bounded tail, which a 117-entry map overflows). "telemetry" is
     // an ADDITIVE diagnostic block (r14): per-entry GC/spill/shuffle/CPU
     // deltas — the stdout line contract below is unchanged.
@@ -136,7 +106,7 @@ object Bench {
     val envFp = s"""{"cpus":$cpus,"heap_max_mb":${Runtime.getRuntime.maxMemory() >> 20},"host_procs":${Runtime.getRuntime.availableProcessors()}}"""
     val detail = f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":${jsonMap(results)},"failed":${jsonList(failed)},"sf":"$sfDir","env":$envFp,"telemetry":$telemetryJson}"""
     java.nio.file.Files.write(java.nio.file.Paths.get(
-      sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_detail.json")),
+      sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", s"bench_detail_c$cpus.json")),
       (detail + "\n").getBytes("UTF-8"))
 
     // ONE compact JSON line on stdout: total over ALL queries plus the
@@ -190,5 +160,32 @@ object Bench {
     spark.stop()
     println(line)
     System.out.flush()
+  }
+
+  /** JVM/codegen/IO warm-up (not timed), shared by Bench and BenchScale:
+    * touch every table so page cache and file listings are hot, then run
+    * one full query. q_bucketed_join's one-time bucketed-table build (an
+    * index write, amortized across queries in production) also runs here
+    * so its timed region measures the join itself, as do the shared
+    * memoized indexes (e.g. the verified-near-dup-pair index in
+    * Similarity.minhashPairs: dd_minhash_lsh/dd_cluster then time reads of
+    * the persisted snapshot, the production shape) and the streaming
+    * staging. A GenScale table-subset dir (the sf10 scale point) only
+    * carries the tables its entries read: warm what exists. */
+  def warmUp(spark: SparkSession, sfDir: String): Unit = {
+    def has(t: String) = new java.io.File(s"$sfDir/$t.parquet").exists()
+    def noop(name: String): Unit = SparkEntry.queries(name)(spark, sfDir)
+      .write.format("noop").mode("overwrite").save()
+    Tables.all.filter(has).foreach(t => Tables.t(spark, sfDir, t)
+      .write.format("noop").mode("overwrite").save())
+    if (has("lineitem")) noop("q_agg_basic")
+    if (has("lineitem") && has("orders")) noop("q_bucketed_join")
+    operators.Similarity.warmSharedIndex(spark, sfDir)
+    operators.Similarity.warmVecs(spark, sfDir)
+    operators.TextOps.warmGram3(spark, sfDir)
+    operators.Multimodal.warmPhashIndex(spark, sfDir)
+    operators.Curation2.warmBpe(spark, sfDir)
+    streaming.Streams.useTmpfsCheckpoints(spark) // replay ckpts are scratch
+    streaming.Streams.warmStaging(spark, sfDir)
   }
 }

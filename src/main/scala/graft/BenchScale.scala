@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Multi-iteration scaling bench: runs queries N times at a given sf dir
   * and reports per-query MIN and MEDIAN. The sf0.1 local bench has 3-4×
   * run-to-run variance on single runs (page cache/JIT), and BENCH_sf1's
@@ -30,46 +28,15 @@ object BenchScale {
     val iters = args.lift(1).map(_.toInt).getOrElse(3)
     val outFile = args.lift(2).getOrElse("bench_scale.json")
     val nameFilter = args.lift(3).map(_.r)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      math.min(32, Runtime.getRuntime.availableProcessors()).toString)
+    val cpus = GraftSession.cores
     // At sf ≥ 1 the sf0.1 default (one shuffle partition per core) makes
     // partitions outgrow executor memory and spill; raising the INITIAL
-    // partition count and letting AQE coalesce small stages back down is
-    // the scale-ready shape (SPARK_GRAFT_SHUFFLE=256 for the sf1 run).
-    val shuffle = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shuffle)
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    Graft.init(spark) // the standard session: functions + TopK strategy/rewrite + catalog
-
-    // same warmup as Bench: hot page cache + built shared indexes +
-    // bucketed tables + streaming staging, so the timed region measures
-    // the operators, not one-time index builds. A GenScale table-subset
-    // dir (the sf10 scale point) only carries the tables its entries
-    // read — warm what exists, like verify_local's partial-dir guard.
-    def has(t: String) = new java.io.File(s"$sfDir/$t.parquet").exists()
-    Tables.all.filter(has).foreach(t => Tables.t(spark, sfDir, t)
-      .write.format("noop").mode("overwrite").save())
-    if (has("lineitem"))
-      SparkEntry.queries("q_agg_basic")(spark, sfDir).write.format("noop")
-        .mode("overwrite").save()
-    if (has("lineitem") && has("orders"))
-      SparkEntry.queries("q_bucketed_join")(spark, sfDir).write.format("noop")
-        .mode("overwrite").save()
-    operators.Similarity.warmSharedIndex(spark, sfDir)
-    operators.Similarity.warmVecs(spark, sfDir)
-    operators.TextOps.warmGram3(spark, sfDir)
-    operators.Multimodal.warmPhashIndex(spark, sfDir)
-    operators.Curation2.warmBpe(spark, sfDir)
-    streaming.Streams.useTmpfsCheckpoints(spark) // replay ckpts are scratch
-    streaming.Streams.warmStaging(spark, sfDir)
+    // partition count and letting AQE coalesce small stages back down
+    // (Spark's default) is the scale-ready shape (SPARK_GRAFT_SHUFFLE=256
+    // for the sf1 run).
+    val spark = GraftSession(cpus,
+      "spark.sql.shuffle.partitions" -> sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus))
+    Bench.warmUp(spark, sfDir) // same warm-up as Bench
 
     val names = SparkEntry.queries.keys.toSeq.sorted
       .filter(n => nameFilter.forall(_.findFirstIn(n).isDefined))

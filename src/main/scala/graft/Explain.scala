@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan auditor: prints the formatted physical plan of selected queries
   * (all, if no names given) so scan pushdown (PushedFilters/ReadSchema),
   * join strategies, and WholeStageCodegen spans can be inspected.
@@ -10,19 +8,9 @@ object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val names = if (args.length > 1) args.drop(1).toSeq else SparkEntry.queries.keys.toSeq.sorted
-    val builder = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-    // extra confs (same contract as TimeQ): SPARK_GRAFT_CONF="k=v;k2=v2" —
-    // e.g. dumping an eager AQE-off entry's plan under its execution conf
-    sys.env.get("SPARK_GRAFT_CONF").foreach(_.split(';').filter(_.contains("="))
-      .foreach { kv => val Array(k, v) = kv.split("=", 2); builder.config(k, v) })
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    // extra confs as in TimeQ (SPARK_GRAFT_CONF="k=v;k2=v2") — e.g.
+    // dumping an eager AQE-off entry's plan under its execution conf
+    val spark = GraftSession("8", TimeQ.envConfs: _*)
     names.foreach { n =>
       println(s"\n================ $n ================")
       try {

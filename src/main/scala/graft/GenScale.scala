@@ -46,17 +46,7 @@ object GenScale {
     }
 
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      math.min(32, Runtime.getRuntime.availableProcessors()).toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession("spark.sql.parquet.outputTimestampType" -> "TIMESTAMP_MICROS")
     run(spark, args(0), args(1), args.lift(2).map(_.toInt).getOrElse(10),
       args.lift(3).map(_.split(',').toSet).getOrElse(Set.empty))
     spark.stop()

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Generates PLANS_r*.md FROM the PlanContracts assertions (the same
   * table the PlanSpec tier enforces in `sbt test`), so the committed
   * audit document is a report of machine-checked contracts, not prose
@@ -13,15 +11,7 @@ object PlanAudit {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val outFile = args.lift(1).getOrElse("PLANS_generated.md")
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession("8") // PlanSpec's width
 
     val sb = new StringBuilder
     sb ++= "# PLANS — physical-plan audit (GENERATED by `graft.PlanAudit`)\n\n"

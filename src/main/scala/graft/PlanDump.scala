@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Debug tool: print ONE entry's AQE-final executed plan (full text, no
   * truncation) under the same big-stats simulation PlanSpec/PlanAudit use —
   * for pinning new PlanContracts without guessing at node counts.
@@ -10,15 +8,7 @@ object PlanDump {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val name = args.lift(1).getOrElse("q_agg_basic")
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession("8") // PlanSpec's width
     PlanContracts.withBigStats(spark) {
       val p = PlanContracts.finalPlan(spark, sfDir, name)
       println("==== FINAL SECTION ====")

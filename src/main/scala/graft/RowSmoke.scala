@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Scale smoke: run every entry at a (usually GenScale-tiled) sf dir and
   * record row counts. An entry that returns ZERO rows at scale while
   * passing the sf0.01 oracle is the r9 capstone regression class — a
@@ -24,18 +22,9 @@ object RowSmoke {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val outFile = args.lift(1).getOrElse("rowsmoke.json")
     val nameFilter = args.lift(2).map(_.r)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      math.min(32, Runtime.getRuntime.availableProcessors()).toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = GraftSession.cores
+    val spark = GraftSession(cpus,
+      "spark.sql.shuffle.partitions" -> sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus))
     // table-subset dirs (the sf10 tile) only carry some tables: entries
     // whose inputs are absent throw, and on a subset dir that is a SKIP,
     // not a failure. The skip decision is PER ENTRY: an error is a skip

@@ -22,9 +22,14 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     queries("q_agg_basic")(spark, "/root/testdata/sf0.001")
 
-  /** One entry per implemented operator from SURVEY.md §2. */
+  /** One entry per implemented operator from SURVEY.md §2. Each call
+    * wires the session it is given (`Graft.init` is idempotent), so a
+    * session the caller built itself still resolves graft's functions,
+    * planner rules and catalog. */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
-    allDefs.map(q => q.name -> q.run).toMap
+    allDefs.map { q =>
+      q.name -> ((s: SparkSession, d: String) => q.run(Graft.init(s), d))
+    }.toMap
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omitted for non-SQL-expressible ops. */

@@ -1,30 +1,21 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Single-query timing harness for perf iteration:
   * runMain graft.TimeQ <sfDir> <queryName> [iters=3]
   * Prints one line per iteration (noop-sink materialization, same as
   * Bench) so per-query changes can be A/B'd without a full bench run. */
 object TimeQ {
+  /** Extra confs for A/B runs, SPARK_GRAFT_CONF="k=v;k2=v2" (TimeQ and
+    * Explain). */
+  def envConfs: Seq[(String, String)] =
+    sys.env.get("SPARK_GRAFT_CONF").toSeq.flatMap(_.split(';').toSeq)
+      .filter(_.contains("=")).map { kv => val Array(k, v) = kv.split("=", 2); k -> v }
+
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val name = args(1)
     val iters = args.lift(2).map(_.toInt).getOrElse(3)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      math.min(32, Runtime.getRuntime.availableProcessors()).toString)
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-    // extra confs for A/B runs: SPARK_GRAFT_CONF="k=v;k2=v2"
-    sys.env.get("SPARK_GRAFT_CONF").foreach(_.split(';').filter(_.contains("="))
-      .foreach { kv => val Array(k, v) = kv.split("=", 2); builder.config(k, v) })
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession(envConfs: _*)
     streaming.Streams.useTmpfsCheckpoints(spark) // replay ckpts are scratch
     // comma-separated names share one JVM (amortizes startup for A/B
     // sweeps over several entries); iteration loops stay per-entry

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -8,19 +7,7 @@ object Verify {
     val (sfDir, outDir) = (args(0), args(1))
     // optional third arg: regex over query names, for fast local iteration
     val nameFilter = args.lift(2).map(_.r)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      math.min(32, Runtime.getRuntime.availableProcessors()).toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    Graft.init(spark) // the standard session: functions + TopK strategy/rewrite + catalog
+    val spark = GraftSession("spark.sql.parquet.outputTimestampType" -> "TIMESTAMP_MICROS")
     streaming.Streams.useTmpfsCheckpoints(spark) // replay ckpts are scratch
     new java.io.File(outDir).mkdirs()
     // An entry that throws leaves no parquet, and a downstream compare

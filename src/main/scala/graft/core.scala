@@ -27,7 +27,7 @@ object Tables {
     * so far, and both stay supported so a regen in either direction is a
     * no-op here rather than 15 broken entries:
     *  - parquet TIMESTAMP(NANOS) → Spark reads a nanos BIGINT under
-    *    spark.sql.legacy.parquet.nanosAsLong=true (set in every entrypoint);
+    *    spark.sql.legacy.parquet.nanosAsLong=true (set by `GraftSession`);
     *    `div 1000` floors ns→us exactly like DuckDB's conversion.
     *  - parquet timestamp[us] with no timezone → Spark reads TIMESTAMP_NTZ;
     *    with the session pinned to UTC the cast to TimestampType is

@@ -1196,10 +1196,15 @@ object F {
     ("bottomk_sample", (es: Seq[Expression]) =>
       BottomKTupleAgg(es(0), es(1), es(2)).toAggregateExpression()))
 
-  def register(spark: SparkSession): Unit = fns.foreach { case (name, builder) =>
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier(name),
-      new ExpressionInfo("graft.functions", name),
-      builder)
+  /** Idempotent: a name already bound to its builder (a re-wired session,
+    * or one cloned from a wired session) is left alone, so re-wiring does
+    * not log Spark's "replaced a previously registered function". */
+  def register(spark: SparkSession): Unit = {
+    val registry = spark.sessionState.functionRegistry
+    fns.foreach { case (name, builder) =>
+      val id = FunctionIdentifier(name)
+      if (!registry.lookupFunctionBuilder(id).contains(builder))
+        registry.registerFunction(id, new ExpressionInfo("graft.functions", name), builder)
+    }
   }
 }

@@ -316,7 +316,6 @@ object Curation {
     // walk vs DuckDB list(prob ORDER BY pos) + list_reduce) — the same
     // strict-left-fold discipline as dot_product/duckDot.
     GraftQuery("ta_ngram_lm", (s, d) => {
-      graft.functions.F.register(s)
       val docsW = Tables.widened(s, d, "documents")
         .filter(length(col("text")) >= 2)
         .select(col("doc_id"), col("text"))

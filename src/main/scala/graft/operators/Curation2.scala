@@ -631,7 +631,6 @@ object Curation2 {
     // doubles are fixed-shape divisions/folds both engines reproduce
     // bit-exactly.
     GraftQuery("ta_pipeline_curate", (s, d) => {
-      graft.functions.F.register(s)
       val base = docs(s, d)
       // 1. Gopher rule gate + quality (one map-only projection, slim
       // manifest) — the SAME gopherMetrics/gopherKeep definitions as the
@@ -775,7 +774,6 @@ object Curation2 {
     * pattern, and the reason the classifier's marginal cost is one
     * map-only scoring pass. */
   private[graft] def dsirBuckets(s: SparkSession, d: String): DataFrame = {
-    graft.functions.F.register(s)
     OpCache.memo(s, "dsirbks|" + d)(
       Tables.widened(s, d, "documents")
         .withColumn("toks", expr(toksExpr))

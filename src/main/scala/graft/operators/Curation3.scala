@@ -210,7 +210,6 @@ object Curation3 {
     // built once per corpus snapshot and amortized across every consumer;
     // a production run refreshes them with the snapshot).
     GraftQuery("ta_pipeline_full", (s, d) => {
-      graft.functions.F.register(s)
       // REWRITE: the shared 3-stage scrub chain — memoized in TextOps2
       // (one persisted clean corpus per session, shared with
       // ta_pipeline_scrub); the five selection-side consumers read the

@@ -19,8 +19,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * dropped session's entries — the map's DataFrame values strongly
   * reference their session (a Dataset holds its SparkSession), so the
   * value chain keeps the weak key alive. `release(session)` is therefore
-  * MANDATORY at end of life (every runtime entrypoint — Verify, Bench,
-  * BenchScale, TimeQ — calls it), and as a backstop every registry
+  * MANDATORY at end of life (the mains Verify, Bench, BenchScale,
+  * RowSmoke, TimeQ, PlanDump and PlanAudit call it before `stop`), and
+  * as a backstop every registry
   * mutation sweeps entries whose SparkContext has been STOPPED (the one
   * session-death signal observable from outside): a stopped session's
   * cached plans are unusable anyway, so dropping the references then is

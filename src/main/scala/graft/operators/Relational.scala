@@ -429,7 +429,6 @@ object Relational {
     // sketch is a native TypedImperativeAggregate: ≤256 longs per group
     // cross the shuffle regardless of input size.
     GraftQuery("q_approx_distinct", (s, d) => {
-      graft.functions.F.register(s)
       val hash63 =
         "(CAST(conv(substring(md5(CAST(l_partkey AS STRING)), 1, 8), 16, 10) AS BIGINT) % 2147483648) * 4294967296" +
           " + CAST(conv(substring(md5(CAST(l_partkey AS STRING)), 9, 8), 16, 10) AS BIGINT)"

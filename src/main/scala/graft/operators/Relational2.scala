@@ -342,7 +342,6 @@ object Relational2 {
     // TopKRewrite optimizer rule (Rule[LogicalPlan]): users keep their SQL,
     // the engine swaps in the bounded-heap operator.
     GraftQuery("q_topk_rewrite", (s, d) => {
-      graft.plans.GraftOps.register(s)
       Tables.views(s, d)
       s.sql("""SELECT o_orderpriority, CAST(rn AS BIGINT) AS rn, o_orderkey, o_totalprice
               |FROM (
@@ -365,7 +364,6 @@ object Relational2 {
     // the 9.7×-at-sf10 plan with no code change. Plan-contract-pinned
     // (partial+final TopKPerGroup, no Window sort).
     GraftQuery("q_topk_auto", (s, d) => {
-      graft.plans.GraftOps.register(s)
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy(col("o_orderpriority"))
         .orderBy(col("o_totalprice").desc, col("o_orderkey").asc)
@@ -384,7 +382,6 @@ object Relational2 {
     // (native cidr_contains/ip_to_long expressions; the reference carries
     // these types as TEXT, mapping.go:107-131).
     GraftQuery("q_net_funcs", (s, d) => {
-      graft.functions.F.register(s)
       numbers(s).filter(col("id") < 2000L).select(
         col("id"), col("ip"), col("cidr"),
         expr("ip_to_long(ip)").as("ipl"),

@@ -212,7 +212,6 @@ object Relational3 {
     // spec-tested AND machine-checked by the scale sweeps against exact
     // DuckDB counts (tools/verify_sweep.py EPS_BOUND).
     GraftQuery("q_approx_topk", (s, d) => {
-      graft.functions.F.register(s)
       approxTopkTail(Tables.widened(s, d, "documents")
         .select(col("source"),
           explode(expr("filter(split(text, ' '), t -> t <> '')")).as("token"))
@@ -240,7 +239,6 @@ object Relational3 {
     // error). Values are exact cents (decimal(12,2)·100 → BIGINT).
     GraftQuery("q_quantile_sketch", (s, d) => {
       import org.apache.spark.sql.expressions.Window
-      graft.plans.GraftOps.register(s)
       val li = OpCache.track(s, Tables.t(s, d, "lineitem").select(
           col("l_returnflag").as("grp"),
           expr("CAST(CAST(l_extendedprice AS DECIMAL(12,2)) * 100 AS BIGINT)")
@@ -473,7 +471,6 @@ object Relational3 {
     // get_json_object whose minified re-serialization matches DuckDB's
     // json_extract text on the already-minified planted JSON.
     GraftQuery("q_json_each", (s, d) => {
-      graft.functions.F.register(s)
       Tables.t(s, d, "documents")
         .withColumn("js", expr(
           "concat('{\"id\":', doc_id, ',\"name\":\"d', doc_id % 10, " +
@@ -501,7 +498,6 @@ object Relational3 {
              |FROM v""".stripMargin)),
 
     GraftQuery("q_json_tree", (s, d) => {
-      graft.functions.F.register(s)
       Tables.t(s, d, "documents")
         .withColumn("js", expr(
           "concat('{\"id\":', doc_id, ',\"meta\":{\"lang\":\"en', doc_id % 3, " +

@@ -1,7 +1,6 @@
 package graft.operators
 
 import graft.{GraftQuery, Tables}
-import graft.functions.F
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -35,7 +34,6 @@ object Similarity {
     * (no immortal persist). */
   private[operators] def vecs(s: SparkSession, d: String): DataFrame =
     OpCache.memo(s, "vecs|" + d) {
-      F.register(s)
       emb(s, d).select(
         col("vec_id"), col("label"),
         expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("v"))
@@ -228,7 +226,6 @@ object Similarity {
     * answer; the oracle chain (exactTopkSqlCtes) composes the same way. */
   private[operators] def exactTopk(s: SparkSession, d: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    F.register(s)
     val e = vecs(s, d)
     val q = e.filter(col("vec_id") < 8)
       .select(col("vec_id").as("q_id"), col("v").as("qv"), col("n2").as("qn"))
@@ -246,7 +243,6 @@ object Similarity {
     * chain — see the ann_ivf entry for the full plan commentary. */
   private[operators] def ivfTopk(s: SparkSession, d: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    F.register(s)
     val base = vecs(s, d)
     val cents = centroids(base, ivfK(s, d))
     val cbRow = cents.agg(
@@ -375,7 +371,6 @@ object Similarity {
     * array<string> columnar cache scans slower than recomputing codegen'd
     * char_shingles from parquet — same finding as TextOps.gram3). */
   private def mhShingles(s: SparkSession, d: String): DataFrame = {
-    F.register(s)
     docs(s, d).select(col("doc_id"), expr("char_shingles(text, 5)").as("sh"))
   }
 
@@ -764,7 +759,6 @@ object Similarity {
     // union sketch equals the sketch of the union of the source's shingle
     // sets, so DuckDB recomputes it as a per-source MIN over shingles.
     GraftQuery("dd_source_overlap", (s, d) => {
-      F.register(s)
       val sigs = OpCache.track(s, docs(s, d)
         .withColumn("sig", expr("minhash_sig(char_shingles(text, 5))"))
         .groupBy("source")
@@ -794,7 +788,6 @@ object Similarity {
     // into the md5 hex string), fingerprint rebuilt MSB-first, then the
     // same signed-64 conversion and band splits.
     GraftQuery("dd_simhash", (s, d) => {
-      F.register(s)
       docs(s, d)
         .withColumn("simhash", expr("simhash64(filter(split(text, ' '), t -> t <> ''))"))
         .select(col("doc_id"), col("simhash"),

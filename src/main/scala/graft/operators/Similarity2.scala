@@ -1,7 +1,6 @@
 package graft.operators
 
 import graft.{GraftQuery, Tables}
-import graft.functions.F
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -114,7 +113,6 @@ object Similarity2 {
     * top-50) — see the ann_pq entry for the full plan commentary. */
   private[operators] def pqTopk(s: SparkSession, d: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    F.register(s)
     val base = Similarity.vecs(s, d)
     val cbDF = pqCodebook(base, pqK(s, d))
     // encode: nearest codeword per (vector, subspace) via the native
@@ -148,7 +146,6 @@ object Similarity2 {
     * read per candidate) — see the ann_ivf_pq entry for commentary. */
   private[operators] def ivfPqTopk(s: SparkSession, d: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    F.register(s)
     val base = Similarity.vecs(s, d)
     val cents = Similarity.centroids(base, Similarity.ivfK(s, d))
     val cbRow = centroidArrays(cents)
@@ -273,7 +270,6 @@ object Similarity2 {
     // family as dd_minhash_lsh → the oracle recomputes banding, prefilter
     // and Jaccard verify bit-exactly.
     GraftQuery("dd_incremental", (s, d) => {
-      F.register(s)
       val sh = docs(s, d).select(col("doc_id"),
         expr("char_shingles(text, 5)").as("sh"))
       val sigs = OpCache.track(s, sh.withColumn("sig", expr("minhash_sig(sh)"))
@@ -341,7 +337,6 @@ object Similarity2 {
     // SQL), no shuffle, no broadcast needed. The standard pre-step before
     // clustering/ANN when 100 TB of float vectors won't fit the budget.
     GraftQuery("emb_dim_reduce", (s, d) => {
-      F.register(s)
       import s.implicits._
       val base = Tables.widened(s, d, "embeddings").select(
         col("vec_id"),
@@ -396,7 +391,6 @@ object Similarity2 {
     // cluster population starts growing again — past that, run
     // dd_semantic_hier (see semanticPath; GenScaleSpec pins the boundary).
     GraftQuery("dd_semantic", (s, d) => {
-      F.register(s)
       val base = Tables.widened(s, d, "embeddings").select(
         col("vec_id"),
         expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("v"))
@@ -453,7 +447,6 @@ object Similarity2 {
     // both assignments and the pairwise verify bit-exactly.
     GraftQuery("dd_semantic_hier", (s, d) => {
       import org.apache.spark.sql.expressions.Window
-      F.register(s)
       val base = Tables.widened(s, d, "embeddings").select(
         col("vec_id"),
         expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("v"))
@@ -668,7 +661,6 @@ object Similarity2 {
     // loop iterates to convergence; one audited iteration pins the whole
     // mechanism, and shift2 is the convergence signal a driver loop reads.
     GraftQuery("ann_kmeans_refine", (s, d) => {
-      F.register(s)
       val base = Tables.widened(s, d, "embeddings").select(
         col("vec_id"),
         expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("v"))

@@ -24,7 +24,6 @@ object TextOps {
   def warmGram3(s: SparkSession, d: String): Unit = { gram3(s, d)._2.count(); () }
 
   private[operators] def gram3(s: SparkSession, d: String) = {
-    graft.functions.F.register(s)
     // sh is NOT persisted: columnar-caching a ~3 KB array<string> column
     // scans slower than recomputing the codegen'd char_shingles from the
     // parquet text (measured; nested-type cache scans also fall out of
@@ -194,7 +193,6 @@ object TextOps {
     // two aggregations at 100 TB. Exact ints, so the explode/aggregate
     // oracle still matches bit-for-bit.
     GraftQuery("ta_repetition", (s, d) => {
-      graft.functions.F.register(s)
       docs(s, d)
         .withColumn("st", expr("top_bigram_stats(text)"))
         .filter(col("st.n_grams") > 0)
@@ -233,7 +231,6 @@ object TextOps {
     // expression ships (spec-pinned parity incl. non-BMP) for callers
     // with SMALL gram sets; this entry keeps the measured-faster join.
     GraftQuery("dd_decontaminate", (s, d) => {
-      graft.functions.F.register(s)
       val all = docs(s, d)
       val bench = all.filter(col("doc_id") % 97 === 0)
         .select(explode(expr("char_shingles(text, 8)")).as("sg")).distinct()
@@ -283,7 +280,6 @@ object TextOps {
     // is SQL-expressible, so the whole pipeline is oracle-checked end to
     // end with the candidate generator you'd actually run at 100 TB.
     GraftQuery("dd_pipeline", (s, d) => {
-      graft.functions.F.register(s)
       val base = docs(s, d)
       // 1. exact dedup: keep the earliest doc per content hash. The kept-id
       // set feeds four branches (kept docs, shingle restrict, signature
@@ -380,7 +376,6 @@ object TextOps {
     // threshold sits far above corpus background similarity, so candidate
     // volume has no heavy hash-draw tail (see BENCH_sf1.json findings).
     GraftQuery("dd_pipeline_indexed", (s, d) => {
-      graft.functions.F.register(s)
       val base = docs(s, d)
       val keepIds = base.groupBy(md5(col("text")).as("fp"))
         .agg(min(col("doc_id")).as("doc_id")).select("doc_id")

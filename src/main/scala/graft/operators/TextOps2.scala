@@ -287,7 +287,6 @@ object TextOps2 {
       // (array_distinct × aggregate with a replace() per distinct char)
       // was O(distinct · len) interpreted work per row — 2.5 s of the
       // sf0.1 bench for what is one hash-map pass
-      graft.functions.F.register(s)
       docs(s, d)
         .withColumn("st", expr("simpson_stats(text)"))
         .select(col("doc_id"),
@@ -367,7 +366,6 @@ object TextOps2 {
     // is the dup-chunk profile (the dd_span analog with content-defined
     // boundaries).
     GraftQuery("dd_chunk_dedup", (s, d) => {
-      graft.functions.F.register(s)
       val base = Tables.widened(s, d, "documents")
         .withColumn("chunks", expr("cdc_chunks(text)"))
       val ch = OpCache.track(s,
@@ -430,7 +428,6 @@ object TextOps2 {
     // 100 TB those shuffles dominate the gate). Only the small eval-set
     // side aggregates (its distinct probe positions ARE the filter).
     GraftQuery("dd_bloom_gate", (s, d) => {
-      graft.functions.F.register(s)
       val all = Tables.widened(s, d, "documents")
       // word-8-gram spans, already md5'd by spanExpr — the 4 probe
       // positions fold disjoint segments of that digest, no second hash
@@ -776,7 +773,6 @@ object TextOps2 {
       // formulation ran ~n_chars md5+conv lambda evaluations per doc and
       // was the worst 100x-scale ratio in BENCH_ALL (51x); the SQL oracle
       // keeps the explicit fold and the results stay hash-identical
-      graft.functions.F.register(s)
       Tables.widened(s, d, "documents")
         .filter(length(col("text")) >= 11) // 8-gram + window 4 minimum
         .withColumn("st", expr("winnow_stats(text)"))

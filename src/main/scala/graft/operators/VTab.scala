@@ -78,7 +78,6 @@ object VTab {
     // 40. TableCatalog path: SQL over graft.<plugin>.<table> (the Spark
     // analog of the reference's dynamically registered vtables).
     GraftQuery("vt_catalog", (s, d) => {
-      GraftConfigure.ensureCatalog(s)
       s.sql("SELECT id, s, ratio FROM graft.seq.numbers WHERE id >= 9990")
     },
       Some("SELECT i AS id, 'row_' || i AS s, i / 100.0 AS ratio FROM range(9990, 10000) t(i)")),
@@ -87,7 +86,6 @@ object VTab {
     // per-plugin config table applies connection config (DSv2 write path,
     // commit on the driver).
     GraftQuery("vt_config_table", (s, d) => {
-      GraftConfigure.ensureCatalog(s)
       s.sql("""INSERT INTO graft.seq.config VALUES ('{"n": 600}')""")
       val df = numbers(s).select("id", "s") // snapshots n=600 at load
       s.sql("""INSERT INTO graft.seq.config VALUES ('{"n": 10000}')""")
@@ -101,7 +99,6 @@ object VTab {
     // in HCL attribute form — comments, string/array extras, and the n
     // override all apply through the same path as JSON.
     GraftQuery("vt_config_hcl", (s, d) => {
-      GraftConfigure.ensureCatalog(s)
       s.sql("""INSERT INTO graft.seq.config VALUES ('
               |  # connection options (HCL attribute form, reference test.sql:6-8)
               |  profile = "silverwater"
@@ -117,7 +114,6 @@ object VTab {
     // 41b. multi-plugin registry: a second plugin (metrics) with a required
     // series key + t-range pushdown, queried through the same catalog.
     GraftQuery("vt_multi_plugin", (s, d) => {
-      GraftConfigure.ensureCatalog(s)
       s.sql("""SELECT t, value, tag FROM graft.metrics.series
               |WHERE series_id = 3 AND t >= 100 AND t < 600""".stripMargin)
     },
@@ -194,7 +190,6 @@ object VTab {
     // rides the accepted TopN as a page start — `?page=m/n&per_page=n`
     // answered at the source, zero rows skipped Spark-side.
     GraftQuery("vt_offset_pushdown", (s, d) => {
-      GraftConfigure.ensureCatalog(s)
       s.sql("""SELECT id, ts, x FROM graft.seq.numbers
               |ORDER BY ts LIMIT 50 OFFSET 1200""".stripMargin)
     },

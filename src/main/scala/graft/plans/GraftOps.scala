@@ -7,7 +7,8 @@ import org.apache.spark.sql.catalyst.expressions.{Ascending, Descending, SortOrd
 /** Public entry points for graft's custom whole-plan operators. */
 object GraftOps {
 
-  /** Idempotent per-session planner + optimizer registration. */
+  /** Idempotent per-session planner + optimizer registration (part of
+    * `Graft.init`; `topKPerGroup` needs it on the session it plans in). */
   def register(spark: SparkSession): Unit = {
     val cur = spark.experimental.extraStrategies
     if (!cur.contains(TopKStrategy))
@@ -22,7 +23,6 @@ object GraftOps {
     * (columnName, ascending). */
   def topKPerGroup(spark: SparkSession, df: DataFrame, groupBy: Seq[String],
       order: Seq[(String, Boolean)], k: Int, rankName: String = "rk"): DataFrame = {
-    register(spark)
     val child = GraftBridge.analyzed(df)
     val groupCols = groupBy.map(n => UnresolvedAttribute.quotedString(n))
     val sortOrder = order.map { case (n, asc) =>

@@ -15,8 +15,9 @@ import org.apache.spark.sql.catalyst.rules.Rule
   * Window entirely (heap merge instead of sort). Only fires for small k
   * (heaps must stay bounded) and a lone row_number window expression.
   *
-  * Installed by DEFAULT in the standard session (Graft.init / Verify /
-  * Bench): any user query in the rank-filter shape gets the bounded-heap
+  * Installed by DEFAULT in every standard session (`Graft.init`, which
+  * `GraftSession` and each `SparkEntry.queries` call run): any user
+  * query in the rank-filter shape gets the bounded-heap
   * plan (measured 9.7× at sf10 vs the window sort). The off-switch is
   * `spark.graft.topk.rewrite=false` — the measured window baseline
   * (q_topk_per_group) runs under that flag. */

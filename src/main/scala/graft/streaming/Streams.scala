@@ -1055,7 +1055,6 @@ object Streams {
     // but never batch-1 dups (not appended). Same md5 chain as
     // dd_minhash_lsh → memoizable in the sf1+/sf10 sweeps (OracleMemo).
     GraftQuery("st_incremental", (s, d) => {
-      graft.functions.F.register(s)
       val staged = stageDeltaDocs(s, d)
       val idxDir = scratchDir(d, "si_idx").toString
       val outDir = scratchDir(d, "si_out").toString
@@ -1084,7 +1083,6 @@ object Streams {
         .writeStream.foreachBatch { (batch: org.apache.spark.sql.Dataset[
           org.apache.spark.sql.Row], _: Long) =>
           val ss = batch.sparkSession
-          graft.functions.F.register(ss)
           val b = sigs(batch.toDF()).persist()
           val idx = ss.read.parquet(idxDir)
           val cand = banded(b, "nid")
@@ -1245,7 +1243,6 @@ object Streams {
     // bounds instead (verify_sweep EPS_BOUND, with one extra merge level
     // for the stream's state fold).
     GraftQuery("st_topk", (s, d) => {
-      graft.functions.F.register(s)
       val agged = docsStream(s, d)
         .select(col("source"),
           explode(expr("filter(split(text, ' '), t -> t <> '')")).as("token"))
@@ -1270,7 +1267,6 @@ object Streams {
     // side already prices this sample's error, so the monitor inherits a
     // measured error model for free).
     GraftQuery("st_quantile", (s, d) => {
-      graft.functions.F.register(s)
       val li = liStream(s, d).select(
           col("l_returnflag").as("grp"),
           expr("CAST(CAST(l_extendedprice AS DECIMAL(12,2)) * 100 AS BIGINT)")

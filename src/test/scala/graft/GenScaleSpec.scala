@@ -174,7 +174,6 @@ class GenScaleSpec extends SparkSpec {
     // pairs Σ n·(n−1)/2. With K ∝ N the expected cluster population is
     // constant (~clusterTarget), so doubling the corpus must ~double the
     // pairwise work — the fixed-K design this replaces would quadruple it.
-    graft.functions.F.register(spark)
     val base0 = Tables.t(spark, sf, "embeddings")
     def pairWork(reps: Int): (Long, Long) = {
       val tiled = (0 until reps).map { r =>
@@ -207,7 +206,6 @@ class GenScaleSpec extends SparkSpec {
   test("IVF probe scaling: nprobe tracks √K; ground-truth recall@5 holds across the knee") {
     import graft.operators.{Similarity, Similarity2}
     import org.apache.spark.sql.expressions.Window
-    graft.functions.F.register(spark)
     // the knob algebra: floor 8 below the √K knee (K = 64), √K beyond,
     // bounded candidate mass at the K cap (256 probes · ~256 vectors/cell)
     assert(Similarity.ivfNProbe(32) == 8, "clamped corpora keep the r8 probe count")
@@ -559,7 +557,6 @@ class GenScaleSpec extends SparkSpec {
     // replicas 64..79 are byte-twins of 0..15 whose zero-distance pairs
     // skew every fine cell they touch). Everything is deterministic
     // (md5 sampling), so the measured ratios are stable, not flaky.
-    graft.functions.F.register(spark)
     import org.apache.spark.sql.expressions.Window
     val base0 = Tables.t(spark, sf, "embeddings") // 500 vectors at sf0.001
     def hierWork(reps: Int): (Long, Long, Long) = {
@@ -668,7 +665,6 @@ class GenScaleSpec extends SparkSpec {
 
   test("lshQ keeps bucket candidates linear across the corpus-width knee") {
     import graft.operators.Similarity
-    graft.functions.F.register(spark)
     val base0 = Tables.t(spark, sf, "embeddings")
     // tile in-memory exactly like GenScale (rotation + sign flips would
     // both do; rotation suffices below 64 reps) to two corpus sizes whose
@@ -758,7 +754,6 @@ class GenScaleSpec extends SparkSpec {
     // background containment crosses the 0.5 gate and the pipeline
     // empties. The bounded set (ids < 600) must not grow with replicas,
     // and the capstone must stay non-empty at 2× data.
-    graft.functions.F.register(spark)
     def benchGrams(dir: String): Long =
       Tables.t(spark, dir, "documents")
         .filter(col("doc_id") % 97 === 0 && col("doc_id") < 600)

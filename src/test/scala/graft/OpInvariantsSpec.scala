@@ -219,7 +219,6 @@ class OpInvariantsSpec extends SparkSpec {
       // B0 ⊆ candidates ⇒ the refined rank-1 cos can never be worse than
       // the best DIRECTED ring neighbor — recompute the ring init's best
       // cosine per vec_id and assert pointwise dominance (not just |cos|≤1)
-      graft.functions.F.register(spark)
       val nrm = Tables.t(spark, sf, "embeddings")
         .select(col("vec_id"),
           expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("v"))
@@ -536,7 +535,6 @@ class OpInvariantsSpec extends SparkSpec {
   }
 
   test("gram_hits equals the explode+semi-join formulation (incl. non-BMP)") {
-    graft.functions.F.register(spark)
     import spark.implicits._
     // corpus text plus crafted rows: short (<8 cp), exact 8 cp,
     // supplementary characters (codepoint-indexed gram boundaries), and

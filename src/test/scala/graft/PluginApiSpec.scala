@@ -56,7 +56,6 @@ class PluginApiSpec extends SparkSpec {
   }
 
   test("external plugin is visible through the catalog") {
-    Graft.init(spark)
     Graft.registerPlugin(SlowPlugin)
     val tables = spark.sql("SHOW TABLES IN graft.slow").collect().map(_.getString(1))
     assert(tables.contains("rows"))

@@ -16,12 +16,9 @@ class PropertySpec extends SparkSpec {
       gen.apply(Gen.Parameters.default, Seed(i.toLong)).foreach(f)
     }
 
-  private lazy val registered = { Graft.init(spark); true }
-
   private val strList = Gen.listOfN(30, Gen.alphaLowerStr.suchThat(_.nonEmpty)).map(_.distinct)
 
   test("jaccard_sim ∈ [0,1], symmetric, 1 on self") {
-    assert(registered)
     forAll(Gen.zip(strList, strList)) { case (a, b) =>
       if (a.nonEmpty && b.nonEmpty) {
         val df = Seq((a, b)).toDF("a", "b")
@@ -36,7 +33,6 @@ class PropertySpec extends SparkSpec {
   }
 
   test("minhash signature agreement tracks exact Jaccard within ±0.25") {
-    assert(registered)
     val gen = for {
       base <- Gen.listOfN(80, Gen.identifier.suchThat(_.nonEmpty)).map(_.distinct)
       keep <- Gen.choose(0, base.length)
@@ -54,7 +50,6 @@ class PropertySpec extends SparkSpec {
   }
 
   test("cidr_contains agrees with arithmetic model for random ips/prefixes") {
-    assert(registered)
     val ipGen = Gen.listOfN(4, Gen.choose(0, 255)).map(_.mkString("."))
     val cidrGen = for { ip <- ipGen; len <- Gen.choose(0, 32) } yield s"$ip/$len"
     forAll(Gen.zip(ipGen, cidrGen), 40) { case (ip, cidr) =>
@@ -69,7 +64,6 @@ class PropertySpec extends SparkSpec {
   }
 
   test("char_shingles equals the array_distinct/transform SQL formulation") {
-    assert(registered)
     val sGen = Gen.listOfN(40, Gen.frequency(5 -> Gen.alphaNumChar, 1 -> Gen.const(' ')))
       .map(_.mkString)
     forAll(sGen, 20) { s =>
@@ -96,7 +90,6 @@ class PropertySpec extends SparkSpec {
   }
 
   test("simpson_stats counts codepoints, not UTF-16 units (non-BMP pin)") {
-    assert(registered)
     // n_chars and the char histogram must use the SQL character unit
     // (codepoints — split(s, '') keeps surrogate pairs together); a
     // charAt-per-unit implementation counts an emoji as two half-chars
@@ -115,7 +108,6 @@ class PropertySpec extends SparkSpec {
   }
 
   test("winnow_stats indexes by codepoint: matches the SQL formulation on non-BMP text") {
-    assert(registered)
     // Spark's length()/substring() count CODEPOINTS (UTF8String), exactly
     // like DuckDB's — so this in-plan reference formulation IS the oracle
     // semantics. A UTF-16-indexed native implementation (the pre-r9 bug)
@@ -152,7 +144,6 @@ class PropertySpec extends SparkSpec {
   }
 
   test("cdc_chunks folds codepoints, not UTF-8 bytes (non-BMP pin)") {
-    assert(registered)
     // Independent reference for the DuckDB oracle's semantics: boundary
     // at codepoint position i (16 ≤ i ≤ length) where the left-to-right
     // fold (acc·257 + cp) mod 2^20 over the trailing 16 CODEPOINTS is
@@ -269,7 +260,6 @@ class PropertySpec extends SparkSpec {
     // and mismatched vector lengths — real corpora contain all of these
     // (the r9 ta_bpe_apply empty-doc dropout was exactly this class), so
     // every native kernel must return a deterministic value, not throw.
-    assert(registered)
     val texts = Seq("", " ", "ab", "abcdefg", "\n\t", "a" * 7)
     texts.foreach { t =>
       val df = Seq(Tuple1(t)).toDF("t")
@@ -307,7 +297,6 @@ class PropertySpec extends SparkSpec {
   }
 
   test("top_bigram_stats equals the naive count on random token lists") {
-    assert(registered)
     val toksGen = Gen.listOfN(60, Gen.oneOf("a", "b", "c", "ab", "xyz"))
     forAll(toksGen, 20) { toks =>
       val text = toks.mkString(" ")
@@ -323,7 +312,6 @@ class PropertySpec extends SparkSpec {
   }
 
   test("KMV sketch is exact below its capacity (k=256)") {
-    assert(registered)
     val valsGen = Gen.listOfN(300, Gen.choose(0L, 99L)) // ≤100 distinct, many dupes
     forAll(valsGen, 10) { vs =>
       if (vs.nonEmpty) {
@@ -336,7 +324,6 @@ class PropertySpec extends SparkSpec {
   }
 
   test("custom top-k equals sort-take on random data") {
-    assert(registered)
     val rows = Gen.listOfN(200, for {
       g <- Gen.choose(0, 4); v <- Gen.choose(-1000, 1000); id <- Gen.choose(0, 100000)
     } yield (g.toLong, v.toLong, id.toLong))
@@ -356,7 +343,6 @@ class PropertySpec extends SparkSpec {
   }
 
   test("pq_encode equals a reference argmin on random vectors") {
-    assert(registered)
     val rnd = new scala.util.Random(11)
     val k = 6
     val cb = Array.fill(8 * k)(Array.fill(8)(rnd.nextDouble() * 2 - 1))
@@ -380,7 +366,6 @@ class PropertySpec extends SparkSpec {
   }
 
   test("space-saving sketch is partitioning-invariant below capacity") {
-    assert(registered)
     val rows = (0 until 500).map(i => s"tok_${i % 37}")
     def top(parts: Int) = rows.toDF("tok").repartition(parts)
       .agg(expr("approx_topk(tok)").as("t"))
@@ -391,7 +376,6 @@ class PropertySpec extends SparkSpec {
   }
 
   test("bottom-k tuple sample: exact min-k WITH multiplicity, partitioning-invariant") {
-    assert(registered)
     import spark.implicits._
     // 400 triples, each duplicated exactly once — the k=256 smallest must
     // survive WITH multiplicity (a set-based buffer would collapse the
@@ -409,7 +393,6 @@ class PropertySpec extends SparkSpec {
   }
 
   test("space-saving sketch: heavy hitters survive over-capacity with bounded error") {
-    assert(registered)
     // 4000 rows, zipf-ish: token_0 × 2000, token_1 × 1000, 1000 singletons;
     // capacity 16 << 1002 distinct
     spark.sessionState.functionRegistry.registerFunction(
@@ -473,7 +456,6 @@ class PropertySpec extends SparkSpec {
   }
 
   test("sig_agree equals the interpreted zip_with fold it replaced") {
-    assert(registered)
     val sigGen = Gen.listOfN(64, Gen.choose(Long.MinValue, Long.MaxValue))
     forAll(Gen.zip(sigGen, sigGen), 10) { case (a0, b) =>
       // plant positional agreements so the count is exercised, not just 0
@@ -489,7 +471,6 @@ class PropertySpec extends SparkSpec {
   }
 
   test("l2_sq equals the interpreted zip_with fold it replaced") {
-    assert(registered)
     val vecGen = Gen.listOfN(64, Gen.choose(-4.0, 4.0))
     forAll(Gen.zip(vecGen, vecGen), 10) { case (a, b) =>
       val df = Seq((a, b)).toDF("a", "b")
@@ -502,7 +483,6 @@ class PropertySpec extends SparkSpec {
   }
 
   test("adc_dist equals the explicit subspace fold on random vectors") {
-    assert(registered)
     val vecGen = Gen.listOfN(64, Gen.choose(-4.0, 4.0))
     // flat subspace-major codebook with K=4 codewords per subspace (8·4
     // subvectors of 8 dims); codes index within each subspace

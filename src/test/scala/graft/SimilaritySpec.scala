@@ -1,6 +1,5 @@
 package graft
 
-import graft.functions.F
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.Row
 
@@ -10,7 +9,6 @@ class SimilaritySpec extends SparkSpec {
   import spark.implicits._
 
   test("minhash signature estimates Jaccard on synthetic near-dups") {
-    F.register(spark)
     // two 90%-overlapping shingle sets + one disjoint
     val base = (0 until 100).map(i => s"shingle_$i")
     val near = (0 until 90).map(i => s"shingle_$i") ++ (0 until 10).map(i => s"other_$i")
@@ -25,7 +23,6 @@ class SimilaritySpec extends SparkSpec {
   }
 
   test("simhash: near-identical token lists land within small hamming distance") {
-    F.register(spark)
     val a = (0 until 200).map(i => s"tok_$i")
     val b = (0 until 196).map(i => s"tok_$i") ++ Seq("x1", "x2", "x3", "x4")
     val c = (0 until 200).map(i => s"zzz_$i")
@@ -38,7 +35,6 @@ class SimilaritySpec extends SparkSpec {
   }
 
   test("sign-LSH finds planted exact near-duplicates") {
-    F.register(spark)
     // plant: vector 1 = vector 0 with tiny noise → cosine ~1 → same buckets
     val rnd = new scala.util.Random(7)
     val v0 = Array.fill(64)(rnd.nextGaussian())
@@ -53,14 +49,12 @@ class SimilaritySpec extends SparkSpec {
   }
 
   test("dot_product matches naive computation") {
-    F.register(spark)
     val df = Seq((Seq(1.0, 2.0, 3.0), Seq(4.0, 5.0, 6.0))).toDF("a", "b")
     val d = df.select(expr("dot_product(a, b)")).head.getDouble(0)
     assert(d == 32.0)
   }
 
   test("minhash_union aggregate: sketch of a group ~ sketch of concatenation") {
-    F.register(spark)
     val docs = Seq(
       (1L, "g1", (0 until 100).map(i => s"sh_$i")),
       (2L, "g1", (50 until 150).map(i => s"sh_$i")),

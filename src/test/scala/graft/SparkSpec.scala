@@ -36,19 +36,9 @@ object SparkSpec {
     p.toString
   }
 
-  lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[8]")
-      .appName("graft-spec")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.debug.maxToStringFields", "100")
-      .config("spark.sql.maxMetadataStringLength", "1000")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  /** The standard graft session at local[8], wired before any spec runs. */
+  lazy val session: SparkSession = GraftSession("8",
+    "spark.app.name" -> "graft-spec",
+    "spark.sql.debug.maxToStringFields" -> "100",
+    "spark.sql.maxMetadataStringLength" -> "1000")
 }

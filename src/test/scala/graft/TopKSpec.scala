@@ -36,7 +36,6 @@ class TopKSpec extends SparkSpec {
   }
 
   test("optimizer rule rewrites row_number<=k filter into TopKPerGroup") {
-    GraftOps.register(spark)
     Tables.t(spark, sf, "orders").createOrReplaceTempView("orders_tk")
     val df = spark.sql(
       """SELECT o_orderpriority, rn, o_orderkey FROM (
@@ -57,7 +56,6 @@ class TopKSpec extends SparkSpec {
 
   test("rewrite sees through the .cast(long) idiom and obeys the off-switch") {
     import org.apache.spark.sql.functions._
-    GraftOps.register(spark)
     def windowForm() = {
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy(col("o_orderpriority"))

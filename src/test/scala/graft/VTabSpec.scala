@@ -139,7 +139,6 @@ class VTabSpec extends SparkSpec {
   }
 
   test("catalog SQL path resolves graft.<plugin>.<table>") {
-    GraftConfigure.ensureCatalog(spark)
     val n = spark.sql("SELECT * FROM graft.seq.numbers WHERE id < 5").count()
     assert(n == 5)
     val tables = spark.sql("SHOW TABLES IN graft.seq").collect().map(_.getString(1)).toSet
@@ -456,7 +455,6 @@ class VTabSpec extends SparkSpec {
   }
 
   test("config table emits valid JSON even with quotes in values") {
-    GraftConfigure.ensureCatalog(spark)
     try {
       GraftConfigure.configure(spark, "seq", """{"note": "say \"hi\" \\ bye"}""")
       val json = spark.sql("SELECT config FROM graft.seq.config").head.getString(0)

@@ -1,6 +1,6 @@
 #!/bin/bash
 # Round-close checklist: the working tree must be CLEAN after the final
-# commit. Round artifacts (LEAKCHECK.json, bench_detail.json, BENCH_r*.json,
+# commit. Round artifacts (LEAKCHECK.json, bench_detail_c<cpus>.json, BENCH_r*.json,
 # CORRECTNESS_r*.json) drifted or sat untracked at the r11 AND r12 closes —
 # this gate turns that recurring hygiene note into a hard failure.
 #
