@@ -1,8 +1,10 @@
 package graft
 
 /** Plan auditor: prints the formatted physical plan of selected queries
-  * (all, if no names given) so scan pushdown (PushedFilters/ReadSchema),
-  * join strategies, and WholeStageCodegen spans can be inspected.
+  * (all, if no names given) so scan pushdown (a parquet scan's
+  * PushedFilters/ReadSchema; a connector scan's `GraftScan(..., quals=[...])`,
+  * the Quals its pushed predicates became), join strategies, and
+  * WholeStageCodegen spans can be inspected.
   * Usage: runMain graft.Explain [sfDir] [name ...] */
 object Explain {
   def main(args: Array[String]): Unit = {

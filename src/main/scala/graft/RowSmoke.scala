@@ -10,6 +10,8 @@ package graft
   *
   * Usage: runMain graft.RowSmoke <sfDir> [outFile] [nameRegex] */
 object RowSmoke {
+  import Verify.q
+
   /** Entries that may legitimately return zero rows (set-difference /
     * anti-join / candidate-pair shapes whose expected result is "no
     * offenders" on a clean corpus) — same contract as QueriesSpec. */
@@ -38,15 +40,17 @@ object RowSmoke {
     val missing = Tables.all.filterNot(has)
     val counts = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => nameFilter.forall(_.findFirstIn(n).isDefined) }
-      .flatMap { case (name, fn) =>
+      .map { case (name, fn) =>
         // keep the FULL message in Left: the missing-table skip decision
         // below greps it for the parquet path, which Spark often prints
         // deep inside a long analysis message — truncating here could
         // cut the path out and misclassify a skip as a failure. The
         // 200-char cap is applied only at JSON emission.
-        try Some(name -> Right(fn(spark, sfDir).count()))
-        catch { case e: Throwable => Some(name -> Left(
-          String.valueOf(e.getMessage))) }
+        val rows = try Right(fn(spark, sfDir).count())
+          catch { case e: Throwable => Left(String.valueOf(e.getMessage)) }
+        // entry-scoped cache hygiene: see OpCache.releaseScoped
+        operators.OpCache.releaseScoped(spark)
+        name -> rows
       }
     val emptyBad = counts.collect {
       case (n, Right(0L)) if !mayBeEmpty(n) => n
@@ -55,18 +59,6 @@ object RowSmoke {
       case (n, Left(m))
         if !missing.exists(t => m.contains(t + ".parquet")) => n
     }
-    // JSON string escape incl. ALL control chars (Spark exception
-    // messages routinely carry newlines/tabs — an unescaped one would
-    // make the whole smoke artifact unparseable)
-    def q(s: String) = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     val body = counts.map {
       case (n, Right(c)) => s"${q(n)}: $c"
       case (n, Left(m)) => s"${q(n)}: ${q("ERR: " + m.take(200))}"

@@ -3,6 +3,20 @@ import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
+  /** `s` as a JSON string literal, escaping the quote, the backslash and
+    * ALL control chars (< 0x20): a tab or CR in an entry's SQL, or a
+    * newline in an exception message, would otherwise make the whole JSON
+    * artifact unparseable. Shared by every main that writes JSON by hand. */
+  def q(s: String): String = "\"" + s.flatMap {
+    case '"'  => "\\\""
+    case '\\' => "\\\\"
+    case '\n' => "\\n"
+    case '\r' => "\\r"
+    case '\t' => "\\t"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  } + "\""
+
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir) = (args(0), args(1))
     // optional third arg: regex over query names, for fast local iteration
@@ -26,18 +40,6 @@ object Verify {
         // entry-scoped cache hygiene: see OpCache.releaseScoped
         operators.OpCache.releaseScoped(spark)
       }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     val json = SparkEntry.oracleSql
       .filter { case (k, _) => nameFilter.forall(_.findFirstIn(k).isDefined) }
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")

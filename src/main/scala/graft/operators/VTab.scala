@@ -243,7 +243,7 @@ object VTab {
     // 93b. DATE qual pushdown end to end (reference constants.go:6
     // DATEONLY + mapping.go:108-158 date-qual parsing): a DateType range
     // reaches the declared `days` table as epoch-days Longs
-    // (GraftScanBuilder.norm), inverts through the `date:` key term to an
+    // (GraftScanBuilder.qualOf), inverts through the `date:` key term to an
     // exact row-key range, and splits() plans exactly the February page —
     // spec-asserted via ScanLedger.
     GraftQuery("vt_date_pushdown",

@@ -24,9 +24,9 @@ import org.apache.spark.unsafe.types.UTF8String
   *   date:yyyy-MM-dd → base + i days           (date; invertible key)
   *
   * Key-column terms must be invertible (`key`, `date:`): quals on the key
-  * column — including DATE quals, which GraftScanBuilder.norm delivers as
-  * epoch-days Longs (reference mapping.go:108-158, constants.go:6
-  * DATEONLY) — invert to exact key ranges in splits(). */
+  * column — including DATE quals, which GraftScanBuilder.qualOf delivers
+  * as epoch-days Longs (reference mapping.go:108-158, constants.go:6
+  * DATEONLY) — invert to exact key ranges in splits() through KeyRange. */
 object DeclaredPlugin {
   import com.fasterxml.jackson.databind.ObjectMapper
   import scala.jdk.CollectionConverters._
@@ -137,7 +137,7 @@ final case class DeclaredTable(spec: DeclaredTableSpec) extends ApiTable {
   override def schema: StructType =
     StructType(spec.columns.map(c => StructField(c.name, c.dataType, nullable = false)))
   override def keyColumns: Seq[KeyColumn] = Seq(KeyColumn(
-    spec.keyColumn, spec.keyRequired, Seq("=", ">", ">=", "<", "<=", "in")))
+    spec.keyColumn, spec.keyRequired, KeyColumn.comparisons :+ "in"))
 
   private val keyGen: Gen = spec.columns.find(_.name == spec.keyColumn)
     .getOrElse(throw new IllegalArgumentException(
@@ -153,49 +153,18 @@ final case class DeclaredTable(spec: DeclaredTableSpec) extends ApiTable {
         case vs: Seq[_] => vs.forall(v => Gen.invert(keyGen, v).isDefined)
         case _ => false
       }
-      case "=" | ">" | ">=" | "<" | "<=" => Gen.invert(keyGen, q.value).isDefined
-      case _ => false
+      case op => KeyColumn.comparisons.contains(op) && Gen.invert(keyGen, q.value).isDefined
     })
 
-  private def narrowed(qc: QueryContext): (Long, Long, Option[Seq[Long]]) = {
-    var lo = 0L
-    var hi = spec.rows
-    var inIds: Option[Seq[Long]] = None
-    qc.quals.filter(_.field == spec.keyColumn).foreach { q =>
-      (q.op, q.value) match {
-        case ("in", vs: Seq[_]) =>
-          val is = vs.flatMap(v => Gen.invert(keyGen, v))
-          inIds = Some(inIds.map(_.intersect(is)).getOrElse(is))
-        case (op, v) => Gen.invert(keyGen, v).foreach { k =>
-          op match {
-            case "=" => lo = math.max(lo, k); hi = math.min(hi, k + 1)
-            case ">" => lo = math.max(lo, k + 1)
-            case ">=" => lo = math.max(lo, k)
-            case "<" => hi = math.min(hi, k)
-            case "<=" => hi = math.min(hi, k + 1)
-            case _ =>
-          }
-        }
-      }
-    }
-    (lo, hi, inIds)
-  }
+  private def narrowed(qc: QueryContext): KeyRange =
+    KeyRange.all(spec.rows).narrow(qc.quals, keyColumns.head,
+      v => Gen.invert(keyGen, v).map((_, true)))
 
-  override def estimatedRows(qc: QueryContext, config: PluginConfig): Option[Long] = {
-    val (lo, hi, inIds) = narrowed(qc)
-    Some(inIds.map(_.count(v => v >= lo && v < hi).toLong)
-      .getOrElse(math.max(0L, hi - lo)))
-  }
+  override def estimatedRows(qc: QueryContext, config: PluginConfig): Option[Long] =
+    Some(narrowed(qc).rows)
 
-  override def splits(qc: QueryContext, config: PluginConfig): Seq[ApiSplit] = {
-    val (lo, hi, inIds) = narrowed(qc)
-    inIds match {
-      case Some(ids) => ids.filter(v => v >= lo && v < hi).distinct.sorted
-        .map(v => RangeSplit(v, v + 1))
-      case None => (lo until hi by spec.pageSize)
-        .map(s => RangeSplit(s, math.min(s + spec.pageSize, hi)))
-    }
-  }
+  override def splits(qc: QueryContext, config: PluginConfig): Seq[ApiSplit] =
+    narrowed(qc).splits(spec.pageSize)(RangeSplit(_, _))
 
   override def scan(split: ApiSplit, qc: QueryContext,
       config: PluginConfig): Iterator[Array[Any]] = {

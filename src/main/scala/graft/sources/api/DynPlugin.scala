@@ -26,34 +26,20 @@ object WideTable extends ApiTable {
       cols(config).map(c => StructField(c, LongType, nullable = false)))
 
   override def keyColumns: Seq[KeyColumn] =
-    Seq(KeyColumn("id", required = false, operators = Seq("=", ">", ">=", "<", "<=")))
+    Seq(KeyColumn("id", required = false, operators = KeyColumn.comparisons))
 
   override def exactlyHandled(q: Qual): Boolean =
-    q.field == "id" && Seq("=", ">", ">=", "<", "<=").contains(q.op) &&
+    q.field == "id" && KeyColumn.comparisons.contains(q.op) &&
       q.value.isInstanceOf[Long]
 
-  override def estimatedRows(qc: QueryContext, config: PluginConfig): Option[Long] =
-    Some(splits(qc, config).map { case RangeSplit(lo, hi, _) => hi - lo }.sum)
+  private def narrowed(qc: QueryContext, config: PluginConfig): KeyRange =
+    KeyRange.all(config.n).narrow(qc.quals, keyColumns.head)
 
-  override def splits(qc: QueryContext, config: PluginConfig): Seq[ApiSplit] = {
-    var lo = 0L
-    var hi = config.n
-    qc.quals.filter(_.field == "id").foreach { q =>
-      q.value match {
-        case v: Long => q.op match {
-          case "=" => lo = math.max(lo, v); hi = math.min(hi, v + 1)
-          case ">" => lo = math.max(lo, v + 1)
-          case ">=" => lo = math.max(lo, v)
-          case "<" => hi = math.min(hi, v)
-          case "<=" => hi = math.min(hi, v + 1)
-          case _ =>
-        }
-        case _ =>
-      }
-    }
-    (lo until hi by config.pageSize)
-      .map(s => RangeSplit(s, math.min(s + config.pageSize, hi)))
-  }
+  override def estimatedRows(qc: QueryContext, config: PluginConfig): Option[Long] =
+    Some(narrowed(qc, config).rows)
+
+  override def splits(qc: QueryContext, config: PluginConfig): Seq[ApiSplit] =
+    narrowed(qc, config).splits(config.pageSize)(RangeSplit(_, _))
 
   override def scan(split: ApiSplit, qc: QueryContext, config: PluginConfig): Iterator[Array[Any]] = {
     val RangeSplit(lo, hi, _) = split: @unchecked

@@ -8,15 +8,18 @@ import org.apache.spark.sql.connector.catalog._
 import org.apache.spark.sql.connector.expressions.{Expressions, Literal, NamedReference, Transform}
 import org.apache.spark.sql.connector.expressions.filter.Predicate
 import org.apache.spark.sql.connector.read._
-import org.apache.spark.sql.sources
-import org.apache.spark.sql.sources.{DataSourceRegister, Filter}
+import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
 /** DataSource V2 provider — the Spark-idiomatic re-expression of the
   * reference's SQLite virtual-table module (module.go + table.go):
   *
-  *   - SupportsPushDownFilters      ↔ xBestIndex qual pushdown (table.go:75)
+  *   - SupportsPushDownV2Filters    ↔ xBestIndex qual pushdown (table.go:75)
+  *   - SupportsRuntimeV2Filtering   ↔ join-key probes at run time, through
+  *     the same Predicate → Qual translation (GraftScanBuilder.qualOf)
+  *   - KeyRange narrowing + paging  ↔ BestIndex range costing, shared by
+  *     every key-range table
   *   - SupportsPushDownRequiredColumns ↔ ColUsed bitmask (table.go:262)
   *   - SupportsPushDownLimit        ↔ SQLITE_INDEX_CONSTRAINT_LIMIT (table.go:56)
   *   - InputPartition (serialized QueryContext) ↔ IndexString JSON (table.go:224)
@@ -30,8 +33,10 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * per core, and a one-split lookup or ordered page stays one task.
   *
   * Like the reference (ConstraintUsage.Omit=false keeps SQLite re-checking
-  * every constraint), ALL filters are also returned as residual: the source
-  * prunes, Spark re-verifies — belt and braces at zero extra shuffle cost.
+  * every constraint), every predicate is also returned as residual unless
+  * the table enforces its qual exactly (ApiTable.exactlyHandled): the
+  * source prunes, Spark re-verifies — belt and braces at zero extra
+  * shuffle cost.
   *
   * Usage: spark.read.format("graft").option("plugin","seq")
   *        .option("table","numbers").load()             — or —
@@ -81,69 +86,28 @@ case class GraftTable(pluginAlias: String, table: ApiTable, config: PluginConfig
 }
 
 class GraftScanBuilder(pluginAlias: String, table: ApiTable, config: PluginConfig)
-    extends ScanBuilder with SupportsPushDownFilters
+    extends ScanBuilder with SupportsPushDownV2Filters
     with SupportsPushDownRequiredColumns with SupportsPushDownLimit
     with SupportsPushDownTopN with SupportsPushDownOffset
     with SupportsPushDownAggregates {
 
-  private var pushed: Array[Filter] = Array.empty
+  private var pushed: Array[Predicate] = Array.empty
+  private var quals: Seq[Qual] = Nil
   private var requiredSchema: StructType = table.schemaFor(config)
   private var limit: Option[Long] = None
   private var topN: Option[(SortKey, Int)] = None
   private var pushedOffset: Int = 0
   private var pushedAggs: Option[Seq[AggSpec]] = None
 
-  /** sources.Filter → Qual, for the operators the reference plugin
-    * protocol understands (mapping.go:34-60) plus IN, which SQLite
-    * decomposes into repeated `=` probes (table.go:127-151) — here one
-    * Qual("in", values) the table may expand into one split per value. */
-  private def toQual(f: Filter): Option[Qual] = f match {
-    case sources.EqualTo(a, v) => norm(v).map(Qual(a, "=", _))
-    case sources.GreaterThan(a, v) => norm(v).map(Qual(a, ">", _))
-    case sources.GreaterThanOrEqual(a, v) => norm(v).map(Qual(a, ">=", _))
-    case sources.LessThan(a, v) => norm(v).map(Qual(a, "<", _))
-    case sources.LessThanOrEqual(a, v) => norm(v).map(Qual(a, "<=", _))
-    case sources.In(a, vs) =>
-      val normed = vs.toSeq.map(norm)
-      if (normed.nonEmpty && normed.forall(_.isDefined))
-        Some(Qual(a, "in", normed.flatten)) else None
-    // LIKE 'prefix%' arrives as StringStartsWith; a plugin whose string
-    // column embeds the key (s = 'row_<id>') inverts the prefix to exact
-    // key ranges — the API "name begins with" filter answered at the source
-    case sources.StringStartsWith(a, v) => Some(Qual(a, "starts_with", v))
-    case _ => None
-  }
-  /** Typed qual values reach the plugin (reference mapping.go:108-158
-    * parses TIMESTAMP/DATETIME the same way): timestamps → epoch micros,
-    * dates → epoch days. Without this, an event-time range on an API table
-    * degrades to a full pagination + residual filter. */
-  private def norm(v: Any): Option[Any] = v match {
-    case i: java.lang.Integer => Some(i.longValue())
-    case l: java.lang.Long => Some(l)
-    case s: java.lang.Short => Some(s.longValue())
-    case d: java.lang.Double => Some(d)
-    case f: java.lang.Float => Some(f.doubleValue())
-    case s: String => Some(s)
-    case b: java.lang.Boolean => Some(b)
-    case t: java.sql.Timestamp =>
-      Some(t.getTime * 1000L + (t.getNanos % 1000000L) / 1000L)
-    case i: java.time.Instant =>
-      Some(Math.addExact(Math.multiplyExact(i.getEpochSecond, 1000000L), i.getNano / 1000L))
-    case dt: java.time.LocalDateTime => // TimestampNTZ quals arrive as LocalDateTime
-      Some(Math.addExact(Math.multiplyExact(
-        dt.toEpochSecond(java.time.ZoneOffset.UTC), 1000000L), dt.getNano / 1000L))
-    case d: java.sql.Date => Some(d.toLocalDate.toEpochDay)
-    case d: java.time.LocalDate => Some(d.toEpochDay)
-    case _ => None // unknown types: leave to Spark's residual filter
-  }
-
-  override def pushFilters(filters: Array[Filter]): Array[Filter] = {
-    pushed = filters.filter(f => toQual(f).isDefined)
+  override def pushPredicates(predicates: Array[Predicate]): Array[Predicate] = {
+    val translated = predicates.map(p => (p, GraftScanBuilder.qualOf(p)))
+    pushed = translated.collect { case (p, Some(_)) => p }
+    quals = translated.toSeq.flatMap(_._2)
     // Exactly-handled quals are accepted (no residual) so Limit can reach
     // the scan; everything else stays residual (reference: Omit=false).
-    filters.filterNot(f => toQual(f).exists(table.exactlyHandled))
+    translated.collect { case (p, q) if !q.exists(table.exactlyHandled) => p }
   }
-  override def pushedFilters(): Array[Filter] = pushed
+  override def pushedPredicates(): Array[Predicate] = pushed
   override def pruneColumns(required: StructType): Unit = requiredSchema = required
   override def pushLimit(l: Int): Boolean = { limit = Some(l.toLong); true }
   // One method serves BOTH SupportsPushDownLimit and SupportsPushDownTopN:
@@ -171,7 +135,6 @@ class GraftScanBuilder(pluginAlias: String, table: ApiTable, config: PluginConfi
     }
     key match {
       case Some(k) =>
-        val quals = pushed.flatMap(toQual).toSeq
         val probe = QueryContext(requiredSchema.fieldNames.toSeq, quals,
           Some(l.toLong), Seq(k), 0L)
         if (quals.forall(table.exactlyHandled) &&
@@ -204,7 +167,6 @@ class GraftScanBuilder(pluginAlias: String, table: ApiTable, config: PluginConfi
         case _ => None
       }
     if (agg.groupByExpressions.nonEmpty) return false
-    val quals = pushed.flatMap(toQual).toSeq
     if (!quals.forall(table.exactlyHandled)) return false
     val specs = agg.aggregateExpressions.toSeq.map {
       case _: CountStar => Some(AggSpec("count_star", None))
@@ -234,7 +196,6 @@ class GraftScanBuilder(pluginAlias: String, table: ApiTable, config: PluginConfi
   }
 
   override def build(): Scan = {
-    val quals = pushed.flatMap(toQual).toSeq
     // Only push LIMIT to the source when it cannot change results: with
     // residual quals the source's early cut could starve Spark's re-check.
     // (Spark only calls pushLimit in that shape anyway; this is defensive.)
@@ -272,6 +233,68 @@ class GraftScanBuilder(pluginAlias: String, table: ApiTable, config: PluginConfi
   }
 }
 
+object GraftScanBuilder {
+  import org.apache.spark.sql.connector.expressions.Expression
+
+  /** Each comparison operator with its mirror, for `literal op column`. */
+  private val mirrored = Map("=" -> "=", ">" -> "<", ">=" -> "<=", "<" -> ">", "<=" -> ">=")
+
+  /** The one DSv2 Predicate → Qual translation, for compile-time pushdown
+    * (pushPredicates) and runtime filters (GraftScan.filter) alike: the
+    * comparisons the reference plugin protocol understands
+    * (mapping.go:34-60); IN, which SQLite decomposes into repeated `=`
+    * probes (table.go:127-151) — here one Qual("in", values) the table may
+    * expand into one split per value; and STARTS_WITH, the form of
+    * `LIKE 'prefix%'`, which a plugin whose string column embeds the key
+    * inverts to exact key ranges. Anything else stays with Spark. */
+  def qualOf(p: Predicate): Option[Qual] = {
+    val ch = p.children()
+    p.name() match {
+      case "IN" if ch.length >= 2 =>
+        val vs = ch.tail.toSeq.map(valueOf)
+        for (f <- fieldOf(ch.head) if vs.forall(_.isDefined)) yield Qual(f, "in", vs.flatten)
+      case "STARTS_WITH" if ch.length == 2 =>
+        for (f <- fieldOf(ch(0)); v <- valueOf(ch(1)) if v.isInstanceOf[String])
+          yield Qual(f, "starts_with", v)
+      case op if ch.length == 2 && mirrored.contains(op) =>
+        (for (f <- fieldOf(ch(0)); v <- valueOf(ch(1))) yield Qual(f, op, v))
+          .orElse(for (f <- fieldOf(ch(1)); v <- valueOf(ch(0))) yield Qual(f, mirrored(op), v))
+      case _ => None
+    }
+  }
+
+  // NamedReference/Literal are the public DSv2 faces (FieldReference/
+  // LiteralValue are private[sql])
+  private def fieldOf(e: Expression): Option[String] = e match {
+    case f: NamedReference if f.fieldNames.length == 1 => Some(f.fieldNames.head)
+    case _ => None
+  }
+
+  /** Typed qual values reach the plugin Catalyst-external (reference
+    * mapping.go:108-158 parses TIMESTAMP/DATETIME the same way):
+    * timestamps as epoch micros, dates as epoch days. Without this an
+    * event-time range on an API table degrades to a full pagination plus a
+    * residual filter. A NULL or an unlisted type stays with Spark. */
+  private def valueOf(e: Expression): Option[Any] = {
+    import org.apache.spark.sql.types._
+    e match {
+      case l: Literal[_] if l.value != null => l.dataType match {
+        case LongType => Some(l.value.asInstanceOf[Long])
+        case IntegerType => Some(l.value.asInstanceOf[Int].toLong)
+        case ShortType => Some(l.value.asInstanceOf[Short].toLong)
+        case StringType => Some(l.value.toString)
+        case BooleanType => Some(l.value.asInstanceOf[Boolean])
+        case DoubleType => Some(l.value.asInstanceOf[Double])
+        case FloatType => Some(l.value.asInstanceOf[Float].toDouble)
+        case TimestampType | TimestampNTZType => Some(l.value.asInstanceOf[Long])
+        case DateType => Some(l.value.asInstanceOf[Int].toLong)
+        case _ => None
+      }
+      case _ => None
+    }
+  }
+}
+
 case class GraftScan(pluginAlias: String, table: ApiTable, config: PluginConfig,
     qc: QueryContext, prunedSchema: StructType, cacheEnabled: Boolean, cacheTtl: Long,
     pushedAggs: Option[Seq[AggSpec]] = None)
@@ -296,51 +319,8 @@ case class GraftScan(pluginAlias: String, table: ApiTable, config: PluginConfig,
       .map(Expressions.column).toArray
 
   override def filter(predicates: Array[Predicate]): Unit = {
-    runtimeQuals = predicates.toSeq.flatMap(predicateToQual)
+    runtimeQuals = predicates.toSeq.flatMap(GraftScanBuilder.qualOf)
     ScanLedger.lastRuntimeQuals = runtimeQuals
-  }
-
-  private def predicateToQual(p: Predicate): Option[Qual] = {
-    def fieldOf(e: org.apache.spark.sql.connector.expressions.Expression): Option[String] =
-      e match {
-        // NamedReference/Literal are the public DSv2 faces (FieldReference/
-        // LiteralValue are private[sql])
-        case f: NamedReference if f.fieldNames.length == 1 => Some(f.fieldNames.head)
-        case _ => None
-      }
-    def valueOf(e: org.apache.spark.sql.connector.expressions.Expression): Option[Any] =
-      e match {
-        case l: Literal[_] => normLiteral(l)
-        case _ => None
-      }
-    val ch = p.children()
-    p.name() match {
-      case "IN" if ch.length >= 2 =>
-        val vs = ch.tail.toSeq.map(valueOf)
-        for (f <- fieldOf(ch.head); if vs.forall(_.isDefined))
-          yield Qual(f, "in", vs.flatten)
-      case "=" if ch.length == 2 =>
-        for (f <- fieldOf(ch(0)); v <- valueOf(ch(1))) yield Qual(f, "=", v)
-      case _ => None
-    }
-  }
-
-  /** LiteralValue carries Catalyst-internal values; normalize to the same
-    * external forms as GraftScanBuilder.norm. */
-  private def normLiteral(l: Literal[_]): Option[Any] = {
-    import org.apache.spark.sql.types._
-    l.dataType match {
-      case LongType => Some(l.value.asInstanceOf[Long])
-      case IntegerType => Some(l.value.asInstanceOf[Int].toLong)
-      case ShortType => Some(l.value.asInstanceOf[Short].toLong)
-      case StringType => Some(l.value.toString)
-      case BooleanType => Some(l.value.asInstanceOf[Boolean])
-      case DoubleType => Some(l.value.asInstanceOf[Double])
-      case FloatType => Some(l.value.asInstanceOf[Float].toDouble)
-      case TimestampType | TimestampNTZType => Some(l.value.asInstanceOf[Long])
-      case DateType => Some(l.value.asInstanceOf[Int].toLong)
-      case _ => None
-    }
   }
 
   /** Compile-time context + runtime quals. The source-side limit is kept

@@ -22,9 +22,9 @@ object SeriesTable extends ApiTable {
     StructField("value", DoubleType, nullable = false),
     StructField("tag", StringType, nullable = false)))
 
-  override def keyColumns: Seq[KeyColumn] = Seq(
-    KeyColumn("series_id", required = true, operators = Seq("=")),
-    KeyColumn("t", required = false, operators = Seq("=", ">", ">=", "<", "<=")))
+  private val tKey = KeyColumn("t", required = false, operators = KeyColumn.comparisons)
+  override def keyColumns: Seq[KeyColumn] =
+    Seq(KeyColumn("series_id", required = true, operators = Seq("=")), tKey)
 
   final case class SeriesSplit(sid: Long, start: Long, end: Long) extends ApiSplit
 
@@ -32,7 +32,7 @@ object SeriesTable extends ApiTable {
     * `=` — splits() ignores series_id ranges, so claiming them exact would
     * make Spark drop a residual re-check the plugin never performs. */
   override def exactlyHandled(q: Qual): Boolean = q.value.isInstanceOf[Long] && (
-    (q.field == "t" && Seq("=", ">", ">=", "<", "<=").contains(q.op)) ||
+    (q.field == "t" && tKey.operators.contains(q.op)) ||
       (q.field == "series_id" && q.op == "="))
 
   override def estimatedRows(qc: QueryContext, config: PluginConfig): Option[Long] =
@@ -41,21 +41,8 @@ object SeriesTable extends ApiTable {
   override def splits(qc: QueryContext, config: PluginConfig): Seq[ApiSplit] = {
     val sid = qc.quals.collectFirst { case Qual("series_id", "=", v: Long) => v }
       .getOrElse(return Nil)
-    var lo = 0L
-    var hi = config.n
-    qc.quals.filter(_.field == "t").foreach { q =>
-      val v = q.value.asInstanceOf[Long]
-      q.op match {
-        case "=" => lo = math.max(lo, v); hi = math.min(hi, v + 1)
-        case ">" => lo = math.max(lo, v + 1)
-        case ">=" => lo = math.max(lo, v)
-        case "<" => hi = math.min(hi, v)
-        case "<=" => hi = math.min(hi, v + 1)
-        case _ =>
-      }
-    }
-    (lo until hi by config.pageSize)
-      .map(s => SeriesSplit(sid, s, math.min(s + config.pageSize, hi)))
+    KeyRange.all(config.n).narrow(qc.quals, tKey)
+      .splits(config.pageSize)(SeriesSplit(sid, _, _))
   }
 
   override def scan(split: ApiSplit, qc: QueryContext, config: PluginConfig): Iterator[Array[Any]] = {

@@ -70,9 +70,9 @@ object NumbersTable extends ApiTable {
     StructField("cidr", StringType, nullable = false),    // CIDR
     StructField("path", StringType, nullable = false)))   // LTREE
 
-  override def keyColumns: Seq[KeyColumn] = Seq(
-    KeyColumn("id", required = false, operators = Seq("=", ">", ">=", "<", "<=", "in")),
-    KeyColumn("ts", required = false, operators = Seq("=", ">", ">=", "<", "<=")))
+  private val idKey = KeyColumn("id", required = false, operators = KeyColumn.comparisons :+ "in")
+  private val tsKey = KeyColumn("ts", required = false, operators = KeyColumn.comparisons)
+  override def keyColumns: Seq[KeyColumn] = Seq(idKey, tsKey)
 
   /** id and ts quals are enforced exactly by key narrowing in splits():
     * range quals shrink [lo, hi), IN lists become one probe split per value
@@ -80,7 +80,7 @@ object NumbersTable extends ApiTable {
     * ts quals convert to id bounds through the exact minute-grid inverse. */
   override def exactlyHandled(q: Qual): Boolean = q.field match {
     case "id" =>
-      (Seq("=", ">", ">=", "<", "<=").contains(q.op) && q.value.isInstanceOf[Long]) ||
+      (KeyColumn.comparisons.contains(q.op) && q.value.isInstanceOf[Long]) ||
         (q.op == "in" && (q.value match {
           case vs: Seq[_] => vs.forall(_.isInstanceOf[Long])
           case _ => false
@@ -116,80 +116,52 @@ object NumbersTable extends ApiTable {
     }
   }
 
-  /** Intersection of all pushed prefix quals' range sets (None = no
-    * prefix qual pushed). */
-  private def prefixNarrowed(qc: QueryContext, config: PluginConfig): Option[Seq[(Long, Long)]] = {
-    val ps = qc.quals.collect { case Qual("s", "starts_with", p: String) => p }
-    if (ps.isEmpty) None
-    else Some(ps.map(p => prefixRanges(p, config.n)).reduce { (a, b) =>
-      for {
-        (al, ah) <- a; (bl, bh) <- b
-        l = math.max(al, bl); h = math.min(ah, bh); if l < h
-      } yield (l, h)
-    })
-  }
-
-  private def ceilDiv(a: Long, b: Long): Long = Math.floorDiv(a + b - 1, b)
   private val tickUs = 60000000L // one row per minute
 
-  override def estimatedRows(qc: QueryContext, config: PluginConfig): Option[Long] = {
-    val (lo, hi, inIds) = narrowed(qc, config)
-    val pr = prefixNarrowed(qc, config)
-    Some(inIds
-      .map(_.count(v => v >= lo && v < hi &&
-        pr.forall(_.exists(r => v >= r._1 && v < r._2))).toLong)
-      .getOrElse(pr match {
-        case Some(rs) => rs.map { case (l, h) =>
-          math.max(0L, math.min(h, hi) - math.max(l, lo))
-        }.sum
-        case None => math.max(0L, hi - lo)
-      }))
+  /** ts sits on an exact minute grid (ts = baseTs + id * tickUs, baseTs
+    * itself on the grid), so a timestamp inverts to an id without rounding
+    * error — and without the overflow of subtracting baseTs first. */
+  private val minuteGrid: KeyRange.Inverse = {
+    case v: Long =>
+      Some((Math.floorDiv(v, tickUs) - baseTs / tickUs, Math.floorMod(v, tickUs) == 0))
+    case _ => None
   }
 
-  /** Narrow the key range with the pushed id AND ts quals (the reference's
-    * xBestIndex cost model made key-column quals cheap for the same
-    * reason: they shrink what the plugin must fetch), then page it — or
-    * emit one probe split per IN value. */
+  /** The key space after the pushed id, ts and LIKE-prefix quals (the
+    * reference's xBestIndex cost model made key-column quals cheap for the
+    * same reason: they shrink what the plugin must fetch). */
+  private def narrowed(qc: QueryContext, config: PluginConfig): KeyRange =
+    qc.quals.collect { case Qual("s", "starts_with", p: String) => prefixRanges(p, config.n) }
+      .foldLeft(KeyRange.all(config.n).narrow(qc.quals, idKey)
+        .narrow(qc.quals, tsKey, minuteGrid))(_ within _)
+
+  override def estimatedRows(qc: QueryContext, config: PluginConfig): Option[Long] =
+    Some(narrowed(qc, config).rows)
+
+  /** Page the narrowed key space, or emit one probe split per IN value —
+    * the probes respect any pushed LIKE prefix too: exactlyHandled drops
+    * Spark's residual LIKE, so `id IN (...) AND s LIKE 'row_p%'` must not
+    * leak non-matches. */
   override def splits(qc: QueryContext, config: PluginConfig): Seq[ApiSplit] = {
-    val (lo, hi, inIds) = narrowed(qc, config)
+    val kr = narrowed(qc, config)
     if (qc.orderBy.nonEmpty) {
       // accepted ordered page (supportsOrderedPage): both sortable columns
       // (id, ts) are monotone in the key, so ORDER BY + OFFSET + LIMIT is
-      // a closed-form key slice — ONE split, already in order
+      // a closed-form key slice — ONE split, already in order. With no IN
+      // or prefix qual the key space is one range, or none.
       val desc = qc.orderBy.head.descending
-      val (lo2, hi2) =
-        if (desc) {
-          val h = hi - qc.offset
-          (qc.limit.fold(lo)(l => math.max(lo, h - l)), math.max(lo, h))
-        } else {
-          val l2 = lo + qc.offset
-          (math.min(l2, hi), qc.limit.fold(hi)(l => math.min(hi, l2 + l)))
-        }
-      if (lo2 >= hi2) Seq.empty else Seq(RangeSplit(lo2, hi2, desc))
-    } else inIds match {
-      case Some(ids) =>
-        // exactlyHandled drops Spark's residual LIKE, so the IN probes must
-        // also respect any pushed starts_with prefix ranges — without this
-        // intersection `id IN (...) AND s LIKE 'row_p%'` leaks non-matches
-        val pr = prefixNarrowed(qc, config)
-        ids.filter(v => v >= lo && v < hi &&
-            pr.forall(_.exists(r => v >= r._1 && v < r._2)))
-          .distinct.sorted
-          .map(v => RangeSplit(v, v + 1))
-      case None => prefixNarrowed(qc, config) match {
-        case Some(ranges) =>
-          // one page-bounded split per (prefix range ∩ key bounds)
-          ranges.flatMap { case (l0, h0) =>
-            val l = math.max(l0, lo)
-            val h = math.min(h0, hi)
-            (l until h by config.pageSize)
-              .map(s => RangeSplit(s, math.min(s + config.pageSize, h)))
+      kr.ranges.headOption.toSeq.flatMap { case (lo, hi) =>
+        val (lo2, hi2) =
+          if (desc) {
+            val h = hi - qc.offset
+            (qc.limit.fold(lo)(l => math.max(lo, h - l)), math.max(lo, h))
+          } else {
+            val l2 = lo + qc.offset
+            (math.min(l2, hi), qc.limit.fold(hi)(l => math.min(hi, l2 + l)))
           }
-        case None =>
-          (lo until hi by config.pageSize)
-            .map(s => RangeSplit(s, math.min(s + config.pageSize, hi)))
+        if (lo2 >= hi2) Seq.empty else Seq(RangeSplit(lo2, hi2, desc))
       }
-    }
+    } else kr.splits(config.pageSize)(RangeSplit(_, _))
   }
 
   /** ORDER BY id|ts [DESC] LIMIT/OFFSET is answerable in closed form: both
@@ -201,49 +173,6 @@ object NumbersTable extends ApiTable {
     qc.orderBy.length == 1 && Seq("id", "ts").contains(qc.orderBy.head.field) &&
       qc.quals.forall(exactlyHandled) &&
       !qc.quals.exists(q => q.op == "in" || q.op == "starts_with")
-
-  private def narrowed(qc: QueryContext, config: PluginConfig): (Long, Long, Option[Seq[Long]]) = {
-    var lo = 0L
-    var hi = config.n // exclusive
-    var inIds: Option[Seq[Long]] = None
-    qc.quals.filter(_.field == "id").foreach { q =>
-      (q.op, q.value) match {
-        case ("in", vs: Seq[_]) =>
-          val longs = vs.collect { case l: Long => l }
-          inIds = Some(inIds.map(_.intersect(longs)).getOrElse(longs))
-        case (op, v: Long) => op match {
-          case "=" => lo = math.max(lo, v); hi = math.min(hi, v + 1)
-          case ">" => lo = math.max(lo, v + 1)
-          case ">=" => lo = math.max(lo, v)
-          case "<" => hi = math.min(hi, v)
-          case "<=" => hi = math.min(hi, v + 1)
-          case _ =>
-        }
-        case _ =>
-      }
-    }
-    // ts sits on an exact minute grid (ts = baseTs + id * tickUs), so
-    // timestamp ranges invert to id ranges without rounding error
-    qc.quals.filter(_.field == "ts").foreach { q =>
-      q.value match {
-        case v: Long =>
-          val delta = v - baseTs
-          q.op match {
-            case ">=" => lo = math.max(lo, ceilDiv(delta, tickUs))
-            case ">" => lo = math.max(lo, Math.floorDiv(delta, tickUs) + 1)
-            case "<" => hi = math.min(hi, ceilDiv(delta, tickUs))
-            case "<=" => hi = math.min(hi, Math.floorDiv(delta, tickUs) + 1)
-            case "=" =>
-              if (delta >= 0 && delta % tickUs == 0) {
-                lo = math.max(lo, delta / tickUs); hi = math.min(hi, delta / tickUs + 1)
-              } else hi = lo // off-grid equality matches nothing
-            case _ =>
-          }
-        case _ =>
-      }
-    }
-    (lo, hi, inIds)
-  }
 
   override def latestKey(config: PluginConfig): Option[Long] = Some(config.n)
 
@@ -324,15 +253,12 @@ object KvTable extends ApiTable {
 
   final case class KeySplit(k: Long) extends ApiSplit
 
-  /** `k = v` and `k IN (...)` both satisfy the required key: IN expands to
-    * one GET split per value, the API analog of SQLite's `=`-probe
-    * decomposition (reference table.go:127-151). */
+  /** `k = v` and `k IN (...)` both satisfy the required key: the keys
+    * they name (intersected, when several are pushed) become one GET split
+    * each, the API analog of SQLite's `=`-probe decomposition (reference
+    * table.go:127-151). */
   override def splits(qc: QueryContext, config: PluginConfig): Seq[ApiSplit] =
-    qc.quals.flatMap {
-      case Qual("k", "=", v: Long) => Seq(v)
-      case Qual("k", "in", vs: Seq[_]) => vs.collect { case l: Long => l }
-      case _ => Nil
-    }.distinct.sorted.map(KeySplit)
+    KeyRange.probeKeys(qc.quals, keyColumns.head).getOrElse(Nil).map(KeySplit)
 
   override def scan(split: ApiSplit, qc: QueryContext, config: PluginConfig): Iterator[Array[Any]] = {
     val KeySplit(k) = split: @unchecked

@@ -12,7 +12,7 @@ import org.apache.spark.sql.types.StructType
   *   QueryContext{columns,quals,limit}  QueryContext (table.go:28-33)
   *   Qual{field,operator,value}         Qual         (table.go:40-46)
   *   plugin.TableSchema key columns     KeyColumn    (table.go:180-215)
-  *   xBestIndex range costing           ApiTable.splits qual narrowing
+  *   xBestIndex range costing           KeyRange narrowing in ApiTable.splits
   *   LocalPluginStream row cursor       ApiTable.scan iterator (cursor.go)
   *   STEAMPIPE_CACHE / _CACHE_TTL       spark.graft.cache.enabled/.ttl (cache.go)
   *   steampipe_configure_<plugin>()     GraftConfigure.configure (configure_fn.go)
@@ -50,6 +50,102 @@ final case class KeyColumn(
     required: Boolean,
     operators: Seq[String] = Seq("=")) extends Serializable
 
+object KeyColumn {
+  /** The comparison operators a key range answers. */
+  val comparisons: Seq[String] = Seq("=", ">", ">=", "<", "<=")
+}
+
+/** The row keys a key-range table must read once its pushed key-column
+  * quals are applied: a union of disjoint [lo, hi) ranges and, when an `=`
+  * or IN qual was pushed, the probe keys among them (SQLite decomposes IN
+  * into repeated `=` probes the same way, reference table.go:127-151).
+  * numbers, wide, series and every declared table narrow their key space
+  * with `narrow` and split it with `splits`; kv takes its GET keys from
+  * `KeyRange.probeKeys`. */
+final case class KeyRange(ranges: Seq[(Long, Long)], in: Option[Seq[Long]] = None) {
+  import KeyRange._
+
+  /** This key space narrowed by the quals on `key` whose operator the key
+    * column declares. A qual value that `inverse` cannot map narrows
+    * nothing; Spark re-checks such a qual unless the table claims it. */
+  def narrow(quals: Seq[Qual], key: KeyColumn, inverse: Inverse = exactLong): KeyRange = {
+    var lo = Long.MinValue
+    var hi = Long.MaxValue // exclusive: Long.MaxValue itself is never a row key
+    quals.filter(q => q.field == key.name && key.operators.contains(q.op)).foreach { q =>
+      inverse(q.value).foreach { case (k, onKey) =>
+        // the first key whose value is >= the qual value, and the first
+        // whose value is > it; both saturate at Long.MaxValue, which an
+        // exclusive bound may hold but no key can
+        val atLeast = if (onKey) k else next(k)
+        val above = next(k)
+        q.op match {
+          case "=" => lo = math.max(lo, atLeast); hi = math.min(hi, above)
+          case ">=" => lo = math.max(lo, atLeast)
+          case ">" => lo = math.max(lo, above)
+          case "<" => hi = math.min(hi, atLeast)
+          case "<=" => hi = math.min(hi, above)
+          case _ =>
+        }
+      }
+    }
+    KeyRange(ranges, (in ++ probeKeys(quals, key, inverse)).reduceOption(_ intersect _))
+      .within(Seq((lo, hi)))
+  }
+
+  /** Every range cut down to its overlap with the union `rs` (e.g. the key
+    * ranges a LIKE prefix inverts to). */
+  def within(rs: Seq[(Long, Long)]): KeyRange = copy(ranges = for {
+    (al, ah) <- ranges; (bl, bh) <- rs
+    l = math.max(al, bl); h = math.min(ah, bh) if l < h
+  } yield (l, h))
+
+  /** The probe keys that fall in the ranges, ascending. */
+  private def probes: Option[Seq[Long]] =
+    in.map(_.filter(k => ranges.exists { case (l, h) => k >= l && k < h }))
+
+  def rows: Long = probes.fold(ranges.map { case (l, h) => h - l }.sum)(_.length.toLong)
+
+  /** One split per probe key, or else one per `pageSize` keys of each range. */
+  def splits(pageSize: Long)(split: (Long, Long) => ApiSplit): Seq[ApiSplit] = probes match {
+    case Some(ks) => ks.map(k => split(k, k + 1))
+    case None => for ((l, h) <- ranges; s <- l until h by pageSize)
+      yield split(s, math.min(s + pageSize, h))
+  }
+}
+
+object KeyRange {
+  /** Maps a qual value to (k, onKey): the greatest row key whose column
+    * value is at most the qual value, and whether the two are equal. None
+    * when the value is of a type the key column cannot hold. */
+  type Inverse = Any => Option[(Long, Boolean)]
+
+  /** The inverse of a column that holds the row key itself. */
+  val exactLong: Inverse = {
+    case l: Long => Some((l, true))
+    case _ => None
+  }
+
+  /** Every key in [0, n). */
+  def all(n: Long): KeyRange = KeyRange(Seq((0L, n)))
+
+  /** The keys named by the `=` and IN quals on `key`, intersected,
+    * distinct and ascending; None when neither was pushed. An IN qual
+    * with a value `inverse` cannot map narrows nothing. */
+  def probeKeys(quals: Seq[Qual], key: KeyColumn, inverse: Inverse = exactLong): Option[Seq[Long]] =
+    quals.filter(q => q.field == key.name && key.operators.contains(q.op)).flatMap {
+      case Qual(_, "=", v) => onKeys(Seq(v), inverse)
+      case Qual(_, "in", vs: Seq[_]) => onKeys(vs, inverse)
+      case _ => None
+    }.reduceOption(_ intersect _).map(_.distinct.sorted)
+
+  private def onKeys(vs: Seq[Any], inverse: Inverse): Option[Seq[Long]] = {
+    val ks = vs.map(inverse)
+    if (ks.forall(_.isDefined)) Some(ks.flatten.collect { case (k, true) => k }) else None
+  }
+
+  private def next(k: Long): Long = if (k == Long.MaxValue) k else k + 1
+}
+
 /** One API page range of a scan: the unit of plugin call (`scan` or
   * `aggregateSplit`), of transient-error retry, of QueryCache key and of
   * ScanLedger count. It is not the unit of Spark scheduling: a Spark task
@@ -69,7 +165,10 @@ trait ApiTable extends Serializable {
   def keyColumns: Seq[KeyColumn] = Nil
 
   /** Plan the scan: split the (qual-narrowed) key space. Called on the
-    * driver; the reference's xBestIndex + pagination planning analog. */
+    * driver; the reference's xBestIndex + pagination planning analog. A
+    * table over a key range narrows and pages it with `KeyRange`, the one
+    * qual → key-range mapping, so its `=`/`<`/`>` bounds, IN probes and
+    * page splits are the same for every plugin. */
   def splits(qc: QueryContext, config: PluginConfig): Seq[ApiSplit]
 
   /** Execute one split on an executor, yielding rows as Catalyst-internal

@@ -36,9 +36,22 @@ object SparkSpec {
     p.toString
   }
 
-  /** The standard graft session at local[8], wired before any spec runs. */
-  lazy val session: SparkSession = GraftSession("8",
-    "spark.app.name" -> "graft-spec",
-    "spark.sql.debug.maxToStringFields" -> "100",
-    "spark.sql.maxMetadataStringLength" -> "1000")
+  /** The standard graft session at local[8], wired before any spec runs.
+    * The suite run has no last-suite hook inside the forked test JVM, so
+    * the session is stopped by a shutdown hook of its own that runs ahead
+    * of Spark's: Hadoop gives Spark's hook 30 s, and a stop that outlasts
+    * them is interrupted while it deletes the block manager's dir under
+    * SPARK_LOCAL_DIRS, which is then left behind. */
+  lazy val session: SparkSession = {
+    val s = GraftSession("8",
+      "spark.app.name" -> "graft-spec",
+      "spark.sql.debug.maxToStringFields" -> "100",
+      "spark.sql.maxMetadataStringLength" -> "1000")
+    org.apache.hadoop.util.ShutdownHookManager.get().addShutdownHook(() => s.stop(),
+      sparkHookPriority + 1, 5, java.util.concurrent.TimeUnit.MINUTES)
+    s
+  }
+
+  /** Spark's own shutdown hook runs at FileSystem's priority + 30. */
+  private val sparkHookPriority = org.apache.hadoop.fs.FileSystem.SHUTDOWN_HOOK_PRIORITY + 30
 }

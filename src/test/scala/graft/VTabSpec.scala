@@ -163,6 +163,94 @@ class VTabSpec extends SparkSpec {
     }
   }
 
+  /** The Quals the optimized plan's connector scan was built with. */
+  private def pushedQuals(df: DataFrame): Seq[Qual] = {
+    import org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation
+    df.queryExecution.optimizedPlan.collectFirst {
+      case r: DataSourceV2ScanRelation => r.scan.asInstanceOf[GraftScan].qc.quals
+    }.get
+  }
+
+  test("predicates become the same Quals for every operator and column type") {
+    val days = spark.read.format("graft").option("plugin", "rest").option("table", "days").load()
+    val ts5 = 1704085200000000L // 2024-01-01T05:00 as epoch micros
+    val feb1 = java.time.LocalDate.parse("2024-02-01").toEpochDay
+    val inSet = (1L to 12L).map(lit) // > 10 values: Catalyst's InSet form
+    val cases: Seq[(DataFrame, String, Seq[Qual])] = Seq(
+      (numbers, "id = 5", Seq(Qual("id", "=", 5L))),
+      (numbers, "id > 5", Seq(Qual("id", ">", 5L))),
+      (numbers, "id >= 5", Seq(Qual("id", ">=", 5L))),
+      (numbers, "id < 5", Seq(Qual("id", "<", 5L))),
+      (numbers, "id <= 5", Seq(Qual("id", "<=", 5L))),
+      (numbers, "5 < id", Seq(Qual("id", ">", 5L))),
+      (numbers, "5 >= id", Seq(Qual("id", "<=", 5L))),
+      (numbers, "id >= 2 AND id < 9", Seq(Qual("id", ">=", 2L), Qual("id", "<", 9L))),
+      (numbers, "id IN (7, 3, 5)", Seq(Qual("id", "in", Seq(7L, 3L, 5L)))),
+      (numbers, "ts = TIMESTAMP_NTZ'2024-01-01 05:00:00'", Seq(Qual("ts", "=", ts5))),
+      (numbers, "ts > TIMESTAMP_NTZ'2024-01-01 05:00:00'", Seq(Qual("ts", ">", ts5))),
+      (numbers, "ts >= TIMESTAMP_NTZ'2024-01-01 05:00:00'", Seq(Qual("ts", ">=", ts5))),
+      (numbers, "ts < TIMESTAMP_NTZ'2024-01-01 05:00:00'", Seq(Qual("ts", "<", ts5))),
+      (numbers, "ts <= TIMESTAMP_NTZ'2024-01-01 05:00:00'", Seq(Qual("ts", "<=", ts5))),
+      (numbers, "ts IN (TIMESTAMP_NTZ'2024-01-01 05:00:00')", Seq(Qual("ts", "=", ts5))),
+      (days, "day = DATE'2024-02-01'", Seq(Qual("day", "=", feb1))),
+      (days, "day > DATE'2024-02-01'", Seq(Qual("day", ">", feb1))),
+      (days, "day >= DATE'2024-02-01'", Seq(Qual("day", ">=", feb1))),
+      (days, "day < DATE'2024-02-01'", Seq(Qual("day", "<", feb1))),
+      (days, "day <= DATE'2024-02-01'", Seq(Qual("day", "<=", feb1))),
+      (days, "day IN (DATE'2024-02-01', DATE'2024-01-01')",
+        Seq(Qual("day", "in", Seq(feb1, feb1 - 31)))),
+      (numbers, "s = 'row_5'", Seq(Qual("s", "=", "row_5"))),
+      (numbers, "s > 'row_5'", Seq(Qual("s", ">", "row_5"))),
+      (numbers, "s >= 'row_5'", Seq(Qual("s", ">=", "row_5"))),
+      (numbers, "s < 'row_5'", Seq(Qual("s", "<", "row_5"))),
+      (numbers, "s <= 'row_5'", Seq(Qual("s", "<=", "row_5"))),
+      (numbers, "s IN ('row_5', 'row_7')", Seq(Qual("s", "in", Seq("row_5", "row_7")))),
+      (numbers, "s LIKE 'row%'", Seq(Qual("s", "starts_with", "row"))),
+      (numbers, "flag = true", Seq(Qual("flag", "=", true))),
+      (numbers, "flag", Seq(Qual("flag", "=", true))),
+      (numbers, "ratio = 0.5D", Seq(Qual("ratio", "=", 0.5))),
+      (numbers, "ratio > 0.5D", Seq(Qual("ratio", ">", 0.5))),
+      (numbers, "ratio >= 0.5D", Seq(Qual("ratio", ">=", 0.5))),
+      (numbers, "ratio < 0.5D", Seq(Qual("ratio", "<", 0.5))),
+      (numbers, "ratio <= 0.5D", Seq(Qual("ratio", "<=", 0.5))),
+      (numbers, "ratio IN (0.5D, 1.5D)", Seq(Qual("ratio", "in", Seq(0.5, 1.5)))),
+      // anything else stays with Spark
+      (numbers, "NOT flag", Nil),
+      (numbers, "s LIKE '%5'", Nil),
+      (numbers, "id + 1 = 5", Nil),
+      (numbers, "id <=> 5", Nil),
+      (numbers, "id = 5 OR id = 7", Nil))
+    val wrong = cases.flatMap { case (df, where, want) =>
+      val got = pushedQuals(df.filter(expr(where)))
+      if (got == want) None else Some(s"WHERE $where pushed $got, want $want")
+    }
+    assert(wrong.isEmpty, wrong.mkString("\n"))
+    // an IN list past the InSet threshold keeps every value
+    val got = pushedQuals(numbers.filter(col("id").isin(inSet: _*)))
+    assert(got.map(q => (q.field, q.op)) == Seq(("id", "in")) &&
+      got.head.value.asInstanceOf[Seq[Any]].toSet == (1L to 12L).toSet, s"got $got")
+  }
+
+  test("key bounds saturate at Long.MaxValue: no key lies beyond it, every key below it") {
+    val max = Long.MaxValue
+    def rows(table: String, where: String): Long =
+      spark.sql(s"SELECT * FROM graft.$table WHERE $where").collect().length.toLong
+    noCache {
+      val wrong = for {
+        (table, key, pre, all) <- Seq(
+          ("seq.numbers", "id", "", 10000L),
+          ("dyn.wide", "id", "", 10000L),
+          ("metrics.series", "t", "series_id = 1 AND ", 10000L),
+          ("rest.users", "id", "", 600L))
+        (op, want) <- Seq(">" -> 0L, ">=" -> 0L, "=" -> 0L, "<=" -> all, "<" -> all)
+        got = rows(table, s"$pre$key $op $max") if got != want
+      } yield s"$table WHERE $pre$key $op $max: $got rows, want $want"
+      assert(wrong.isEmpty, wrong.mkString("\n"))
+      // a GET table answers any key, the largest one too
+      assert(rows("seq.kv", s"k = $max") == 1L)
+    }
+  }
+
   test("runtime filtering: broadcast build side narrows splits at RUNTIME " +
       "(SupportsRuntimeV2Filtering, the DSv2 DPP analog)") {
     noCache {
@@ -172,7 +260,9 @@ class VTabSpec extends SparkSpec {
       val n = numbers.join(dim, col("id") === col("n_nationkey"))
         .select("id", "x").count()
       assert(n == 5)
-      assert(ScanLedger.lastRuntimeQuals.exists(q => q.field == "id" && q.op == "in"),
+      val keys = dim.collect().map(_.getAs[Number](0).longValue).toSet
+      assert(ScanLedger.lastRuntimeQuals.map(q => (q.field, q.op)) == Seq(("id", "in")) &&
+        ScanLedger.lastRuntimeQuals.head.value.asInstanceOf[Seq[Any]].toSet == keys,
         s"runtime IN qual must reach the scan, got ${ScanLedger.lastRuntimeQuals}")
       assert(ScanLedger.lastSplitCount == 5,
         s"5 build-side keys must become 5 probe splits, got ${ScanLedger.lastSplitCount}")
@@ -331,6 +421,9 @@ class VTabSpec extends SparkSpec {
         s"required key must reach the plugin, got ${qc.quals}")
       assert(qc.quals.count(_.field == "t") == 2,
         s"both t bounds must reach the plugin, got ${qc.quals}")
+      // IN is not a declared t operator: it narrows nothing, Spark applies it
+      assert(series.filter(col("series_id") === 5L && col("t").isin(3L, 5L, 7L))
+        .collect().map(_.getAs[Long]("t")).sorted.toSeq == Seq(3L, 5L, 7L))
     }
   }
 
