@@ -91,9 +91,6 @@ object Bench {
     }
     val results = timed.collect { case (n, sec, true) => n -> sec }
     val failed = timed.collect { case (n, _, false) => n }
-    def jsonMap(rs: Seq[(String, Double)]): String =
-      rs.map { case (k, v) => "\"" + k + f"""":$v%.3f""" }.mkString("{", ",", "}")
-    def jsonList(ns: Seq[String]): String = ns.map("\"" + _ + "\"").mkString("[", ",", "]")
     val total = results.map(_._2).sum
 
     // Full per-query timings to a file named per core count, so a run at
@@ -104,7 +101,8 @@ object Bench {
     val telemetryJson = telemetryRows.result()
       .map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
     val envFp = s"""{"cpus":$cpus,"heap_max_mb":${Runtime.getRuntime.maxMemory() >> 20},"host_procs":${Runtime.getRuntime.availableProcessors()}}"""
-    val detail = f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":${jsonMap(results)},"failed":${jsonList(failed)},"sf":"$sfDir","env":$envFp,"telemetry":$telemetryJson}"""
+    val detail = record(total, results, failed, Verify.q(sfDir),
+      s""","env":$envFp,"telemetry":$telemetryJson""")
     java.nio.file.Files.write(java.nio.file.Paths.get(
       sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", s"bench_detail_c$cpus.json")),
       (detail + "\n").getBytes("UTF-8"))
@@ -137,30 +135,39 @@ object Bench {
       "dq_anomaly", "dq_freshness", "er_blocked_match", "er_survivor",
       "st_anomaly",
       "vt_scan", "vt_runtime_filter", "vt_retry")
-    val qs = jsonMap(results.filter(r => headline(r._1)))
-    // "sf" as a NUMBER when the dir name encodes one (sf0.1 → 0.1): a
-    // downstream json.loads-per-line parse may type-check the field. The
-    // strict numeric pattern (no trailing dot, no bare "sf01." shapes)
-    // and the escaped string fallback keep the line valid JSON for ANY
-    // dir name — an invalid line would reintroduce parsed=null.
-    val sfJson = "sf((?:0|[1-9][0-9]*)(?:\\.[0-9]+)?)$".r
-      .findFirstMatchIn(sfDir.stripSuffix("/"))
-      .map(_.group(1))
-      .getOrElse("\"" + sfDir.replace("\\", "\\\\").replace("\"", "\\\"") + "\"")
-    val line = f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":$qs,"failed":${jsonList(failed)},"sf":$sfJson}"""
-    // Emit the compact line BEFORE teardown and again LAST after
-    // spark.stop(): the duplicate guards both failure modes — shutdown
+    val line = record(total, results.filter(r => headline(r._1)), failed, sfJson(sfDir))
+    // Emit the compact line BEFORE teardown and again LAST after the
+    // session stops: the duplicate guards both failure modes — shutdown
     // noise after the first copy, and a tail-capture window that ends
     // before teardown finishes. (With run/outputStrategy=StdoutOutput the
     // lines reach stdout unprefixed; sbt's "[info] " wrapper was why
     // BENCH_r01..r08 all recorded parsed=null.)
     println(line)
     System.out.flush()
-    operators.OpCache.release(spark) // feature-store lifecycle: free every pinned table
-    spark.stop()
+    GraftSession.stop(spark)
     println(line)
     System.out.flush()
   }
+
+  /** One bench record: the total, per-entry seconds, the failed names,
+    * `sf` (already JSON) and `extra` fields (`,"k":v...`). Entry names
+    * are plain identifiers, so they need no escaping. */
+  private[graft] def record(total: Double, results: Seq[(String, Double)],
+      failed: Seq[String], sf: String, extra: String = ""): String = {
+    val qs = results.map { case (k, v) => "\"" + k + f"""":$v%.3f""" }.mkString("{", ",", "}")
+    val fs = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
+    f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":$qs,"failed":$fs,"sf":$sf$extra}"""
+  }
+
+  /** The stdout line's "sf": a NUMBER when the dir name encodes one
+    * (sf0.1 → 0.1), as a downstream json.loads-per-line parse may
+    * type-check the field; any other dir name is a JSON string. The strict
+    * numeric pattern admits no trailing dot and no bare "sf01." shapes. */
+  private[graft] def sfJson(sfDir: String): String =
+    "sf((?:0|[1-9][0-9]*)(?:\\.[0-9]+)?)$".r
+      .findFirstMatchIn(sfDir.stripSuffix("/"))
+      .map(_.group(1))
+      .getOrElse(Verify.q(sfDir))
 
   /** JVM/codegen/IO warm-up (not timed), shared by Bench and BenchScale:
     * touch every table so page cache and file listings are hot, then run

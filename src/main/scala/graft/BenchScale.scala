@@ -70,6 +70,17 @@ object BenchScale {
       else (name, Some(sorted.head), Some(sorted(sorted.length / 2)),
         Some(times.head))
     }
+    val line = record(results, iters, sfDir)
+    java.nio.file.Files.write(java.nio.file.Paths.get(outFile),
+      (line + "\n").getBytes("UTF-8"))
+    println(line)
+    GraftSession.stop(spark)
+  }
+
+  /** The one-line record: per entry (name, min, median, first) seconds,
+    * None where every iteration failed. */
+  private[graft] def record(results: Seq[(String, Option[Double], Option[Double], Option[Double])],
+      iters: Int, sfDir: String): String = {
     def jnum(v: Option[Double]): String = v.fold("null")(x => f"$x%.3f")
     def jmap(f: ((String, Option[Double], Option[Double], Option[Double])) => Option[Double]): String =
       results.map { r => "\"" + r._1 + "\":" + jnum(f(r)) }.mkString("{", ",", "}")
@@ -77,12 +88,6 @@ object BenchScale {
     val minTotal = results.flatMap(_._2).sum
     val medTotal = results.flatMap(_._3).sum
     val failedJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
-    val line =
-      f"""{"metric":"min_total","value":$minTotal%.3f,"median_total":$medTotal%.3f,"unit":"sec","iters":$iters,"n_queries":${results.size},"failed":$failedJson,"queries_min":${jmap(_._2)},"queries_median":${jmap(_._3)},"queries_first":${jmap(_._4)},"sf":"$sfDir"}"""
-    java.nio.file.Files.write(java.nio.file.Paths.get(outFile),
-      (line + "\n").getBytes("UTF-8"))
-    println(line)
-    operators.OpCache.release(spark)
-    spark.stop()
+    f"""{"metric":"min_total","value":$minTotal%.3f,"median_total":$medTotal%.3f,"unit":"sec","iters":$iters,"n_queries":${results.size},"failed":$failedJson,"queries_min":${jmap(_._2)},"queries_median":${jmap(_._3)},"queries_first":${jmap(_._4)},"sf":${Verify.q(sfDir)}}"""
   }
 }

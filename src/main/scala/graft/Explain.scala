@@ -30,6 +30,6 @@ object Explain {
       }
       catch { case e: Throwable => println(s"explain failed: ${e.getMessage}") }
     }
-    spark.stop()
+    GraftSession.stop(spark)
   }
 }

@@ -49,7 +49,7 @@ object GenScale {
     val spark = GraftSession("spark.sql.parquet.outputTimestampType" -> "TIMESTAMP_MICROS")
     run(spark, args(0), args(1), args.lift(2).map(_.toInt).getOrElse(10),
       args.lift(3).map(_.split(',').toSet).getOrElse(Set.empty))
-    spark.stop()
+    GraftSession.stop(spark)
   }
 
   /** Per-replica elementwise sign pattern for embeddings: identity while

@@ -26,7 +26,8 @@ object Graft {
 
 /** The one way to build a graft session: the standard confs, log level
   * WARN, then `Graft.init`. Every main and the test session build here;
-  * a caller's own differences go in `extra`, which wins over `confs`. */
+  * a caller's own differences go in `extra`, which wins over `confs`.
+  * `stop` is the one way a main ends its session. */
 object GraftSession {
   /** Local cores: SPARK_GRAFT_CPUS, else min(32, nproc). */
   def cores: String = sys.env.getOrElse("SPARK_GRAFT_CPUS",
@@ -49,5 +50,11 @@ object GraftSession {
     val s = b.getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     Graft.init(s)
+  }
+
+  /** Free every stage and pin OpCache holds for `s`, then stop it. */
+  def stop(s: SparkSession): Unit = {
+    operators.OpCache.release(s)
+    s.stop()
   }
 }

@@ -40,8 +40,7 @@ object PlanAudit {
     java.nio.file.Files.write(java.nio.file.Paths.get(outFile),
       sb.toString.getBytes("UTF-8"))
     println(s"[plan-audit] wrote $outFile; $failures contract failures")
-    operators.OpCache.release(spark)
-    spark.stop()
+    GraftSession.stop(spark)
     if (failures > 0) sys.exit(1)
   }
 }

@@ -16,7 +16,6 @@ object PlanDump {
       println("==== FULL ====")
       println(p.full)
     }
-    operators.OpCache.release(spark)
-    spark.stop()
+    GraftSession.stop(spark)
   }
 }

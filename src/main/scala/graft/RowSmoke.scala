@@ -67,8 +67,7 @@ object RowSmoke {
     java.nio.file.Files.write(java.nio.file.Paths.get(outFile),
       (line + "\n").getBytes("UTF-8"))
     println(s"[row-smoke] ${counts.size} entries, unexpected-empty: $emptyBad, errored: $errored")
-    operators.OpCache.release(spark)
-    spark.stop()
+    GraftSession.stop(spark)
     if (emptyBad.nonEmpty || errored.nonEmpty) sys.exit(1)
   }
 }

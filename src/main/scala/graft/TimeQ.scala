@@ -31,7 +31,6 @@ object TimeQ {
       // and A/B numbers stay comparable with earlier rounds').
       operators.OpCache.releaseScoped(spark)
     }
-    operators.OpCache.release(spark)
-    spark.stop()
+    GraftSession.stop(spark)
   }
 }

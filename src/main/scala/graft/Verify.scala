@@ -68,7 +68,6 @@ object Verify {
     }
     Files.writeString(Paths.get(s"$outDir/_failed.json"),
       failed.map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}"))
-    operators.OpCache.release(spark) // feature-store lifecycle: free every pinned table
-    spark.stop()
+    GraftSession.stop(spark)
   }
 }

@@ -56,12 +56,10 @@ object Components {
   /** `pairs`: undirected edges as two id columns. Returns (id, label)
     * with label = the component's minimum member id — the convergence
     * fixed point is partitioning-independent, so results are exact.
-    * `scopedRelease`: the final snapshot RDD is entry-scoped by default
-    * (each consuming entry runs its own propagation); memoized callers
-    * (the shared phash/minhash label tables) pass false so the snapshot
-    * lives with the memo until OpCache.release. */
-  def minLabel(s: SparkSession, pairs: DataFrame,
-      scopedRelease: Boolean = true): DataFrame = {
+    * The final snapshot RDD stays pinned under OpCache's lifetime rule:
+    * entry-scoped when an entry calls this directly, memo-owned when a
+    * memo build does (the shared phash/minhash label tables). */
+  def minLabel(s: SparkSession, pairs: DataFrame): DataFrame = {
     val p2 = pairs.toDF("ia", "ib")
     val edges = p2.union(p2.select(col("ib"), col("ia")))
       .toDF("src", "dst").persist()
@@ -119,13 +117,9 @@ object Components {
         labels = next
         iter += 1
       }
-      // the final snapshot stays pinned for the caller's downstream plan;
-      // it is ENTRY-SCOPED (each consuming entry runs its own minLabel),
-      // so OpCache.releaseScoped frees it once the entry's action is done
-      // (release() remains the end-of-lifecycle backstop)
+      // the final snapshot stays pinned for the caller's downstream plan
       val finalRdd = liveRdd
-      if (scopedRelease) OpCache.trackHookScoped(s, () => finalRdd.unpersist(false))
-      else OpCache.trackHook(s, () => finalRdd.unpersist(false))
+      OpCache.onRelease(s)(finalRdd.unpersist(false))
       labels
     } finally edges.unpersist()
   }

@@ -150,7 +150,10 @@ object Curation2 {
     // Catalyst analysis + re-execution of those copies dominated the data
     // cost at every scale (sf1 ≈ sf10 wall time). Each snapshot is
     // vocabulary-sized (syms) or ≤ bpeBatch rows (kept); materialize the
-    // successor FIRST, then release the predecessor it reads.
+    // successor FIRST, then release the predecessor it reads. The kept
+    // snapshots and the final syms snapshot stay pinned under OpCache's
+    // lifetime rule: until releaseScoped when ta_bpe_learn runs the chain,
+    // for the memo's life when bpeSyms' build does.
     var liveSyms: org.apache.spark.rdd.RDD[org.apache.spark.sql.Row] = null
     def snap(df: DataFrame, vocabAxis: Boolean): DataFrame = if (!cut) df else {
       val rdd = df.rdd.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -158,7 +161,7 @@ object Curation2 {
       if (vocabAxis) {
         if (liveSyms != null) liveSyms.unpersist(false)
         liveSyms = rdd
-      } else OpCache.trackHook(s, () => rdd.unpersist(false))
+      } else OpCache.onRelease(s)(rdd.unpersist(false))
       s.createDataFrame(rdd, df.schema)
     }
     // the batch arrives as one broadcast row mb: array<struct<l,r>>
@@ -183,10 +186,8 @@ object Curation2 {
         .withColumn("syms", expr(mergeFold))
         .drop("mb"), vocabAxis = true)
     }
-    // the final vocabulary snapshot stays pinned — bpeSyms memoizes the
-    // DataFrame over it; OpCache.release frees it with the other memos
     val finalSyms = liveSyms
-    if (finalSyms != null) OpCache.trackHook(s, () => finalSyms.unpersist(false))
+    if (finalSyms != null) OpCache.onRelease(s)(finalSyms.unpersist(false))
     (merges, syms)
   }
 

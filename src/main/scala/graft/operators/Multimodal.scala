@@ -113,7 +113,7 @@ object Multimodal {
   /** Document count, memoized per (session, dir) — one metadata-scale
     * count job sizes the fingerprint for every phash consumer. */
   private[operators] def docCount(s: SparkSession, d: String): Long =
-    OpCache.memoLong(s, "docN|" + d)(Tables.t(s, d, "documents").count())
+    OpCache.memo(s, "docN|" + d)(Tables.t(s, d, "documents").count())
 
   /** STUB perceptual hash (the DCT-pHash analog over an opaque payload):
     * 4·w equal byte blocks, bit j = majority of per-position votes in
@@ -293,11 +293,11 @@ object Multimodal {
     * pipelines via pairedGate) previously each ran their own min-label
     * propagation over the SAME memoized edge set — the labels are as much
     * a standing index as the edges, so one session runs the loop once.
-    * The final snapshot RDD is release()-scoped (not entry-scoped)
-    * because the memo outlives any one entry. */
+    * Its final snapshot RDD is pinned inside the memo build, so it lives
+    * as long as the memo. */
   private[graft] def phashLabels(s: SparkSession, d: String): org.apache.spark.sql.DataFrame =
     OpCache.memo(s, "phlabels|" + d) {
-      Components.minLabel(s, phashEdges(s, d), scopedRelease = false)
+      Components.minLabel(s, phashEdges(s, d))
     }
 
   /** The collapse itself (see phashEdges): star edges within exact-fp

@@ -1,145 +1,123 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Dataset, SparkSession}
+import scala.concurrent.{Await, Promise}
+import scala.concurrent.duration.Duration
 
-/** Session-scoped registry for the persisted feature tables the dedup /
-  * similarity operators share (vector features, verified-pair index,
-  * signature tables). Two jobs:
+/** The one registry of a session's shared, materialised stages (feature
+  * tables, pair indexes, label tables, corpus counts, bucketed tables,
+  * staged stream replays) and of everything the operators pin.
   *
-  *   1. Memoize the shared "materialized feature store" per (session, dir)
-  *      so every consumer reads one persisted copy instead of rebuilding.
-  *   2. Give those persists an explicit LIFECYCLE: every DataFrame this
-  *      package pins is tracked here, and `release(session)` unpersists
-  *      them all — nothing stays pinned for the life of the JVM (the old
-  *      per-object ConcurrentHashMap held its persists forever and keyed
-  *      them by identityHashCode, which can collide after GC).
+  * Single flight: `memo(s, key)(build)` runs `build` once per (session,
+  * key). A concurrent caller of the same key waits on the one in-flight
+  * build and gets its value. A build that throws leaves no entry behind:
+  * its waiters see the same exception, and the next caller builds again.
   *
-  * All of a session's state is one record, keyed by the SparkSession
-  * OBJECT in one weak map: no hash collisions by construction. NOTE the weak keys alone do NOT reclaim a
-  * dropped session's entries — the map's DataFrame values strongly
-  * reference their session (a Dataset holds its SparkSession), so the
-  * value chain keeps the weak key alive. `release(session)` is therefore
-  * MANDATORY at end of life (the mains Verify, Bench, BenchScale,
-  * RowSmoke, TimeQ, PlanDump and PlanAudit call it before `stop`), and
-  * as a backstop every registry
-  * mutation sweeps entries whose SparkContext has been STOPPED (the one
-  * session-death signal observable from outside): a stopped session's
-  * cached plans are unusable anyway, so dropping the references then is
-  * both safe and the actual leak fix for sessions that died without
-  * release(). */
+  * One lifetime rule for pins (`track` for a persisted Dataset, `onRelease`
+  * for any other free action, e.g. a snapshot RDD): a pin made while a
+  * memo build runs on the current thread belongs to the memo and lives
+  * until `release`; a pin made anywhere else belongs to the running entry
+  * and lives until `releaseScoped`. A memo whose value is a Dataset pins
+  * that value with memo lifetime.
+  *
+  * A session's state is one record in a weak map keyed by the session
+  * object. A memo value references its session, so the weak key alone
+  * never frees the record: `release` (run by `GraftSession.stop`) does,
+  * and as a backstop every lookup drops the records of sessions whose
+  * SparkContext has stopped. */
 object OpCache {
+  /** Free actions of one lifetime, with the Datasets among them. */
+  private final class Pins {
+    val datasets = new java.util.ArrayList[Dataset[_]]()
+    val frees = new java.util.ArrayList[() => Unit]()
+    def free(): Unit = {
+      frees.forEach(f => f())
+      frees.clear(); datasets.clear()
+    }
+  }
+
   /** Everything OpCache holds for one session. */
   private final class Entry {
-    val memos = new java.util.HashMap[String, DataFrame]()
-    val longs = new java.util.HashMap[String, java.lang.Long]()
-    val pinned = new java.util.ArrayList[DataFrame]()
-    val hooks = new java.util.ArrayList[() => Unit]()
-    val scopedHooks = new java.util.ArrayList[() => Unit]()
+    val memos = new java.util.HashMap[String, Promise[Any]]()
+    val memoPins = new Pins
+    val scopedPins = new Pins
   }
   private val entries = new java.util.WeakHashMap[SparkSession, Entry]()
 
+  /** Memo builds running on this thread (builds nest: one memo's build
+    * may read another memo). */
+  private val building = new ThreadLocal[Int] { override def initialValue(): Int = 0 }
+
   /** `s`'s record, created on first use, after dropping every record of a
-    * STOPPED SparkContext (see class doc). Caller must hold the monitor. */
+    * stopped SparkContext. Caller holds the monitor. */
   private def entry(s: SparkSession): Entry = {
     entries.keySet().removeIf(_.sparkContext.isStopped)
     entries.computeIfAbsent(s, _ => new Entry)
   }
 
-  /** Record a DataFrame this package persisted so release() can free it.
-    * Returns the argument for inline use. */
-  def track(s: SparkSession, df: DataFrame): DataFrame = synchronized {
-    entry(s).pinned.add(df)
-    df
+  private def pins(s: SparkSession): Pins = {
+    val e = entry(s)
+    if (building.get > 0) e.memoPins else e.scopedPins
   }
 
-  /** Memoized persisted DataFrame per (session, key): built + tracked once,
-    * then shared by every consumer until release(). The build runs OUTSIDE
-    * the monitor (it may launch Spark jobs; holding the lock would serialize
-    * every concurrent session on one build) with a double-checked put — a
-    * losing racer unpersists its redundant copy. */
-  def memo(s: SparkSession, key: String)(build: => DataFrame): DataFrame = {
-    val cached = synchronized(entry(s).memos.get(key))
-    if (cached != null) return cached
-    val built = build
-    synchronized {
+  /** Run `free` when the pin made here ends (see the lifetime rule). */
+  def onRelease(s: SparkSession)(free: => Unit): Unit = synchronized {
+    pins(s).frees.add(() => free); ()
+  }
+
+  /** Pin a persisted Dataset: unpersisted when the pin ends (see the
+    * lifetime rule). Returns the argument for inline use. */
+  def track[D <: Dataset[_]](s: SparkSession, ds: D): D = synchronized {
+    val p = pins(s)
+    p.datasets.add(ds)
+    p.frees.add(() => { ds.unpersist(); () })
+    ds
+  }
+
+  /** The value of `key` for `s`, built once by the first caller; see the
+    * class doc for the single-flight contract. The build runs outside the
+    * monitor, so builds of other keys and sessions proceed meanwhile. */
+  def memo[T](s: SparkSession, key: String)(build: => T): T = {
+    val (cell, mine) = synchronized {
       val e = entry(s)
       val prior = e.memos.get(key)
-      if (prior != null) { built.unpersist(); prior }
-      else { e.pinned.add(built); e.memos.put(key, built); built }
+      if (prior != null) (prior, false)
+      else { val p = Promise[Any](); e.memos.put(key, p); (p, true) }
     }
-  }
-
-  /** Memoized scalar per (session, key) — corpus statistics (row counts)
-    * that parameterize quantizer sizes. Same build-outside-the-lock shape
-    * as memo: the count job must not run under the OpCache monitor. */
-  def memoLong(s: SparkSession, key: String)(build: => Long): Long = {
-    val cached = synchronized(entry(s).longs.get(key))
-    if (cached != null) return cached.longValue()
-    val v = build
-    synchronized {
-      val prior = entry(s).longs.putIfAbsent(key, v)
-      if (prior != null) prior.longValue() else v
+    if (mine) {
+      building.set(building.get + 1)
+      try {
+        val v = build
+        v match { case ds: Dataset[_] => track(s, ds); case _ => }
+        cell.success(v)
+      } catch { case t: Throwable =>
+        synchronized { Option(entries.get(s)).foreach(_.memos.remove(key, cell)) }
+        cell.failure(t)
+      } finally building.set(building.get - 1)
     }
+    Await.result(cell.future, Duration.Inf).asInstanceOf[T]
   }
 
-  /** Register a custom release action (e.g. unpersisting an RDD-backed
-    * snapshot a DataFrame.unpersist can't reach). */
-  def trackHook(s: SparkSession, hook: () => Unit): Unit = synchronized {
-    entry(s).hooks.add(hook); ()
-  }
-
-  /** Register an ENTRY-SCOPED release action: state that is consumed
-    * entirely within one entry's action (e.g. the Components.minLabel
-    * final-round RDD snapshot) and is dead weight once that action
-    * finishes. Run by releaseScoped() — and by release() as a backstop
-    * for runtimes that never call releaseScoped. */
-  def trackHookScoped(s: SparkSession, hook: () => Unit): Unit = synchronized {
-    entry(s).scopedHooks.add(hook); ()
-  }
-
-  /** Release ENTRY-SCOPED state between entries: unpersist every pinned
-    * DataFrame that is NOT a memoized feature-store table, and run the
-    * entry-scoped hooks. Bench/Verify/TimeQ/BenchScale call this after
-    * each entry's action so one entry's working caches (candidate-pair
-    * tables, per-entry snapshots) never bleed storage memory into the
-    * remaining ~200 entries of a shared-session run — the mhVerify
-    * persist→materialize→unpersist discipline, applied at the harness
-    * boundary for caches that must stay live until the entry's action
-    * completes. The deliberate warmup memos (the shared feature store)
-    * are kept. */
+  /** End every entry-scoped pin of `s`: the runtimes call this after each
+    * entry's action, so one entry's working caches never hold storage
+    * memory through the entries after it. Memos and their pins stay. */
   def releaseScoped(s: SparkSession): Unit = synchronized {
-    val e = entries.get(s)
-    if (e != null) {
-      val keep = java.util.Collections.newSetFromMap(
-        new java.util.IdentityHashMap[DataFrame, java.lang.Boolean]())
-      keep.addAll(e.memos.values())
-      e.pinned.removeIf { df =>
-        val drop = !keep.contains(df)
-        if (drop) df.unpersist()
-        drop
-      }
-      val h = new java.util.ArrayList(e.scopedHooks)
-      e.scopedHooks.clear()
-      h.forEach { f => f() }
-    }
+    Option(entries.get(s)).foreach(_.scopedPins.free())
   }
 
-  /** Unpersist every DataFrame this package pinned for `s` and drop its
-    * memo tables — the explicit end of the feature-store lifecycle
-    * (Verify/Bench call this when a session's query set is done). */
+  /** Drop every memo of `s` and end all its pins. */
   def release(s: SparkSession): Unit = synchronized {
-    val e = entries.remove(s)
-    if (e != null) {
-      e.pinned.forEach { df => df.unpersist(); () }
-      e.hooks.forEach { f => f() }
-      e.scopedHooks.forEach { f => f() }
+    Option(entries.remove(s)).foreach { e =>
+      e.memoPins.free(); e.scopedPins.free()
     }
   }
 
-  /** Test hook: the DataFrames currently pinned for `s`. */
-  private[graft] def trackedFor(s: SparkSession): Seq[DataFrame] = synchronized {
-    val e = entries.get(s)
-    if (e == null) Seq.empty
-    else { val b = Seq.newBuilder[DataFrame]; e.pinned.forEach(b += _); b.result() }
+  /** Test hook: the Datasets currently pinned for `s`, memo-owned first. */
+  private[graft] def trackedFor(s: SparkSession): Seq[Dataset[_]] = synchronized {
+    Option(entries.get(s)).fold(Seq.empty[Dataset[_]]) { e =>
+      val b = Seq.newBuilder[Dataset[_]]
+      Seq(e.memoPins, e.scopedPins).foreach(_.datasets.forEach(b += _))
+      b.result()
+    }
   }
 }

@@ -72,7 +72,7 @@ object Similarity {
   /** Corpus row count, memoized per (session, dir) — one metadata-scale
     * count job parameterizes every quantizer in the family. */
   private[operators] def embCount(s: SparkSession, d: String): Long =
-    OpCache.memoLong(s, "embN|" + d)(emb(s, d).count())
+    OpCache.memo(s, "embN|" + d)(emb(s, d).count())
 
   private[operators] def ivfK(s: SparkSession, d: String): Int =
     scaledK(embCount(s, d))
@@ -429,7 +429,7 @@ object Similarity {
       // materialize now so the upstream caches can go; the pair COUNT is
       // memoized alongside (it sizes the loop width of pair-graph
       // consumers — dd_rep_rank — without a second count job)
-      OpCache.memoLong(s, s"mhpairsN|$bands|$rows|$d")(verified.count())
+      OpCache.memo(s, s"mhpairsN|$bands|$rows|$d")(verified.count())
       pre.unpersist()
       sigs.unpersist()
       verified
@@ -444,19 +444,18 @@ object Similarity {
     * cold path. */
   private[operators] def minhashPairCount(s: SparkSession, d: String): Long = {
     val pairs = minhashPairs(s, d)
-    OpCache.memoLong(s, s"mhpairsN|$lshBands|$lshRows|$d")(pairs.count())
+    OpCache.memo(s, s"mhpairsN|$lshBands|$lshRows|$d")(pairs.count())
   }
 
   /** Memoized component labels over the verified near-dup pair graph:
     * three entries (dd_cluster, dd_canonical, dd_rep_rank) previously
     * each ran their own min-label propagation over the SAME memoized
     * pair index — the labels are as much a standing index as the pairs,
-    * so one session runs the loop once. Snapshot RDD release()-scoped
-    * (the memo outlives any one entry). */
+    * so one session runs the loop once. Its final snapshot RDD is pinned
+    * inside the memo build, so it lives as long as the memo. */
   private[operators] def minhashLabels(s: SparkSession, d: String): DataFrame =
     OpCache.memo(s, s"mhlabels|$d") {
-      Components.minLabel(s, minhashPairs(s, d).select("ia", "ib"),
-        scopedRelease = false)
+      Components.minLabel(s, minhashPairs(s, d).select("ia", "ib"))
     }
 
   /** The funnel's LAZY verify chain (no persists, no eager counts), for

@@ -45,11 +45,11 @@ object Sinks {
       |  CAST(SUM(o_custkey) AS BIGINT) AS cust_sum
       |FROM orders GROUP BY o_orderpriority""".stripMargin
 
-  /** One-time bucketed "index" build per data dir (the amortized write a
-    * production pipeline does once); returns the two table names. */
-  private val bucketed = new java.util.concurrent.ConcurrentHashMap[String, (String, String)]()
+  /** One-time bucketed "index" build per (session, data dir), an OpCache
+    * memo (the amortized write a production pipeline does once); returns
+    * the two table names. */
   private def bucketedTables(s: SparkSession, d: String): (String, String) =
-    bucketed.computeIfAbsent(d, _ => {
+    OpCache.memo(s, s"bucketed|$d") {
       val buckets = 8
       val tag = java.lang.Integer.toHexString(d.hashCode)
       val lt = s"g_lineitem_b_$tag"
@@ -72,7 +72,7 @@ object Sinks {
         .bucketBy(buckets, "o_orderkey").sortBy("o_orderkey")
         .saveAsTable(ot)
       (lt, ot)
-    })
+    }
 
   val defs: Seq[GraftQuery] = Seq(
     GraftQuery("q_sink_csv", (s, d) => roundTrip(s, d, "csv"), Some(oracle)),
@@ -104,8 +104,9 @@ object Sinks {
     // key, then join WITHOUT a shuffle (plan-spec-verified: no Exchange
     // above the bucketed scans). At 100 TB this is how repeated fact⋈fact
     // joins amortize their shuffle once at write time — so like any index,
-    // the build runs ONCE per dataset (memoized below) and queries reuse
-    // it; timing the build into every query would measure the wrong thing.
+    // the build runs ONCE per session and dataset (memoized above) and
+    // queries reuse it; timing the build into every query would measure
+    // the wrong thing.
     GraftQuery("q_bucketed_join", (s, d) => {
       val (lt, ot) = bucketedTables(s, d)
       s.table(lt)

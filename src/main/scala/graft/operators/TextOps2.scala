@@ -837,36 +837,40 @@ object TextOps2 {
     * consumers previously built the whole chain independently — the
     * clean corpus is exactly what a real pipeline materializes between
     * passes, so it belongs in the shared feature store, not in per-entry
-    * working caches. The two internal stage intermediates stay
-    * entry-scoped (released after the first consumer's action, by which
-    * point the memoized output is materialized). */
+    * working caches. The build materializes the output, then frees the
+    * two internal stage intermediates (the minhashPairsWith discipline),
+    * so they never outlive the build. */
   private[graft] def scrubbedCorpus(s: org.apache.spark.sql.SparkSession,
       d: String): org.apache.spark.sql.DataFrame =
     OpCache.memo(s, s"scrub|$d") {
       // persisted: the scrub stage's output feeds three branches (segment
       // explode, duplicated-segment set, removal join) — cache the regex
       // pass once instead of re-scrubbing the corpus per branch
-      val tk1 = OpCache.track(s, docs(s, d)
+      val tk1 = docs(s, d)
         .withColumn("raw", piiPlanted)
         .select(col("doc_id"), col("source"),
           piiCount(col("raw")).as("n_pii"),
           piiScrub(col("raw")).as("t1"))
         .withColumn("toks", expr("filter(split(t1, ' '), t -> t <> '')"))
-        .persist())
+        .persist()
       val s2 = tk1.join(segRemovedPos(tk1), Seq("doc_id"), "left")
         .select(col("doc_id"), col("source"), col("n_pii"),
           expr(segRemovedCountExpr).as("n_seg_removed"),
           expr(segCleanExpr).as("t2"))
-      val tk2 = OpCache.track(s, s2
+      val tk2 = s2
         .withColumn("toks", expr("filter(split(t2, ' '), t -> t <> '')"))
-        .persist())
-      tk2.join(spanRemovedPos(tk2), Seq("doc_id"), "left")
+        .persist()
+      val out = tk2.join(spanRemovedPos(tk2), Seq("doc_id"), "left")
         .select(col("doc_id"), col("source"), col("n_pii"), col("n_seg_removed"),
           expr(spanRemovedCountExpr).as("n_span_removed"),
           (expr("CAST(size(toks) AS BIGINT)")
             - expr(spanRemovedCountExpr)).as("n_toks_final"),
           expr(spanCleanExpr).as("clean_text"))
         .persist()
+      out.count()
+      tk2.unpersist()
+      tk1.unpersist()
+      out
     }
 
   /** DuckDB mirror of scrubbedCorpus (no WITH prefix): ends with

@@ -239,17 +239,14 @@ object Streams {
       java.nio.file.attribute.FileTime.fromMillis(System.currentTimeMillis() - p.ageMs))
   }
 
-  /** Staged replay dirs, one per (kind, data dir) per JVM. */
-  private val stagedDirs = new java.util.concurrent.ConcurrentHashMap[(String, String), String]()
-
-  /** Stage replay `kind` over `d` once: its `parts` into a fresh scratch
-    * dir, whose path every later call reuses. */
-  private def stage(d: String, kind: String)(parts: => Seq[Part]): String =
-    stagedDirs.computeIfAbsent((kind, d), _ => {
+  /** Stage replay `kind` over `d` once per session (an OpCache memo): its
+    * `parts` into a fresh scratch dir, whose path every later call reuses. */
+  private def stage(s: SparkSession, d: String, kind: String)(parts: => Seq[Part]): String =
+    graft.operators.OpCache.memo(s, s"stage|$kind|$d") {
       val dir = scratchDir(d, s"${kind}_src")
       parts.foreach(put(d, kind, dir, _))
       dir.toString
-    })
+    }
 
   private def rawEvents(s: SparkSession, d: String): DataFrame =
     s.read.parquet(s"$d/events.parquet") // ts in raw on-disk layout
@@ -268,7 +265,7 @@ object Streams {
     * exactly like an infinite stream would, with no special-case
     * end-of-stream logic in the operator. */
   private def stageWithSentinel(s: SparkSession, d: String): String =
-    stage(d, "sess") {
+    stage(s, d, "sess") {
       val raw = rawEvents(s, d)
       Seq(Part("events.parquet", 60000, Left(s"$d/events.parquet")),
         Part("zz_sentinel.parquet", 0, Right(raw.limit(1)
@@ -295,7 +292,7 @@ object Streams {
     * mirrors that one row), and the sentinel's year-2100 window can never
     * be passed by the watermark, so it never emits in Append mode. */
   private def stageLate(s: SparkSession, d: String): String =
-    stage(d, "late") {
+    stage(s, d, "late") {
       val raw = rawEvents(s, d)
       Seq(Part("00_ontime.parquet", 180000, Right(raw.filter(col("user_id") % 2 === 0))),
         Part("01_tick.parquet", 120000, Right(raw.limit(1)
@@ -311,14 +308,14 @@ object Streams {
 
   /** A deterministic 2-batch replay: even users, then odd users. */
   private def stageEvensOdds(s: SparkSession, d: String): String =
-    stage(d, "eo")(twoBatches(rawEvents(s, d), col("user_id") % 2 === 0,
+    stage(s, d, "eo")(twoBatches(rawEvents(s, d), col("user_id") % 2 === 0,
       ("00_evens.parquet", "01_odds.parquet")))
 
   /** st_cdc's staging: two batches split by EVENT id parity (not user id —
     * a key's changes must land in BOTH batches, or the standing-target
     * merge never exercises a cross-batch conflict). */
   private def stageCdcBatches(s: SparkSession, d: String): String =
-    stage(d, "cdc")(twoBatches(rawEvents(s, d), col("event_id") % 2 === 0,
+    stage(s, d, "cdc")(twoBatches(rawEvents(s, d), col("event_id") % 2 === 0,
       ("00_evens.parquet", "01_odds.parquet")))
 
   /** The crawl delta (doc_id % 10 == 0, dd_incremental's split) as a
@@ -326,7 +323,7 @@ object Streams {
     * 01 = the rest — so the standing-index append between the batches is
     * observable (batch 2 can match batch-1 survivors). */
   private def stageDeltaDocs(s: SparkSession, d: String): String =
-    stage(d, "si")(twoBatches(s.read.parquet(s"$d/documents.parquet")
+    stage(s, d, "si")(twoBatches(s.read.parquet(s"$d/documents.parquet")
       .select("doc_id", "text").filter(col("doc_id") % 10 === 0),
       col("doc_id") % 20 === 0, ("00_b1.parquet", "01_b2.parquet")))
 
@@ -336,7 +333,7 @@ object Streams {
     * an arbitrary real type — fine for unfiltered streams, wrong for
     * per-type sides). */
   private def stageBothSentinel(s: SparkSession, d: String): String =
-    stage(d, "lj") {
+    stage(s, d, "lj") {
       val raw = rawEvents(s, d)
       Seq(Part("events.parquet", 0, Left(s"$d/events.parquet")),
         Part("zz_sentinel.parquet", 0, Right(raw.limit(1)
@@ -351,7 +348,7 @@ object Streams {
     * (raw ts layout preserved) — the watermark sequence the TTL dedup
     * contract depends on. */
   private def stageYearReplay(s: SparkSession, d: String): String =
-    stage(d, "ttl") {
+    stage(s, d, "ttl") {
       import org.apache.spark.sql.types.LongType
       val raw = rawEvents(s, d)
       val shifted = raw.schema("ts").dataType match {

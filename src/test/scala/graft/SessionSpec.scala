@@ -6,9 +6,9 @@ import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.internal.SQLConf
 
 /** The one session builder: its conf set, a test session wired before any
-  * spec runs, an entry that wires a session its caller built, and a grep
-  * that keeps session building and wiring out of every other src/main
-  * site. */
+  * spec runs, an entry that wires a session its caller built, and greps
+  * that keep session building, wiring and stopping out of every other
+  * src/main site. */
 class SessionSpec extends SparkSpec {
 
   test("GraftSession.confs is exactly Bench's six standard confs") {
@@ -74,5 +74,19 @@ class SessionSpec extends SparkSpec {
       allowed.exists { case (af, start) => f == af && l.startsWith(start) } }
     assert(stray.isEmpty, s"session building or wiring outside GraftSession / Graft.init:\n${stray.mkString("\n")}")
     assert(hits.size == allowed.size, hits.mkString("\n"))
+  }
+
+  test("src/main stops a session only in GraftSession.stop") {
+    import scala.jdk.CollectionConverters._
+    val root = java.nio.file.Paths.get("src/main/scala")
+    val stop = "\\b(spark|session|s)\\.stop\\(\\)".r
+    val walk = java.nio.file.Files.walk(root)
+    val hits = try walk.iterator().asScala.filter(_.toString.endsWith(".scala")).toSeq.flatMap { f =>
+      val rel = root.relativize(f).toString
+      java.nio.file.Files.readAllLines(f).asScala.collect {
+        case l if stop.findFirstIn(l).isDefined => rel -> l.trim
+      }
+    } finally walk.close()
+    assert(hits == Seq("graft/Graft.scala" -> "s.stop()"), hits.mkString("\n"))
   }
 }
