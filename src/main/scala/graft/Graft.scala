@@ -11,7 +11,7 @@ import org.apache.spark.sql.SparkSession
 object Graft {
   def init(spark: SparkSession): SparkSession = {
     functions.F.register(spark)       // scalar + aggregate expressions
-    plans.GraftOps.register(spark)    // TopK strategy + rewrite rule
+    plans.GraftOps.register(spark)    // TopK strategy, TopK + runtime-key-pruning rules
     sources.api.GraftConfigure.ensureCatalog(spark) // graft.* catalog
     // env-controlled log level (reference logging.go: STEAMPIPE_LOG_LEVEL)
     sys.env.get("GRAFT_LOG_LEVEL").foreach(spark.sparkContext.setLogLevel)

@@ -15,7 +15,7 @@ object VTab {
     s.read.format("graft").option("plugin", "seq").option("table", "numbers").load()
 
   /** All computed columns of `numbers` for row ids drawn from `src`
-    * (DuckDB side; mirrors SeqPlugin.NumbersTable.row exactly). */
+    * (DuckDB side; mirrors NumbersTable's column generators exactly). */
   private def duckNumbers(src: String): String =
     s"""SELECT i AS id, (i * 7) % 97 AS x, 'row_' || i AS s, i % 2 = 0 AS flag,
        |  i / 100.0 AS ratio,

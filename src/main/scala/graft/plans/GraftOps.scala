@@ -8,14 +8,16 @@ import org.apache.spark.sql.catalyst.expressions.{Ascending, Descending, SortOrd
 object GraftOps {
 
   /** Idempotent per-session planner + optimizer registration (part of
-    * `Graft.init`; `topKPerGroup` needs it on the session it plans in). */
+    * `Graft.init`; `topKPerGroup` needs it on the session it plans in):
+    * the TopK strategy, and the TopK and runtime-key-pruning rules. */
   def register(spark: SparkSession): Unit = {
     val cur = spark.experimental.extraStrategies
     if (!cur.contains(TopKStrategy))
       spark.experimental.extraStrategies = cur :+ TopKStrategy
     val opts = spark.experimental.extraOptimizations
-    if (!opts.contains(TopKRewrite))
-      spark.experimental.extraOptimizations = opts :+ TopKRewrite
+    val missing = Seq(TopKRewrite, RuntimeKeyPruning).filterNot(opts.contains)
+    if (missing.nonEmpty)
+      spark.experimental.extraOptimizations = opts ++ missing
   }
 
   /** Top-k rows per group with a rank column, via the two-phase bounded-

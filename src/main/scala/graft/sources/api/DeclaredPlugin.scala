@@ -164,14 +164,14 @@ final case class DeclaredTable(spec: DeclaredTableSpec) extends ApiTable {
     Some(narrowed(qc).rows)
 
   override def splits(qc: QueryContext, config: PluginConfig): Seq[ApiSplit] =
-    narrowed(qc).splits(spec.pageSize)(RangeSplit(_, _))
+    narrowed(qc).splits(spec.pageSize)(RangeSplit(_, _, desc = false, _))
 
   override def scan(split: ApiSplit, qc: QueryContext,
       config: PluginConfig): Iterator[Array[Any]] = {
-    val RangeSplit(lo, hi, _) = split: @unchecked
-    val gens = qc.columns.map(c => spec.columns.find(_.name == c)
-      .getOrElse(throw new IllegalArgumentException(
-        s"declared table '${spec.table}' has no column '$c'")).gen).toArray
-    Iterator.range(lo, hi).map(i => gens.map(_.eval(i)))
+    val cols = RowGen.select(name, gens, qc.columns)
+    split.asInstanceOf[RangeSplit].keys.map(RowGen.row(cols, _))
   }
+
+  private val gens: Map[String, RowGen.Col] =
+    spec.columns.map(c => c.name -> (c.gen.eval _)).toMap
 }

@@ -39,16 +39,15 @@ object WideTable extends ApiTable {
     Some(narrowed(qc, config).rows)
 
   override def splits(qc: QueryContext, config: PluginConfig): Seq[ApiSplit] =
-    narrowed(qc, config).splits(config.pageSize)(RangeSplit(_, _))
+    narrowed(qc, config).splits(config.pageSize)(RangeSplit(_, _, desc = false, _))
 
   override def scan(split: ApiSplit, qc: QueryContext, config: PluginConfig): Iterator[Array[Any]] = {
-    val RangeSplit(lo, hi, _) = split: @unchecked
-    val names = cols(config)
-    Iterator.range(lo, hi).map { i =>
-      qc.columns.map {
-        case "id" => i
-        case c => i * (names.indexOf(c) + 2L)
-      }.toArray[Any]
-    }
+    val gs = RowGen.select(name, gens(config), qc.columns)
+    split.asInstanceOf[RangeSplit].keys.map(RowGen.row(gs, _))
   }
+
+  /** `id`, and the j-th configured column (1-based) as id * (j + 1). */
+  private def gens(config: PluginConfig): Map[String, RowGen.Col] =
+    cols(config).zipWithIndex.map { case (c, j) => c -> ((i: Long) => i * (j + 2L)) }
+      .toMap[String, RowGen.Col] + ("id" -> (i => i))
 }

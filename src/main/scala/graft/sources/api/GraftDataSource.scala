@@ -17,10 +17,12 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   *
   *   - SupportsPushDownV2Filters    ↔ xBestIndex qual pushdown (table.go:75)
   *   - SupportsRuntimeV2Filtering   ↔ join-key probes at run time, through
-  *     the same Predicate → Qual translation (GraftScanBuilder.qualOf)
+  *     the same Predicate → Qual translation (GraftScanBuilder.qualOf);
+  *     no plan-time broadcast needed (graft.plans.RuntimeKeyPruning)
   *   - KeyRange narrowing + paging  ↔ BestIndex range costing, shared by
   *     every key-range table
-  *   - SupportsPushDownRequiredColumns ↔ ColUsed bitmask (table.go:262)
+  *   - SupportsPushDownRequiredColumns ↔ ColUsed bitmask (table.go:262),
+  *     and per-column row building in each table (RowGen)
   *   - SupportsPushDownLimit        ↔ SQLITE_INDEX_CONSTRAINT_LIMIT (table.go:56)
   *   - InputPartition (serialized QueryContext) ↔ IndexString JSON (table.go:224)
   *   - required-key validation at build() ↔ allRequiredKeyColsInConstraints
@@ -304,12 +306,14 @@ case class GraftScan(pluginAlias: String, table: ApiTable, config: PluginConfig,
   override def readSchema(): StructType = prunedSchema
 
   /** DSv2 runtime filtering — the v2 analog of dynamic partition pruning:
-    * when this table is the probe side of a broadcast join on a key column,
-    * Spark materializes the build side FIRST and hands its join-key values
-    * here as an IN predicate, which the plugin turns into per-value probe
-    * splits (the same path as vt_in_pushdown). A cloud-API table joined to
-    * a 25-row dim then fetches 25 keys instead of paginating the account —
-    * pruning decided at RUNTIME from data, not at plan time. */
+    * when this table is the probe side of a join on a key column, Spark
+    * materializes the build side FIRST and hands its join-key values here
+    * as an IN predicate, which the plugin turns into per-value probe splits
+    * (the same path as vt_in_pushdown). The keys come from the reused
+    * broadcast of a broadcast join, or, for a join not planned as one, from
+    * a subquery over the build side (RuntimeKeyPruning). A cloud-API table
+    * joined to a 25-row dim then fetches 25 keys instead of paginating the
+    * account — pruning decided at RUNTIME from data, not at plan time. */
   @transient private var runtimeQuals: Seq[Qual] = Seq.empty
 
   override def filterAttributes(): Array[NamedReference] =

@@ -41,21 +41,26 @@ object SeriesTable extends ApiTable {
   override def splits(qc: QueryContext, config: PluginConfig): Seq[ApiSplit] = {
     val sid = qc.quals.collectFirst { case Qual("series_id", "=", v: Long) => v }
       .getOrElse(return Nil)
+    // t takes no IN, so no split is a page of probe keys
     KeyRange.all(config.n).narrow(qc.quals, tKey)
-      .splits(config.pageSize)(SeriesSplit(sid, _, _))
+      .splits(config.pageSize)((lo, hi, _) => SeriesSplit(sid, lo, hi))
   }
 
   override def scan(split: ApiSplit, qc: QueryContext, config: PluginConfig): Iterator[Array[Any]] = {
     val SeriesSplit(sid, lo, hi) = split: @unchecked
     val limit = qc.limit.getOrElse(Long.MaxValue)
+    val cols = RowGen.select(name, gens(sid), qc.columns)
     Iterator.range(lo, hi).take(if (limit > Int.MaxValue) Int.MaxValue else limit.toInt)
-      .map { t =>
-        val full = Map[String, Any](
-          "series_id" -> sid,
-          "t" -> t,
-          "value" -> ((t * t * 31 + sid * 17) % 1000) / 10.0,
-          "tag" -> UTF8String.fromString(s"s$sid"))
-        qc.columns.map(full).toArray
-      }
+      .map(RowGen.row(cols, _))
+  }
+
+  /** The column generators of series `sid`, keyed by t. */
+  private def gens(sid: Long): Map[String, RowGen.Col] = {
+    val tag = UTF8String.fromString(s"s$sid")
+    Map(
+      "series_id" -> (_ => sid),
+      "t" -> (t => t),
+      "value" -> (t => ((t * t * 31 + sid * 17) % 1000) / 10.0),
+      "tag" -> (_ => tag))
   }
 }

@@ -39,19 +39,31 @@ object FlakyTable extends ApiTable {
       .map(s => RangeSplit(s, math.min(s + config.pageSize, config.n)))
 
   override def scan(split: ApiSplit, qc: QueryContext, config: PluginConfig): Iterator[Array[Any]] = {
-    val RangeSplit(lo, hi, _) = split: @unchecked
+    val RangeSplit(lo, hi, _, _) = split: @unchecked
     val key = s"$lo-$hi/${qc.columns.mkString(",")}/${qc.quals.mkString(",")}"
     if (attempts.putIfAbsent(key, java.lang.Boolean.TRUE) == null)
       throw new TransientApiError(s"simulated rate limit on split [$lo, $hi)")
-    Iterator.range(lo, hi).map { i =>
-      val row = Map[String, Any]("id" -> i, "x" -> (i * 13) % 101)
-      qc.columns.map(row).toArray
-    }
+    val cols = RowGen.select(name, gens, qc.columns)
+    Iterator.range(lo, hi).map(RowGen.row(cols, _))
   }
+
+  private val gens: Map[String, RowGen.Col] = Map(
+    "id" -> (i => i),
+    "x" -> (i => (i * 13) % 101))
 }
 
-final case class RangeSplit(start: Long, end: Long, desc: Boolean = false)
-    extends ApiSplit
+/** A page [start, end) of a key-range table, read in descending key
+  * order when `desc` (an ordered page). `probes`, when set, are the only
+  * keys of the page a read returns: a page of a long probe list (see
+  * `KeyRange.splits`). */
+final case class RangeSplit(start: Long, end: Long, desc: Boolean = false,
+    probes: Option[Seq[Long]] = None) extends ApiSplit {
+  /** The row keys a read of this split returns, in read order. */
+  def keys: Iterator[Long] = probes match {
+    case Some(ks) => if (desc) ks.reverseIterator else ks.iterator
+    case None => if (desc) Iterator.range(end - 1, start - 1, -1L) else Iterator.range(start, end)
+  }
+}
 
 object NumbersTable extends ApiTable {
   override def name: String = "numbers"
@@ -161,7 +173,7 @@ object NumbersTable extends ApiTable {
           }
         if (lo2 >= hi2) Seq.empty else Seq(RangeSplit(lo2, hi2, desc))
       }
-    } else kr.splits(config.pageSize)(RangeSplit(_, _))
+    } else kr.splits(config.pageSize)(RangeSplit(_, _, desc = false, _))
   }
 
   /** ORDER BY id|ts [DESC] LIMIT/OFFSET is answerable in closed form: both
@@ -178,58 +190,67 @@ object NumbersTable extends ApiTable {
 
   /** Closed-form partial aggregates over a key-range split — the API
     * analog of a count endpoint: id is the key itself and ts sits on the
-    * exact minute grid, so COUNT/MIN/MAX need no row enumeration at all. */
+    * exact minute grid, so COUNT/MIN/MAX need no row enumeration at all.
+    * A page of a long probe list counts only its probe keys, of which it
+    * holds at least one. */
   override def aggregateSplit(split: ApiSplit, qc: QueryContext,
       config: PluginConfig, aggs: Seq[AggSpec]): Option[Array[Any]] = {
-    val RangeSplit(lo, hi, _) = split: @unchecked
+    val RangeSplit(lo, hi, _, probes) = split: @unchecked
+    val (rows, first, last) =
+      probes.fold((hi - lo, lo, hi - 1))(ks => (ks.length.toLong, ks.head, ks.last))
     val vals = aggs.map {
-      case AggSpec("count_star", _) => Some(hi - lo)
-      case AggSpec("min", Some("id")) => Some(lo)
-      case AggSpec("max", Some("id")) => Some(hi - 1)
-      case AggSpec("min", Some("ts")) => Some(baseTs + lo * tickUs)
-      case AggSpec("max", Some("ts")) => Some(baseTs + (hi - 1) * tickUs)
+      case AggSpec("count_star", _) => Some(rows)
+      case AggSpec("min", Some("id")) => Some(first)
+      case AggSpec("max", Some("id")) => Some(last)
+      case AggSpec("min", Some("ts")) => Some(baseTs + first * tickUs)
+      case AggSpec("max", Some("ts")) => Some(baseTs + last * tickUs)
       case _ => None
     }
     if (vals.exists(_.isEmpty)) None
     else Some(vals.flatten.map(_.asInstanceOf[Any]).toArray)
   }
 
+  /** Builds only the requested columns. id quals are enforced by the
+    * split's keys; every other qual is checked on its own column's value,
+    * so a qual on a column the query does not read costs one generator
+    * call, not a full row. */
   override def scan(split: ApiSplit, qc: QueryContext, config: PluginConfig): Iterator[Array[Any]] = {
-    val RangeSplit(lo, hi, desc) = split: @unchecked
-    val residual = qc.quals.filterNot(_.field == "id") // id handled by range
+    val checks = qc.quals.filterNot(_.field == "id").map(check).toArray
+    val cols = RowGen.select(name, gens, qc.columns)
     val limit = qc.limit.getOrElse(Long.MaxValue)
-    (if (desc) Iterator.range(hi - 1, lo - 1, -1L) else Iterator.range(lo, hi))
-      .map(row)
-      .filter(r => residual.forall(q => satisfies(r, q)))
+    split.asInstanceOf[RangeSplit].keys.filter(i => checks.forall(_(i)))
       .take(if (limit > Int.MaxValue) Int.MaxValue else limit.toInt)
-      .map(r => qc.columns.map(c => r(colIdx(c))).toArray)
+      .map(RowGen.row(cols, _))
   }
 
-  private val colIdx: Map[String, Int] = schema.fieldNames.zipWithIndex.toMap
+  /** The column generators — the "API response" for one key. */
+  private val gens: Map[String, RowGen.Col] = Map(
+    "id" -> (i => i),
+    "x" -> (i => (i * 7) % 97),
+    "s" -> (i => UTF8String.fromString(s"row_$i")),
+    "flag" -> (i => i % 2 == 0),
+    "ratio" -> (i => i / 100.0),
+    "ts" -> (i => baseTs + i * tickUs),
+    "j" -> (i => UTF8String.fromString(s"""{"k":${i % 10}}""")),
+    "ip" -> (i => UTF8String.fromString(s"10.${(i / 65536) % 256}.${(i / 256) % 256}.${i % 256}")),
+    "cidr" -> (i => UTF8String.fromString(s"192.168.${i % 256}.0/24")),
+    "path" -> (i => UTF8String.fromString(s"root.n${i % 10}.leaf")))
 
-  /** The row generator — the "API response" for one key. */
-  private def row(i: Long): Array[Any] = Array[Any](
-    i,
-    (i * 7) % 97,
-    UTF8String.fromString(s"row_$i"),
-    i % 2 == 0,
-    i / 100.0,
-    baseTs + i * 60000000L,
-    UTF8String.fromString(s"""{"k":${i % 10}}"""),
-    UTF8String.fromString(s"10.${(i / 65536) % 256}.${(i / 256) % 256}.${i % 256}"),
-    UTF8String.fromString(s"192.168.${i % 256}.0/24"),
-    UTF8String.fromString(s"root.n${i % 10}.leaf"))
+  /** A residual qual as a test on the row key, through its column's
+    * generator alone. */
+  private def check(q: Qual): Long => Boolean = gens.get(q.field) match {
+    case Some(g) => i => satisfies(g(i), q)
+    case None => _ => true
+  }
 
-  private def satisfies(r: Array[Any], q: Qual): Boolean = {
-    val v = r(colIdx(q.field))
+  private def satisfies(v: Any, q: Qual): Boolean =
     (v, q.value) match {
       case (a: Long, b: Long) => cmp(java.lang.Long.compare(a, b), q.op)
       case (a: Double, b: Double) => cmp(java.lang.Double.compare(a, b), q.op)
-      case (a: Boolean, b: Boolean) => q.op == "=" && a == b
+      case (a: Boolean, b: Boolean) => cmp(java.lang.Boolean.compare(a, b), q.op)
       case (a: UTF8String, b) => cmp(a.toString.compareTo(b.toString), q.op)
       case _ => true // unknown comparison: let Spark's residual filter decide
     }
-  }
   private def cmp(c: Int, op: String): Boolean = op match {
     case "=" => c == 0
     case ">" => c > 0
@@ -262,8 +283,11 @@ object KvTable extends ApiTable {
 
   override def scan(split: ApiSplit, qc: QueryContext, config: PluginConfig): Iterator[Array[Any]] = {
     val KeySplit(k) = split: @unchecked
-    val full = Map[String, Any]("k" -> k,
-      "val" -> UTF8String.fromString(s"v$k"), "k2" -> k * k)
-    Iterator.single(qc.columns.map(full).toArray)
+    Iterator.single(RowGen.row(RowGen.select(name, gens, qc.columns), k))
   }
+
+  private val gens: Map[String, RowGen.Col] = Map(
+    "k" -> (k => k),
+    "val" -> (k => UTF8String.fromString(s"v$k")),
+    "k2" -> (k => k * k))
 }

@@ -105,12 +105,32 @@ final case class KeyRange(ranges: Seq[(Long, Long)], in: Option[Seq[Long]] = Non
 
   def rows: Long = probes.fold(ranges.map { case (l, h) => h - l }.sum)(_.length.toLong)
 
-  /** One split per probe key, or else one per `pageSize` keys of each range. */
-  def splits(pageSize: Long)(split: (Long, Long) => ApiSplit): Seq[ApiSplit] = probes match {
-    case Some(ks) => ks.map(k => split(k, k + 1))
-    case None => for ((l, h) <- ranges; s <- l until h by pageSize)
-      yield split(s, math.min(s + pageSize, h))
-  }
+  /** One split per probe key, or else one per `pageSize` keys of each
+    * range. Probes stay one-key splits (the reference's one `=` probe per
+    * IN value) up to `max(pages, pageSize)` of them, so a probe list of up
+    * to one page's worth of keys may still plan more calls than paging
+    * would; the bound is not a measured cost model. Past it (a runtime
+    * filter's build keys, say) each page that holds a probe key becomes one
+    * split carrying those keys, so the plan never makes more calls than
+    * paging and no read returns a key that was not probed. `split` gets
+    * the page bounds and, for such a page, its probe keys. */
+  def splits(pageSize: Long)(split: (Long, Long, Option[Seq[Long]]) => ApiSplit): Seq[ApiSplit] =
+    probes match {
+      case Some(ks) if ks.length <= math.max(pages(pageSize), pageSize) =>
+        ks.map(k => split(k, k + 1, None))
+      case Some(ks) =>
+        // ks ascending: each page's keys stay in key order
+        ks.groupBy(k => ranges.collectFirst { case (l, h) if k >= l && k < h =>
+          val s = l + (k - l) / pageSize * pageSize
+          (s, math.min(s + pageSize, h))
+        }.get).toSeq.sortBy(_._1._1).map { case ((s, e), pk) => split(s, e, Some(pk)) }
+      case None => for ((l, h) <- ranges; s <- l until h by pageSize)
+        yield split(s, math.min(s + pageSize, h), None)
+    }
+
+  /** Pages of `pageSize` keys the ranges take, counted without listing them. */
+  private def pages(pageSize: Long): Long =
+    ranges.map { case (l, h) => if (h <= l) 0L else (h - l - 1) / pageSize + 1 }.sum
 }
 
 object KeyRange {
@@ -144,6 +164,30 @@ object KeyRange {
   }
 
   private def next(k: Long): Long = if (k == Long.MaxValue) k else k + 1
+}
+
+/** Per-column row building, the analog of the reference SDK running only
+  * the hydrate calls of the columns SQLite asked for (the `ColUsed`
+  * bitmask, table.go:262): a table over a row key gives each column one
+  * generator, and a scan evaluates only the generators of `qc.columns` —
+  * plus, to check a residual qual, that of the qual's column. */
+object RowGen {
+  /** A column's value as a pure function of the row key, Catalyst-internal
+    * (UTF8String, micros Long, epoch-days Int) like every ApiTable.scan row. */
+  type Col = Long => Any
+
+  /** The generators of `columns`, in their order. */
+  def select(table: String, gens: Map[String, Col], columns: Seq[String]): Array[Col] =
+    columns.map(c => gens.getOrElse(c,
+      throw new IllegalArgumentException(s"table '$table' has no column '$c'"))).toArray
+
+  /** The row of key `i`: each selected generator applied to it. */
+  def row(cols: Array[Col], i: Long): Array[Any] = {
+    val r = new Array[Any](cols.length)
+    var j = 0
+    while (j < cols.length) { r(j) = cols(j)(i); j += 1 }
+    r
+  }
 }
 
 /** One API page range of a scan: the unit of plugin call (`scan` or

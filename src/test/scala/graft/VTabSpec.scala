@@ -53,6 +53,16 @@ class VTabSpec extends SparkSpec {
     }
   }
 
+  test("boolean comparison quals keep the rows Spark keeps") {
+    noCache {
+      // false < true, as in Spark; a non-`=` boolean qual used to drop
+      // every row before Spark's re-check could see it
+      val counts = Seq(col("flag") >= false, col("flag") > false, col("flag") < true,
+        col("flag") <= true, col("flag") === false).map(numbers.filter(_).count())
+      assert(counts == Seq(10000L, 5000L, 5000L, 10000L, 5000L), s"got $counts")
+    }
+  }
+
   test("pushed limit caps plugin work on key-only scans") {
     noCache {
       ScanLedger.reset()
@@ -266,6 +276,108 @@ class VTabSpec extends SparkSpec {
         s"runtime IN qual must reach the scan, got ${ScanLedger.lastRuntimeQuals}")
       assert(ScanLedger.lastSplitCount == 5,
         s"5 build-side keys must become 5 probe splits, got ${ScanLedger.lastSplitCount}")
+    }
+  }
+
+  /** nation ⋈ supplier ⋈ numbers for the nations of `region`, with the
+    * numbers side narrowed to [0, idBelow): (n_name, count, sum(x)). */
+  private def regionJoin(region: Long, idBelow: Long): DataFrame = {
+    val nation = spark.read.parquet(s"$sf/nation.parquet").filter(col("n_regionkey") === region)
+    val supplier = spark.read.parquet(s"$sf/supplier.parquet")
+    nation.join(supplier, col("s_nationkey") === col("n_nationkey"))
+      .join(numbers.filter(col("id") < idBelow), col("id") === col("s_suppkey"))
+      .groupBy("n_name").agg(count(lit(1)).as("c"), sum("x").as("sx"))
+  }
+
+  test("runtime key pruning: a connector join that is not planned as a broadcast " +
+      "still probes only the build side's keys") {
+    noCache {
+      Scoped.withConf(spark, "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
+        ScanLedger.reset()
+        val region = 4L // two suppliers, against 4 pages of numbers
+        val df = regionJoin(region, 10000L)
+        val got = df.collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSet
+        // the expected join, from the two parquet tables alone
+        val nations = spark.read.parquet(s"$sf/nation.parquet")
+          .filter(col("n_regionkey") === region).collect()
+          .map(r => r.getAs[Number]("n_nationkey").longValue -> r.getAs[String]("n_name")).toMap
+        val supp = spark.read.parquet(s"$sf/supplier.parquet").collect()
+          .map(r => (r.getAs[Number]("s_suppkey").longValue, r.getAs[Number]("s_nationkey").longValue))
+          .filter { case (_, nk) => nations.contains(nk) }
+        val want = supp.groupBy { case (_, nk) => nations(nk) }.map { case (name, ss) =>
+          (name, ss.length.toLong, ss.map { case (k, _) => (k * 7) % 97 }.sum)
+        }.toSet
+        assert(supp.nonEmpty && got == want, s"got $got, want $want")
+        val keys = supp.map(_._1).toSet
+        assert(ScanLedger.lastRuntimeQuals.map(q => (q.field, q.op)) == Seq(("id", "in")) &&
+          ScanLedger.lastRuntimeQuals.head.value.asInstanceOf[Seq[Any]].toSet == keys,
+          s"the build side's keys must reach the scan, got ${ScanLedger.lastRuntimeQuals}")
+        assert(ScanLedger.lastSplitCount == keys.size,
+          s"${keys.size} supplier keys must become ${keys.size} probe splits, " +
+            s"got ${ScanLedger.lastSplitCount}")
+        val plan = df.queryExecution.executedPlan.toString
+        assert(plan.contains("SortMergeJoin") && !plan.contains("BroadcastHashJoin"),
+          "the join must not be a broadcast\n" + plan)
+      }
+    }
+  }
+
+  test("runtime key pruning leaves the filter off when the build side " +
+      "outweighs half the scan estimate") {
+    noCache {
+      Scoped.withConf(spark, "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
+        ScanLedger.reset()
+        // numbers narrowed to 40 keys: ~2.5 kB estimated, below the ~6 kB of
+        // the nation and supplier files the build side would read again
+        val df = regionJoin(3L, 40L)
+        assert(df.collect().map(_.getLong(1)).sum == 4L)
+        val plan = df.queryExecution.executedPlan.toString
+        assert(plan.contains("dynamicpruningexpression(true)"),
+          "no runtime subquery for a build side this large\n" + plan)
+        assert(ScanLedger.lastRuntimeQuals.isEmpty)
+      }
+    }
+  }
+
+  test("a probe list longer than the page count reads only the pages that hold a probe") {
+    val idKey = NumbersTable.keyColumns.head
+    def plan(keys: Seq[Long]): Seq[ApiSplit] = KeyRange.all(10000L)
+      .narrow(Seq(Qual("id", "in", keys)), idKey).splits(2500L)(RangeSplit(_, _, desc = false, _))
+    // no more probes than pages, or than the rows of one page: one probe
+    // split each
+    assert(plan(Seq(7L, 2600L, 9999L)) == Seq(RangeSplit(7, 8), RangeSplit(2600, 2601),
+      RangeSplit(9999, 10000)))
+    assert(plan(0L until 2500L).length == 2500)
+    // more than both: one split per page that holds a probe, carrying its
+    // probe keys, in key order
+    assert(plan((0L until 5000L) :+ 9000L) == Seq(RangeSplit(0, 2500, probes = Some(0L until 2500L)),
+      RangeSplit(2500, 5000, probes = Some(2500L until 5000L)),
+      RangeSplit(7500, 10000, probes = Some(Seq(9000L)))))
+    noCache {
+      ScanLedger.reset()
+      val keys = (0L until 10000L by 2L)
+      val ids = numbers.filter(col("id").isin(keys: _*)).select("id", "x").collect()
+        .map(_.getLong(0)).sorted.toSeq
+      assert(ids == keys, "the scan must keep exactly the probe keys")
+      assert(ScanLedger.lastSplitCount <= 4,
+        s"5,000 keys over 4 pages must plan at most 4 splits, got ${ScanLedger.lastSplitCount}")
+    }
+  }
+
+  test("pushed COUNT/MIN/MAX over a probe list read as pages count only the probe keys") {
+    noCache {
+      ScanLedger.reset()
+      // odd keys from 5 to 9903: no page bound is a key, so an answer
+      // taken from the page bounds cannot pass
+      val keys = 5L until 9905L by 2L
+      val r = numbers.filter(col("id").isin(keys: _*))
+        .agg(count(lit(1)), min(col("id")), max(col("id"))).head()
+      assert((r.getLong(0), r.getLong(1), r.getLong(2)) == ((keys.length.toLong, keys.min, keys.max)),
+        s"got $r for ${keys.length} keys in [${keys.min}, ${keys.max}]")
+      assert(ScanLedger.lastPushedAggs.map(_.fn) == Seq("count_star", "min", "max") &&
+        ScanLedger.lastSplitCount <= 4,
+        s"the aggregate must be pushed over page splits, got ${ScanLedger.lastPushedAggs} " +
+          s"over ${ScanLedger.lastSplitCount} splits")
     }
   }
 
