@@ -9,11 +9,13 @@ object GraftOps {
 
   /** Idempotent per-session planner + optimizer registration (part of
     * `Graft.init`; `topKPerGroup` needs it on the session it plans in):
-    * the TopK strategy, and the TopK and runtime-key-pruning rules. */
+    * the TopK and driver-scan strategies, and the TopK and
+    * runtime-key-pruning rules. */
   def register(spark: SparkSession): Unit = {
     val cur = spark.experimental.extraStrategies
-    if (!cur.contains(TopKStrategy))
-      spark.experimental.extraStrategies = cur :+ TopKStrategy
+    val absent = Seq(TopKStrategy, DriverScanStrategy).filterNot(cur.contains)
+    if (absent.nonEmpty)
+      spark.experimental.extraStrategies = cur ++ absent
     val opts = spark.experimental.extraOptimizations
     val missing = Seq(TopKRewrite, RuntimeKeyPruning).filterNot(opts.contains)
     if (missing.nonEmpty)

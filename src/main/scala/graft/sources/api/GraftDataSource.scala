@@ -27,6 +27,9 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   *   - InputPartition (serialized QueryContext) ↔ IndexString JSON (table.go:224)
   *   - required-key validation at build() ↔ allRequiredKeyColsInConstraints
   *   - a run of splits read in order by one task ↔ the one cursor (cursor.go)
+  *   - scan of ≤ one page read on the driver ↔ the in-process cursor
+  *     (cursor.go): no Spark job for a point, key-list GET or ordered page
+  *     (graft.plans.DriverScanStrategy)
   *
   * A split (ApiSplit) is the unit of plugin call, retry, QueryCache key and
   * ScanLedger count. A Spark task is not: `GraftInputPartition.pack` groups
@@ -343,10 +346,13 @@ case class GraftScan(pluginAlias: String, table: ApiTable, config: PluginConfig,
       pushedAggs.fold("")(a => s", aggs=[${a.mkString(",")}]") + ")"
 
   /** Qual-narrowed size estimate → Catalyst join planning: a key-narrowed
-    * API page is broadcast-able instead of forcing a sort-merge join. */
+    * API page is broadcast-able instead of forcing a sort-merge join, and a
+    * scan of at most one page runs on the driver (DriverScanStrategy). A
+    * pushed aggregate returns one partial row per split. */
   override def estimateStatistics(): Statistics = new Statistics {
-    private val rows = table.estimatedRows(qc, config)
-      .map(r => qc.limit.fold(r)(l => math.min(r, l)))
+    private val rows =
+      if (pushedAggs.isDefined) Some(table.splits(qc, config).length.toLong)
+      else table.estimatedRows(qc, config).map(r => qc.limit.fold(r)(l => math.min(r, l)))
     override def numRows(): java.util.OptionalLong =
       rows.fold(java.util.OptionalLong.empty())(java.util.OptionalLong.of)
     override def sizeInBytes(): java.util.OptionalLong =

@@ -34,6 +34,9 @@ object FlakyTable extends ApiTable {
     * identical scan exercises no retries. */
   def resetAttempts(): Unit = attempts.clear()
 
+  override def estimatedRows(qc: QueryContext, config: PluginConfig): Option[Long] =
+    Some(config.n)
+
   override def splits(qc: QueryContext, config: PluginConfig): Seq[ApiSplit] =
     (0L until config.n by config.pageSize)
       .map(s => RangeSplit(s, math.min(s + config.pageSize, config.n)))
@@ -87,8 +90,9 @@ object NumbersTable extends ApiTable {
   override def keyColumns: Seq[KeyColumn] = Seq(idKey, tsKey)
 
   /** id and ts quals are enforced exactly by key narrowing in splits():
-    * range quals shrink [lo, hi), IN lists become one probe split per value
-    * (the SQLite `=`-probe decomposition, reference table.go:127-151), and
+    * range quals shrink [lo, hi), IN lists become probe splits, one per
+    * page that holds a probe (the SQLite `=`-probe decomposition, reference
+    * table.go:127-151, batched by page), and
     * ts quals convert to id bounds through the exact minute-grid inverse. */
   override def exactlyHandled(q: Qual): Boolean = q.field match {
     case "id" =>
@@ -150,8 +154,8 @@ object NumbersTable extends ApiTable {
   override def estimatedRows(qc: QueryContext, config: PluginConfig): Option[Long] =
     Some(narrowed(qc, config).rows)
 
-  /** Page the narrowed key space, or emit one probe split per IN value —
-    * the probes respect any pushed LIKE prefix too: exactlyHandled drops
+  /** Page the narrowed key space, or split its IN probes by page — the
+    * probes respect any pushed LIKE prefix too: exactlyHandled drops
     * Spark's residual LIKE, so `id IN (...) AND s LIKE 'row_p%'` must not
     * leak non-matches. */
   override def splits(qc: QueryContext, config: PluginConfig): Seq[ApiSplit] = {
@@ -280,6 +284,10 @@ object KvTable extends ApiTable {
     * table.go:127-151). */
   override def splits(qc: QueryContext, config: PluginConfig): Seq[ApiSplit] =
     KeyRange.probeKeys(qc.quals, keyColumns.head).getOrElse(Nil).map(KeySplit)
+
+  /** One row per GET key. */
+  override def estimatedRows(qc: QueryContext, config: PluginConfig): Option[Long] =
+    Some(splits(qc, config).length.toLong)
 
   override def scan(split: ApiSplit, qc: QueryContext, config: PluginConfig): Iterator[Array[Any]] = {
     val KeySplit(k) = split: @unchecked

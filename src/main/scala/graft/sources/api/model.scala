@@ -105,32 +105,27 @@ final case class KeyRange(ranges: Seq[(Long, Long)], in: Option[Seq[Long]] = Non
 
   def rows: Long = probes.fold(ranges.map { case (l, h) => h - l }.sum)(_.length.toLong)
 
-  /** One split per probe key, or else one per `pageSize` keys of each
-    * range. Probes stay one-key splits (the reference's one `=` probe per
-    * IN value) up to `max(pages, pageSize)` of them, so a probe list of up
-    * to one page's worth of keys may still plan more calls than paging
-    * would; the bound is not a measured cost model. Past it (a runtime
-    * filter's build keys, say) each page that holds a probe key becomes one
-    * split carrying those keys, so the plan never makes more calls than
-    * paging and no read returns a key that was not probed. `split` gets
-    * the page bounds and, for such a page, its probe keys. */
+  /** One split per `pageSize` keys of each range; with probe keys, one
+    * split per page that holds a probe. A page with one probe key is the
+    * one-key split [k, k + 1), so a point or a list of spread keys reads
+    * one key per call; a page with several carries its probe keys, so a
+    * probe list never makes more calls than paging and no read returns a
+    * key that was not probed. `split` gets the bounds and, for a page of
+    * several probes, its probe keys. */
   def splits(pageSize: Long)(split: (Long, Long, Option[Seq[Long]]) => ApiSplit): Seq[ApiSplit] =
     probes match {
-      case Some(ks) if ks.length <= math.max(pages(pageSize), pageSize) =>
-        ks.map(k => split(k, k + 1, None))
       case Some(ks) =>
         // ks ascending: each page's keys stay in key order
         ks.groupBy(k => ranges.collectFirst { case (l, h) if k >= l && k < h =>
           val s = l + (k - l) / pageSize * pageSize
           (s, math.min(s + pageSize, h))
-        }.get).toSeq.sortBy(_._1._1).map { case ((s, e), pk) => split(s, e, Some(pk)) }
+        }.get).toSeq.sortBy(_._1._1).map {
+          case (_, Seq(k)) => split(k, k + 1, None)
+          case ((s, e), pk) => split(s, e, Some(pk))
+        }
       case None => for ((l, h) <- ranges; s <- l until h by pageSize)
         yield split(s, math.min(s + pageSize, h), None)
     }
-
-  /** Pages of `pageSize` keys the ranges take, counted without listing them. */
-  private def pages(pageSize: Long): Long =
-    ranges.map { case (l, h) => if (h <= l) 0L else (h - l - 1) / pageSize + 1 }.sum
 }
 
 object KeyRange {
@@ -215,9 +210,11 @@ trait ApiTable extends Serializable {
     * page splits are the same for every plugin. */
   def splits(qc: QueryContext, config: PluginConfig): Seq[ApiSplit]
 
-  /** Execute one split on an executor, yielding rows as Catalyst-internal
-    * values (UTF8String for strings, micros Long for timestamps) in
-    * qc.columns order — the cursor.Column() mapping of the reference. */
+  /** Execute one split, yielding rows as Catalyst-internal values
+    * (UTF8String for strings, micros Long for timestamps) in qc.columns
+    * order — the cursor.Column() mapping of the reference. A split runs in
+    * a task on an executor, or on the driver when the whole scan returns at
+    * most one page (graft.plans.DriverScanStrategy). */
   def scan(split: ApiSplit, qc: QueryContext, config: PluginConfig): Iterator[Array[Any]]
 
   /** Estimated row count AFTER qual narrowing, if the plugin can tell

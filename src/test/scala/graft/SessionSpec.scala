@@ -1,6 +1,6 @@
 package graft
 
-import graft.plans.{TopKRewrite, TopKStrategy}
+import graft.plans.{DriverScanStrategy, TopKRewrite, TopKStrategy}
 import graft.sources.api.GraftCatalog
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.internal.SQLConf
@@ -30,12 +30,14 @@ class SessionSpec extends SparkSpec {
     val (builder, strategies, rules) = state
     assert(builder.isDefined, "minhash_sig must resolve without any spec registering it")
     assert(strategies.count(_ == TopKStrategy) == 1, strategies.toString)
+    assert(strategies.count(_ == DriverScanStrategy) == 1, strategies.toString)
     assert(rules.count(_ == TopKRewrite) == 1, rules.toString)
     assert(spark.conf.get("spark.sql.catalog.graft") == classOf[GraftCatalog].getName)
     Graft.init(spark)
     val (builder2, strategies2, rules2) = state
     assert(builder2.get eq builder.get, "re-wiring must not replace a registered function")
     assert(strategies2 == strategies && rules2 == rules)
+    assert(strategies2.count(_ == DriverScanStrategy) == 1, strategies2.toString)
   }
 
   test("an entry wires a bare session its caller built") {

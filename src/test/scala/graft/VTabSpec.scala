@@ -163,13 +163,19 @@ class VTabSpec extends SparkSpec {
 
   test("IN-list pushdown probes one split per value (table.go:127-151)") {
     noCache {
+      // values on pages of their own: one one-key probe split each
       ScanLedger.reset()
-      val n = numbers.filter(col("id").isin(5L, 777L, 8888L)).collect().length
+      val n = numbers.filter(col("id").isin(5L, 2777L, 8888L)).collect().length
       assert(n == 3)
       assert(ScanLedger.lastSplitCount == 3,
         s"IN must expand to per-value probe splits, got ${ScanLedger.lastSplitCount}")
       val q = ScanLedger.lastQc.get.quals.find(_.op == "in").get
-      assert(q.field == "id" && q.value.asInstanceOf[Seq[Any]].toSet == Set(5L, 777L, 8888L))
+      assert(q.field == "id" && q.value.asInstanceOf[Seq[Any]].toSet == Set(5L, 2777L, 8888L))
+      // values that share a page share its split
+      ScanLedger.reset()
+      assert(numbers.filter(col("id").isin(5L, 777L, 8888L)).collect().length == 3)
+      assert(ScanLedger.lastSplitCount == 2,
+        s"5 and 777 share page [0, 2500), got ${ScanLedger.lastSplitCount} splits")
     }
   }
 
@@ -274,8 +280,9 @@ class VTabSpec extends SparkSpec {
       assert(ScanLedger.lastRuntimeQuals.map(q => (q.field, q.op)) == Seq(("id", "in")) &&
         ScanLedger.lastRuntimeQuals.head.value.asInstanceOf[Seq[Any]].toSet == keys,
         s"runtime IN qual must reach the scan, got ${ScanLedger.lastRuntimeQuals}")
-      assert(ScanLedger.lastSplitCount == 5,
-        s"5 build-side keys must become 5 probe splits, got ${ScanLedger.lastSplitCount}")
+      assert(ScanLedger.lastSplitCount == 1,
+        s"5 build-side keys on page [0, 2500) must become 1 probe split, got " +
+          s"${ScanLedger.lastSplitCount}")
     }
   }
 
@@ -312,8 +319,9 @@ class VTabSpec extends SparkSpec {
         assert(ScanLedger.lastRuntimeQuals.map(q => (q.field, q.op)) == Seq(("id", "in")) &&
           ScanLedger.lastRuntimeQuals.head.value.asInstanceOf[Seq[Any]].toSet == keys,
           s"the build side's keys must reach the scan, got ${ScanLedger.lastRuntimeQuals}")
-        assert(ScanLedger.lastSplitCount == keys.size,
-          s"${keys.size} supplier keys must become ${keys.size} probe splits, " +
+        val pages = keys.map(_ / 2500L).size
+        assert(ScanLedger.lastSplitCount == pages,
+          s"${keys.size} supplier keys on $pages pages must become $pages probe splits, " +
             s"got ${ScanLedger.lastSplitCount}")
         val plan = df.queryExecution.executedPlan.toString
         assert(plan.contains("SortMergeJoin") && !plan.contains("BroadcastHashJoin"),
@@ -343,16 +351,17 @@ class VTabSpec extends SparkSpec {
     val idKey = NumbersTable.keyColumns.head
     def plan(keys: Seq[Long]): Seq[ApiSplit] = KeyRange.all(10000L)
       .narrow(Seq(Qual("id", "in", keys)), idKey).splits(2500L)(RangeSplit(_, _, desc = false, _))
-    // no more probes than pages, or than the rows of one page: one probe
-    // split each
+    // probes on pages of their own: one one-key split each
     assert(plan(Seq(7L, 2600L, 9999L)) == Seq(RangeSplit(7, 8), RangeSplit(2600, 2601),
       RangeSplit(9999, 10000)))
-    assert(plan(0L until 2500L).length == 2500)
-    // more than both: one split per page that holds a probe, carrying its
-    // probe keys, in key order
+    // a page of several probes is one split carrying them, however few
+    assert(plan(0L until 2500L) == Seq(RangeSplit(0, 2500, probes = Some(0L until 2500L))))
+    assert(plan(Seq(3L, 5L)) == Seq(RangeSplit(0, 2500, probes = Some(Seq(3L, 5L)))))
+    // one split per page that holds a probe, carrying its probe keys, in
+    // key order
     assert(plan((0L until 5000L) :+ 9000L) == Seq(RangeSplit(0, 2500, probes = Some(0L until 2500L)),
       RangeSplit(2500, 5000, probes = Some(2500L until 5000L)),
-      RangeSplit(7500, 10000, probes = Some(Seq(9000L)))))
+      RangeSplit(9000, 9001)))
     noCache {
       ScanLedger.reset()
       val keys = (0L until 10000L by 2L)
@@ -554,7 +563,7 @@ class VTabSpec extends SparkSpec {
       ScanLedger.reset()
       val probed = users.filter(col("id").isin(5L, 17L, 400L)).collect()
       assert(probed.length == 3)
-      assert(ScanLedger.lastSplitCount == 3, "one probe split per IN value")
+      assert(ScanLedger.lastSplitCount == 2, "one probe split per 250-row page that holds a probe")
     }
   }
 
@@ -657,6 +666,163 @@ class VTabSpec extends SparkSpec {
             s"${ScanLedger.scans.get()} of ${ScanLedger.lastSplitCount} splits")
       }
     }
+  }
+
+  /** `f`'s result and the number of Spark jobs it started. */
+  private def jobsOf[T](f: => T): (T, Int) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    org.apache.spark.SpecBridge.drainListeners(sc)
+    sc.addSparkListener(listener)
+    try {
+      val r = f
+      org.apache.spark.SpecBridge.drainListeners(sc)
+      (r, jobs.get)
+    } finally sc.removeSparkListener(listener)
+  }
+
+  private def executed(df: DataFrame): String = df.queryExecution.executedPlan.toString
+
+  test("a scan of at most one page runs on the driver: no job for a point, " +
+      "an IN list, an ordered page or a kv GET") {
+    noCache {
+      def x(i: Long) = (i * 7) % 97
+      val cases: Seq[(String, Seq[Seq[Any]])] = Seq(
+        "SELECT id, x, s, flag FROM graft.seq.numbers WHERE id = 4242" ->
+          Seq(Seq(4242L, x(4242), "row_4242", true)),
+        "SELECT id, x, s FROM graft.seq.numbers WHERE id IN (5, 777, 8888)" ->
+          Seq(5L, 777L, 8888L).map(i => Seq(i, x(i), s"row_$i")),
+        "SELECT id, s FROM graft.seq.numbers WHERE id < 5000 ORDER BY id DESC LIMIT 7 OFFSET 1200" ->
+          (3799L to 3793L by -1L).map(i => Seq(i, s"row_$i")),
+        "SELECT k, val, k2 FROM graft.seq.kv WHERE k IN (3, 42, 42)" ->
+          Seq(Seq(3L, "v3", 9L), Seq(42L, "v42", 1764L)))
+      val wrong = cases.flatMap { case (q, want) =>
+        val df = spark.sql(q)
+        val (rows, jobs) = jobsOf(df.collect().map(_.toSeq).toSeq)
+        val got = if (q.contains("ORDER BY")) rows else rows.sortBy(_.head.asInstanceOf[Long])
+        if (got == want && jobs == 0 && executed(df).contains("DriverScan ")) None
+        else Some(s"$q: $jobs jobs, rows $got, want $want\n${executed(df)}")
+      }
+      assert(wrong.isEmpty, wrong.mkString("\n"))
+    }
+  }
+
+  test("a driver scan answers head() and LIMIT through executeTake, stopping at its rows") {
+    noCache {
+      // s LIKE 'row_12%' is the key ranges [12, 13), [120, 130) and
+      // [1200, 1300): three splits of one page. x = 71 is left for Spark,
+      // so the limit is not pushed; key 121, in the second split, is the
+      // first match
+      val df = numbers.filter(col("s").startsWith("row_12") && col("x") === 71L).select("id")
+      ScanLedger.reset()
+      val (ids, jobs) = jobsOf(df.head(1).map(_.getLong(0)).toSeq)
+      assert(ids == Seq(121L) && jobs == 0, s"got $ids with $jobs jobs")
+      assert(ScanLedger.lastSplitCount == 3 && ScanLedger.scans.get() == 2L,
+        s"read ${ScanLedger.scans.get()} of ${ScanLedger.lastSplitCount} splits")
+      val limited = df.limit(1)
+      val (n, limitJobs) = jobsOf(limited.collect().length)
+      assert(n == 1 && limitJobs == 0, s"$n rows, $limitJobs jobs")
+      assert(executed(limited).contains("CollectLimit") && executed(limited).contains("DriverScan "),
+        executed(limited))
+    }
+  }
+
+  test("a one-page scan under an aggregate plans no Exchange and runs one job") {
+    noCache {
+      val df = numbers.filter(col("id") < 1000L).agg(sum(col("x")))
+      val (r, jobs) = jobsOf(df.head().getLong(0))
+      assert(r == (0L until 1000L).map(i => (i * 7) % 97).sum)
+      assert(jobs == 1, s"$jobs jobs")
+      val p = executed(df)
+      assert(p.contains("DriverScan ") && !p.contains("Exchange"), p)
+    }
+  }
+
+  test("a driver scan serves a repeat read from the query cache") {
+    QueryCache.clear()
+    ScanLedger.reset()
+    val q = numbers.filter(col("id") === 6001L).select("id", "s")
+    val (first, jobs1) = jobsOf(q.collect().map(_.getString(1)).toSeq)
+    val fetched = ScanLedger.scans.get()
+    val (second, jobs2) = jobsOf(q.collect().map(_.getString(1)).toSeq)
+    assert(first == Seq("row_6001") && second == first)
+    assert(fetched == 1L && ScanLedger.scans.get() == fetched, "second read must hit the cache")
+    assert(QueryCache.hits.get() == 1L && jobs1 == 0 && jobs2 == 0)
+    QueryCache.clear()
+  }
+
+  test("a one-page flaky scan on the driver still retries once per split") {
+    try {
+      GraftConfigure.configure(spark, "seq", """{"n": 2500}""")
+      noCache {
+        ScanLedger.reset()
+        val df = spark.read.format("graft").option("plugin", "seq").option("table", "flaky").load()
+        val (n, jobs) = jobsOf(df.collect().length)
+        assert(n == 2500 && jobs == 0, s"$n rows, $jobs jobs")
+        assert(ScanLedger.retries.get() == 1L && ScanLedger.lastSplitCount == 1,
+          s"${ScanLedger.retries.get()} retries over ${ScanLedger.lastSplitCount} splits")
+      }
+    } finally GraftConfigure.configure(spark, "seq", """{"n": 10000}""")
+  }
+
+  test("row estimates: a pushed aggregate counts its splits, kv its GET keys, flaky its rows") {
+    import org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation
+    def estimate(df: DataFrame): Long = df.queryExecution.optimizedPlan.collectFirst {
+      case r: DataSourceV2ScanRelation => r.scan.asInstanceOf[GraftScan].estimateStatistics()
+    }.get.numRows().getAsLong
+    noCache {
+      atBigN {
+        ScanLedger.reset()
+        val agg = numbers.filter(col("id") >= 1000L && col("id") < 1001000L)
+          .agg(count(lit(1)), min(col("id")), max(col("id")))
+        assert(agg.head().getLong(0) == 1000000L)
+        assert(ScanLedger.lastPushedAggs.nonEmpty && ScanLedger.lastSplitCount == 400)
+        assert(estimate(agg) == 400L, s"estimate ${estimate(agg)}, want one row per split")
+        assert(executed(agg).contains("DriverScan ") && !executed(agg).contains("Exchange"),
+          executed(agg))
+        val flaky = spark.read.format("graft").option("plugin", "seq").option("table", "flaky").load()
+        assert(estimate(flaky) == bigN)
+      }
+    }
+    val kv = spark.sql("SELECT * FROM graft.seq.kv WHERE k IN (1, 2, 3, 3)")
+    assert(estimate(kv) == 3L)
+  }
+
+  test("scans that are not one page, or carry a dynamic-pruning filter, keep Spark's job path") {
+    import org.apache.spark.sql.streaming.Trigger
+    noCache {
+      // larger than one page: 3,000 rows over 2 splits
+      val big = numbers.filter(col("id") < 3000L).select("id")
+      val (n, jobs) = jobsOf(big.collect().length)
+      assert(n == 3000 && jobs >= 1, s"$n rows, $jobs jobs")
+      assert(executed(big).contains("BatchScan") && !executed(big).contains("DriverScan "),
+        executed(big))
+      // 40 keys, but under a dynamic-pruning filter
+      Scoped.withConf(spark, "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
+        val df = regionJoin(3L, 40L)
+        assert(df.collect().map(_.getLong(1)).sum == 4L)
+        val p = executed(df)
+        assert(p.contains("dynamicpruningexpression") && !p.contains("DriverScan "), p)
+      }
+    }
+    // a stream over a one-page table keeps its micro-batch scan
+    try {
+      GraftConfigure.configure(spark, "seq", """{"n": 2000}""")
+      val q = spark.readStream.format("graft").option("plugin", "seq").option("table", "numbers")
+        .load().select("id").writeStream.format("memory").queryName("driver_scan_stream")
+        .trigger(Trigger.AvailableNow()).start()
+      try {
+        q.awaitTermination()
+        assert(spark.table("driver_scan_stream").count() == 2000L)
+        val p = q.asInstanceOf[org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper]
+          .streamingQuery.lastExecution.executedPlan.toString
+        assert(p.contains("MicroBatchScan") && !p.contains("DriverScan "), p)
+      } finally q.stop()
+    } finally GraftConfigure.configure(spark, "seq", """{"n": 10000}""")
   }
 
   test("config table emits valid JSON even with quotes in values") {
