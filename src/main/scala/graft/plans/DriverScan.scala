@@ -87,8 +87,15 @@ case class DriverScanExec(projectList: Seq[NamedExpression], condition: Option[E
   override def executeTake(n: Int): Array[InternalRow] = readOnDriver(n)
   override def executeTail(n: Int): Array[InternalRow] = executeCollect().takeRight(n)
 
-  override protected def doExecute(): RDD[InternalRow] =
-    child.execute().coalesce(1).mapPartitionsWithIndex(pipeline)
+  /** Exactly one partition, as `SinglePartition` promises: a scan of no
+    * split has no input partition to coalesce, and a global aggregate or a
+    * join zip over it needs the one empty partition. */
+  override protected def doExecute(): RDD[InternalRow] = {
+    val rows =
+      if (scan.inputPartitions.isEmpty) sparkContext.parallelize(Array.empty[InternalRow], 1)
+      else child.execute().coalesce(1)
+    rows.mapPartitionsWithIndex(pipeline)
+  }
 
   override def verboseStringWithOperatorId(): String =
     s"""

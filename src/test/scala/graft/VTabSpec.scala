@@ -742,6 +742,37 @@ class VTabSpec extends SparkSpec {
     }
   }
 
+  test("a driver scan of no split is one empty partition: a global aggregate answers one row " +
+      "and a sort-merge join zips") {
+    noCache {
+      // both ranges narrow to no split at n = 10,000; the estimate is 0 rows
+      val empty = Seq("id >= 20000", "id > 5 AND id < 3")
+      // (aggregates, pushed to the plugin?, the one row they answer)
+      val aggs = Seq(
+        ("count(*)", true, Seq(0L)),
+        ("count(*), min(id), max(id)", true, Seq(0L, null, null)),
+        ("count(x), sum(x), min(id)", false, Seq(0L, null, null)))
+      val wrong = for {
+        w <- empty
+        (a, pushed, want) <- aggs
+        df = spark.sql(s"SELECT $a FROM graft.seq.numbers WHERE $w")
+        rows = df.collect().map(_.toSeq).toSeq
+        p = executed(df)
+        if rows != Seq(want) || !p.contains("DriverScan ") || p.contains("aggs=[") != pushed
+      } yield s"$a WHERE $w: rows $rows, want ${Seq(want)}\n$p"
+      assert(wrong.isEmpty, wrong.mkString("\n"))
+      Scoped.withConf(spark, "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
+        val nothing = numbers.filter(col("id") >= 20000L).select(col("id").as("k"), col("s"))
+        val df = numbers.filter(col("id") < 3000L).select("id")
+          .join(nothing, col("id") === col("k"), "left_outer")
+        val rows = df.collect()
+        assert(rows.length == 3000 && rows.forall(_.isNullAt(1)), s"${rows.length} rows")
+        val p = executed(df)
+        assert(p.contains("SortMergeJoin") && p.contains("DriverScan "), p)
+      }
+    }
+  }
+
   test("a driver scan serves a repeat read from the query cache") {
     QueryCache.clear()
     ScanLedger.reset()
