@@ -1,54 +1,94 @@
 package graft.plans
 
 import graft.sources.api.GraftScan
+import java.util.concurrent.{Callable, ExecutionException, LinkedBlockingQueue, ThreadFactory, ThreadPoolExecutor, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions._
+import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, DeclarativeAggregate}
 import org.apache.spark.sql.catalyst.planning.PhysicalOperation
-import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, LogicalPlan}
 import org.apache.spark.sql.catalyst.plans.physical.{Partitioning, SinglePartition}
-import org.apache.spark.sql.connector.read.PartitionReader
-import org.apache.spark.sql.execution.{ExplainUtils, SQLExecution, SparkPlan, SparkStrategy, UnaryExecNode}
+import org.apache.spark.sql.connector.read.{InputPartition, PartitionReader}
+import org.apache.spark.sql.execution.{AggregatingAccumulator, ExplainUtils, SQLExecution, SparkPlan, SparkStrategy, UnaryExecNode}
 import org.apache.spark.sql.execution.datasources.v2.{BatchScanExec, DataSourceV2ScanRelation}
 import org.apache.spark.sql.execution.metric.{SQLMetric, SQLMetrics}
+import org.apache.spark.sql.internal.SQLConf
 import scala.collection.mutable.ArrayBuffer
 
-/** Planner strategy: a connector scan that returns at most one API page of
-  * rows runs on the driver — the in-process row cursor of the reference
-  * (cursor.go), where a one-row GET costs one plugin call and no job.
+/** Planner strategy: connector scans that are small run on the driver — the
+  * in-process row cursor of the reference (cursor.go), where a one-row GET
+  * costs one plugin call and no job, and SQLite aggregates in the process
+  * that holds the cursor.
   *
-  * It matches `[Project] [Filter] DataSourceV2ScanRelation` over a
-  * `GraftScan` whose own statistics promise at most `config.pageSize`
-  * rows (the rows one API call returns) and plans it as a `DriverScanExec`
-  * over the scan's usual `BatchScanExec`. A filter or projection holding a
-  * subquery or a dynamic-pruning expression keeps Spark's plan, and so does
-  * a streaming read, which is a different relation. Installed by
-  * `GraftOps.register`. */
+  * Two shapes, both over `[Project] [Filter] DataSourceV2ScanRelation` of a
+  * `GraftScan`:
+  *   - a global aggregate (no grouping) whose scan's own size estimate is at
+  *     most `spark.sql.autoBroadcastJoinThreshold` — Spark's bound on data it
+  *     gathers at the driver — and whose functions are all declarative,
+  *     without DISTINCT or FILTER, is a `DriverAggregateExec`;
+  *   - a scan whose own statistics promise at most `config.pageSize` rows (the
+  *     rows one API call returns) is a `DriverScanExec`.
+  * Either reads through the scan's usual `BatchScanExec`. A filter,
+  * projection or aggregate holding a subquery or a dynamic-pruning
+  * expression keeps Spark's plan, and so does a streaming read, which is a
+  * different relation. Installed by `GraftOps.register`. */
 object DriverScanStrategy extends SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
-    case PhysicalOperation(project, filters, r @ DataSourceV2ScanRelation(_, scan: GraftScan, _, _, _))
-        if onePage(scan) && (project ++ filters).forall(plain) =>
-      val batch = BatchScanExec(r.output, scan, Nil, r.ordering, r.relation.table)
-      DriverScanExec(project, filters.reduceOption(And), batch) :: Nil
+    case Aggregate(Nil, aggs, PlainScan(project, filters, r, scan), _)
+        if fitsDriver(scan) && aggs.forall(declarative) =>
+      DriverAggregateExec(aggs, driverScan(project, filters, r)) :: Nil
+    case PlainScan(project, filters, r, scan) if onePage(scan) =>
+      driverScan(project, filters, r) :: Nil
     case _ => Nil
   }
+
+  private object PlainScan {
+    def unapply(plan: LogicalPlan)
+        : Option[(Seq[NamedExpression], Seq[Expression], DataSourceV2ScanRelation, GraftScan)] =
+      plan match {
+        case PhysicalOperation(project, filters, r @ DataSourceV2ScanRelation(_, scan: GraftScan, _, _, _))
+            if (project ++ filters).forall(plain) => Some((project, filters, r, scan))
+        case _ => None
+      }
+  }
+
+  private def driverScan(project: Seq[NamedExpression], filters: Seq[Expression],
+      r: DataSourceV2ScanRelation): DriverScanExec =
+    DriverScanExec(project, filters.reduceOption(And),
+      BatchScanExec(r.output, r.scan, Nil, r.ordering, r.relation.table))
 
   private def onePage(scan: GraftScan): Boolean = {
     val rows = scan.estimateStatistics().numRows()
     rows.isPresent && rows.getAsLong <= scan.config.pageSize
   }
 
+  private def fitsDriver(scan: GraftScan): Boolean = {
+    val limit = SQLConf.get.autoBroadcastJoinThreshold
+    val size = scan.estimateStatistics().sizeInBytes()
+    limit >= 0 && size.isPresent && size.getAsLong <= limit
+  }
+
+  private def declarative(e: NamedExpression): Boolean = plain(e) && !e.exists {
+    case a: AggregateExpression =>
+      a.isDistinct || a.filter.isDefined || !a.aggregateFunction.isInstanceOf[DeclarativeAggregate]
+    case _ => false
+  }
+
   private def plain(e: Expression): Boolean =
     !e.exists(x => x.isInstanceOf[SubqueryExpression] || x.isInstanceOf[DynamicPruning])
 }
 
-/** A scan of at most one page with its filter and projection. At the root
+/** A scan that driver nodes read with its filter and projection. At the root
   * of a query (`collect`, `take`, `head`, `tail`) it reads the scan's input
   * partitions in order on the calling thread through the scan's own reader
   * factory, so split retry, the query cache and the scan ledger work as in
-  * a task, and no job runs. Under another operator it is one partition of
-  * the scan's rows, read by a task. Filter and projection are interpreted:
-  * one page of rows does not pay back a code-generation compile. */
+  * a task, and no job runs. Under a `DriverAggregateExec` its partitions are
+  * read the same way, one thread each. Under another operator it is one
+  * partition of the scan's rows, read by a task. Filter and projection are
+  * interpreted: rows read on the driver do not pay back a code-generation
+  * compile. */
 case class DriverScanExec(projectList: Seq[NamedExpression], condition: Option[Expression],
     child: SparkPlan) extends UnaryExecNode {
 
@@ -60,26 +100,52 @@ case class DriverScanExec(projectList: Seq[NamedExpression], condition: Option[E
 
   private def scan: BatchScanExec = child.asInstanceOf[BatchScanExec]
 
-  /** The filter and projection over one partition of the scan's rows. */
-  private def pipeline: (Int, Iterator[InternalRow]) => Iterator[InternalRow] =
-    DriverScanExec.pipeline(projectList, condition, child.output, longMetric("numOutputRows"))
+  /** The scan's input partitions, as packed by `GraftInputPartition.pack`. */
+  private[plans] def partitions: Seq[InputPartition] = scan.inputPartitions
 
-  /** The first `n` output rows, read on the driver; the scan's readers
-    * stop at the split that completes them. */
-  private def readOnDriver(n: Int): Array[InternalRow] = {
-    val scanned = scan.longMetric("numOutputRows")
-    val opened = ArrayBuffer[PartitionReader[InternalRow]]()
-    val out = try {
-      val rows = scan.inputPartitions.iterator.flatMap { p =>
+  /** One thread's read of input partitions on the driver. Rows are counted in
+    * metrics of its own, since an SQLMetric is not thread-safe: `publish`
+    * adds them to the plan's metrics on the thread that runs the query. */
+  private[plans] final class Read {
+    private val scanned = new SQLMetric("sum")
+    private val out = new SQLMetric("sum")
+    private val opened = ArrayBuffer[PartitionReader[InternalRow]]()
+
+    /** The rows of `parts`, read one after another, through the filter and
+      * projection; `index` is the partition index that nondeterministic
+      * expressions are seeded with. */
+    def rows(index: Int, parts: Iterator[InputPartition]): Iterator[InternalRow] = {
+      val in = parts.flatMap { p =>
         val reader = scan.readerFactory.createReader(p)
         opened += reader
         Iterator.continually(reader).takeWhile(_.next()).map { r => scanned += 1; r.get() }
       }
-      pipeline(0, rows).take(n).map(_.copy()).toArray
-    } finally opened.foreach(_.close())
+      DriverScanExec.pipeline(projectList, condition, child.output, out)(index, in)
+    }
+
+    def close(): Unit = opened.foreach(_.close())
+
+    def publish(): Unit = {
+      scan.longMetric("numOutputRows") += scanned.value
+      longMetric("numOutputRows") += out.value
+    }
+  }
+
+  /** Posts this node's and the scan's row counts, and `more`, as driver-side
+    * updates of the running SQL execution. */
+  private[plans] def postMetrics(more: Seq[SQLMetric]): Unit =
     SQLMetrics.postDriverMetricUpdates(sparkContext,
       sparkContext.getLocalProperty(SQLExecution.EXECUTION_ID_KEY),
-      metrics.values.toSeq :+ scanned)
+      metrics.values.toSeq ++ more :+ scan.longMetric("numOutputRows"))
+
+  /** The first `n` output rows, read on the driver; the scan's readers
+    * stop at the split that completes them. */
+  private def readOnDriver(n: Int): Array[InternalRow] = {
+    val read = new Read
+    val out = try read.rows(0, scan.inputPartitions.iterator).take(n).map(_.copy()).toArray
+      finally read.close()
+    read.publish()
+    postMetrics(Nil)
     out
   }
 
@@ -94,7 +160,8 @@ case class DriverScanExec(projectList: Seq[NamedExpression], condition: Option[E
     val rows =
       if (scan.inputPartitions.isEmpty) sparkContext.parallelize(Array.empty[InternalRow], 1)
       else child.execute().coalesce(1)
-    rows.mapPartitionsWithIndex(pipeline)
+    rows.mapPartitionsWithIndex(
+      DriverScanExec.pipeline(projectList, condition, child.output, longMetric("numOutputRows")))
   }
 
   override def verboseStringWithOperatorId(): String =
@@ -117,5 +184,87 @@ object DriverScanExec {
     keep.foreach(_.initialize(index))
     project.initialize(index)
     rows.filter(r => keep.forall(_.eval(r))).map { r => numOutputRows += 1; project(r) }
+  }
+}
+
+/** A global aggregate over a `DriverScanExec`, evaluated on the driver with
+  * no job. Each of the scan's input partitions is read by its own thread —
+  * the caller takes the first, `DriverAggregateExec.pool` the rest — and
+  * folded into its own copy of Spark's `AggregatingAccumulator` (the
+  * evaluator behind `Dataset.observe`); the copies are merged, and the row
+  * counts added to the SQL metrics, on the calling thread. A scan of no
+  * split answers the aggregates of no rows: 0 for a count, NULL for the
+  * rest. It requires no child distribution, so no exchange and no adaptive
+  * plan is inserted, and `collect` runs no job. Under another operator it is
+  * one partition holding the one row. */
+case class DriverAggregateExec(aggregateExpressions: Seq[NamedExpression], child: SparkPlan)
+    extends UnaryExecNode {
+
+  override def output: Seq[Attribute] = aggregateExpressions.map(_.toAttribute)
+  override def outputPartitioning: Partitioning = SinglePartition
+
+  override lazy val metrics = Map(
+    "numOutputRows" -> SQLMetrics.createMetric(sparkContext, "number of output rows"))
+
+  private def scan: DriverScanExec = child.asInstanceOf[DriverScanExec]
+
+  private def aggregate(): InternalRow = {
+    val source = scan
+    val parts = source.partitions.toIndexedSeq
+    val result = AggregatingAccumulator(aggregateExpressions, source.output)
+    val accs = parts.map(_ => result.copyAndReset())
+    val reads = parts.map(_ => new source.Read)
+    def fold(i: Int): Unit =
+      try SQLConf.withExistingConf(conf)(
+        reads(i).rows(i, Iterator.single(parts(i))).foreach(accs(i).add(_)))
+      finally reads(i).close()
+    val rest = parts.indices.drop(1).map(i =>
+      DriverAggregateExec.pool.submit(new Callable[Unit] { def call(): Unit = fold(i) }))
+    try {
+      if (parts.nonEmpty) fold(0)
+      rest.foreach(f => try f.get() catch { case e: ExecutionException => throw e.getCause })
+    } catch { case e: Throwable => rest.foreach(_.cancel(true)); throw e }
+    accs.foreach(result.merge)
+    reads.foreach(_.publish())
+    longMetric("numOutputRows") += 1
+    source.postMetrics(metrics.values.toSeq)
+    result.value.copy()
+  }
+
+  override def executeCollect(): Array[InternalRow] = Array(aggregate())
+  override def executeTake(n: Int): Array[InternalRow] = executeCollect().take(n)
+  override def executeTail(n: Int): Array[InternalRow] = executeCollect().takeRight(n)
+
+  override protected def doExecute(): RDD[InternalRow] =
+    sparkContext.parallelize(executeCollect().toSeq, 1)
+
+  override def verboseStringWithOperatorId(): String =
+    s"""
+       |$formattedNodeName
+       |${ExplainUtils.generateFieldString("Output", output)}
+       |${ExplainUtils.generateFieldString("Aggregates", aggregateExpressions)}
+       |""".stripMargin
+
+  override protected def withNewChildInternal(c: SparkPlan): DriverAggregateExec = copy(child = c)
+}
+
+object DriverAggregateExec {
+  /** The JVM-wide readers of driver-aggregate partitions: daemon threads, as
+    * many as the cores, that end when idle. A scan packs at most leaf
+    * parallelism of partitions; those beyond the pool's size wait in its
+    * queue. */
+  private val pool: ThreadPoolExecutor = {
+    val n = Runtime.getRuntime.availableProcessors
+    val created = new AtomicInteger
+    val p = new ThreadPoolExecutor(n, n, 30L, TimeUnit.SECONDS, new LinkedBlockingQueue[Runnable],
+      new ThreadFactory {
+        def newThread(r: Runnable): Thread = {
+          val t = new Thread(r, s"graft-driver-read-${created.incrementAndGet()}")
+          t.setDaemon(true)
+          t
+        }
+      })
+    p.allowCoreThreadTimeOut(true)
+    p
   }
 }

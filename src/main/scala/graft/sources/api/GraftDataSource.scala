@@ -28,8 +28,9 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   *   - required-key validation at build() ↔ allRequiredKeyColsInConstraints
   *   - a run of splits read in order by one task ↔ the one cursor (cursor.go)
   *   - scan of ≤ one page read on the driver ↔ the in-process cursor
-  *     (cursor.go): no Spark job for a point, key-list GET or ordered page
-  *     (graft.plans.DriverScanStrategy)
+  *     (cursor.go): no Spark job for a point, key-list GET or ordered page;
+  *     a global aggregate over a scan within the broadcast threshold is
+  *     folded on the driver too (graft.plans.DriverScanStrategy)
   *
   * A split (ApiSplit) is the unit of plugin call, retry, QueryCache key and
   * ScanLedger count. A Spark task is not: `GraftInputPartition.pack` groups
@@ -345,13 +346,25 @@ case class GraftScan(pluginAlias: String, table: ApiTable, config: PluginConfig,
         s", orderBy=[${qc.orderBy.mkString(",")}], offset=${qc.offset}" else "") +
       pushedAggs.fold("")(a => s", aggs=[${a.mkString(",")}]") + ")"
 
+  /** The last effective context's splits: the strategies, Catalyst's
+    * statistics and `planInputPartitions` all ask for them, and a table
+    * plans them from the context alone. */
+  @transient private var planned: (QueryContext, Seq[ApiSplit]) = _
+
+  private def splitsOf(eqc: QueryContext): Seq[ApiSplit] = synchronized {
+    if (planned == null || planned._1 != eqc) planned = (eqc, table.splits(eqc, config))
+    planned._2
+  }
+
   /** Qual-narrowed size estimate → Catalyst join planning: a key-narrowed
-    * API page is broadcast-able instead of forcing a sort-merge join, and a
-    * scan of at most one page runs on the driver (DriverScanStrategy). A
-    * pushed aggregate returns one partial row per split. */
+    * API page is broadcast-able instead of forcing a sort-merge join, a
+    * scan of at most one page runs on the driver, and so does a global
+    * aggregate over a scan within the broadcast threshold
+    * (DriverScanStrategy). A pushed aggregate returns one partial row per
+    * split. */
   override def estimateStatistics(): Statistics = new Statistics {
     private val rows =
-      if (pushedAggs.isDefined) Some(table.splits(qc, config).length.toLong)
+      if (pushedAggs.isDefined) Some(splitsOf(qc).length.toLong)
       else table.estimatedRows(qc, config).map(r => qc.limit.fold(r)(l => math.min(r, l)))
     override def numRows(): java.util.OptionalLong =
       rows.fold(java.util.OptionalLong.empty())(java.util.OptionalLong.of)
@@ -362,7 +375,7 @@ case class GraftScan(pluginAlias: String, table: ApiTable, config: PluginConfig,
 
   override def planInputPartitions(): Array[InputPartition] = {
     val eqc = effectiveQc
-    val ss = table.splits(eqc, config)
+    val ss = splitsOf(eqc)
     ScanLedger.lastSplitCount = ss.length
     GraftInputPartition.pack(ss, eqc)
   }

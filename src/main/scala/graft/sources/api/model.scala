@@ -214,7 +214,8 @@ trait ApiTable extends Serializable {
     * (UTF8String for strings, micros Long for timestamps) in qc.columns
     * order — the cursor.Column() mapping of the reference. A split runs in
     * a task on an executor, or on the driver when the whole scan returns at
-    * most one page (graft.plans.DriverScanStrategy). */
+    * most one page or feeds a global aggregate within the broadcast
+    * threshold (graft.plans.DriverScanStrategy). */
   def scan(split: ApiSplit, qc: QueryContext, config: PluginConfig): Iterator[Array[Any]]
 
   /** Estimated row count AFTER qual narrowing, if the plugin can tell
@@ -316,26 +317,42 @@ object PluginRegistry {
   * JVM-local: on a cluster each executor caches its own splits, which is
   * exactly the locality you want.
   *
-  * Bounded: LRU over a row-count weight budget, plus an expired-entry
-  * sweep on every insert — a long-lived executor serving many distinct
-  * (split, qual, config) keys stays within `maxWeight` rows instead of
-  * pinning every split it ever read. A single fetch of more than
-  * `maxWeight` rows is returned without being cached. */
+  * Bounded: LRU over a row-count weight budget — a long-lived executor
+  * serving many distinct (split, qual, config) keys stays within
+  * `maxWeight` rows instead of pinning every split it ever read. An expired
+  * entry is never served: a lookup that finds one drops it, and an insert
+  * first drops the expired entries at the head of a deadline-ordered index,
+  * so they leave before any live entry is evicted, and no insert walks the
+  * whole cache under the lock. A single fetch of more than `maxWeight` rows
+  * is returned without being cached. */
 object QueryCache {
-  private case class Entry(deadlineMs: Long, rows: Vector[Array[Any]])
+  private final class Entry(val key: String, val deadlineMs: Long, val seq: Long,
+      val rows: Vector[Array[Any]])
   /** Row-count budget across all entries (~tens of MB at typical widths). */
   @volatile var maxWeight: Long =
     sys.env.getOrElse("GRAFT_CACHE_MAX_ROWS", "1000000").toLong
   private val cache = new java.util.LinkedHashMap[String, Entry](64, 0.75f, true)
+  /** The entries of `cache` by deadline, then by insertion. */
+  private val byDeadline = new java.util.TreeSet[Entry](
+    java.util.Comparator.comparingLong[Entry](_.deadlineMs).thenComparingLong(_.seq))
   private var weight = 0L
+  private var inserted = 0L
   val hits = new AtomicLong(0)
   val misses = new AtomicLong(0)
+
+  /** Removes `e`, which `cache` holds; the caller holds the lock. */
+  private def drop(e: Entry): Unit = {
+    cache.remove(e.key); byDeadline.remove(e); weight -= e.rows.length
+  }
 
   def getOrFetch(key: String, ttlSeconds: Long)(fetch: => Iterator[Array[Any]]): Iterator[Array[Any]] = {
     val now = System.currentTimeMillis()
     cache.synchronized {
       val e = cache.get(key) // LRU touch
-      if (e != null && e.deadlineMs > now) { hits.incrementAndGet(); return e.rows.iterator }
+      if (e != null) {
+        if (e.deadlineMs > now) { hits.incrementAndGet(); return e.rows.iterator }
+        drop(e)
+      }
     }
     misses.incrementAndGet()
     val rows = fetch.toVector // fetch outside the lock: slow plugin calls must not serialize
@@ -343,20 +360,16 @@ object QueryCache {
     // would evict every other entry and still leave the cache over budget
     if (rows.length > maxWeight) return rows.iterator
     cache.synchronized {
-      val prev = cache.put(key, Entry(now + ttlSeconds * 1000, rows))
-      weight += rows.length - (if (prev != null) prev.rows.length else 0)
-      // sweep expired first, then evict least-recently-used over budget
-      val it = cache.entrySet().iterator()
-      while (it.hasNext) {
-        val en = it.next()
-        if (en.getValue.deadlineMs <= now && en.getKey != key) {
-          weight -= en.getValue.rows.length; it.remove()
-        }
-      }
-      val lru = cache.entrySet().iterator()
+      val prev = cache.get(key)
+      if (prev != null) drop(prev)
+      while (!byDeadline.isEmpty && byDeadline.first.deadlineMs <= now) drop(byDeadline.first)
+      inserted += 1
+      val e = new Entry(key, now + ttlSeconds * 1000, inserted, rows)
+      cache.put(key, e); byDeadline.add(e); weight += rows.length
+      val lru = cache.values().iterator()
       while (weight > maxWeight && lru.hasNext) {
-        val en = lru.next()
-        if (en.getKey != key) { weight -= en.getValue.rows.length; lru.remove() }
+        val old = lru.next()
+        if (old ne e) { lru.remove(); byDeadline.remove(old); weight -= old.rows.length }
       }
     }
     rows.iterator
@@ -371,14 +384,14 @@ object QueryCache {
     val oos = new java.io.ObjectOutputStream(bos)
     parts.foreach(oos.writeObject)
     oos.close()
-    val d = java.security.MessageDigest.getInstance("SHA-256").digest(bos.toByteArray)
-    d.map(b => f"$b%02x").mkString
+    java.util.HexFormat.of().formatHex(
+      java.security.MessageDigest.getInstance("SHA-256").digest(bos.toByteArray))
   }
 
   def size: Int = cache.synchronized(cache.size)
   def currentWeight: Long = cache.synchronized(weight)
   def clear(): Unit = cache.synchronized {
-    cache.clear(); weight = 0; hits.set(0); misses.set(0)
+    cache.clear(); byDeadline.clear(); weight = 0; hits.set(0); misses.set(0)
   }
 }
 

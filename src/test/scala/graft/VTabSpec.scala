@@ -4,6 +4,30 @@ import graft.sources.api._
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+/** `seq.numbers` behind a plugin that counts its `splits` calls. */
+object CountingPlugin extends Plugin {
+  override def name: String = "counting"
+  override def tables: Seq[ApiTable] = Seq(CountingTable(PluginRegistry.plugin("seq").table("numbers")))
+  val splitCalls = new java.util.concurrent.atomic.AtomicInteger
+}
+
+final case class CountingTable(inner: ApiTable) extends ApiTable {
+  override def name: String = inner.name
+  override def schema: org.apache.spark.sql.types.StructType = inner.schema
+  override def keyColumns: Seq[KeyColumn] = inner.keyColumns
+  override def splits(qc: QueryContext, config: PluginConfig): Seq[ApiSplit] = {
+    CountingPlugin.splitCalls.incrementAndGet()
+    inner.splits(qc, config)
+  }
+  override def scan(split: ApiSplit, qc: QueryContext, config: PluginConfig): Iterator[Array[Any]] =
+    inner.scan(split, qc, config)
+  override def estimatedRows(qc: QueryContext, config: PluginConfig): Option[Long] =
+    inner.estimatedRows(qc, config)
+  override def exactlyHandled(q: Qual): Boolean = inner.exactlyHandled(q)
+  override def aggregateSplit(split: ApiSplit, qc: QueryContext, config: PluginConfig,
+      aggs: Seq[AggSpec]): Option[Array[Any]] = inner.aggregateSplit(split, qc, config, aggs)
+}
+
 /** Connector-layer semantics that results alone can't prove: what actually
   * reached the plugin (pushdown), required-key enforcement, TTL caching.
   * Reference behaviors: table.go (BestIndex), cache.go, configure_fn.go. */
@@ -468,6 +492,61 @@ class VTabSpec extends SparkSpec {
     } finally { QueryCache.maxWeight = oldMax; QueryCache.clear() }
   }
 
+  test("query cache: an expired entry is never served, and leaves before any live one") {
+    val oldMax = QueryCache.maxWeight
+    QueryCache.clear()
+    try {
+      var fetches = 0
+      def get(key: String, ttl: Long, rows: Int) =
+        QueryCache.getOrFetch(key, ttl) { fetches += 1; Iterator.fill(rows)(Array[Any](key)) }.length
+      // a TTL of 0 s expires on insert: every lookup fetches again
+      get("gone", 0, 4); get("gone", 0, 4)
+      assert(fetches == 2 && QueryCache.hits.get() == 0L, s"$fetches fetches")
+      QueryCache.clear()
+      QueryCache.maxWeight = 10 // rows
+      get("live_old", 300, 4); get("expired", 0, 4); get("live_new", 300, 4)
+      // room for live_new came from the expired entry, not from the least
+      // recently used live one
+      fetches = 0
+      get("live_old", 300, 4); get("live_new", 300, 4)
+      assert(fetches == 0 && QueryCache.size == 2 && QueryCache.currentWeight == 8L,
+        s"$fetches fetches, ${QueryCache.size} entries, weight ${QueryCache.currentWeight}")
+    } finally { QueryCache.maxWeight = oldMax; QueryCache.clear() }
+  }
+
+  test("query cache: 4 threads running disjoint scans get their rows within the budget") {
+    val oldMax = QueryCache.maxWeight
+    QueryCache.clear()
+    try {
+      QueryCache.maxWeight = 6000 // rows: less than the 4 threads read between them
+      val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
+      try {
+        val results = (0 until 4).map { t =>
+          pool.submit(new java.util.concurrent.Callable[Seq[String]] {
+            def call(): Seq[String] = (0 until 3).flatMap { round =>
+              val (lo, hi) = (t * 2500L, t * 2500L + 2000L)
+              val got = spark.sql(s"SELECT id, x FROM graft.seq.numbers WHERE id >= $lo AND id < $hi")
+                .collect().map(r => r.getLong(0) -> r.getLong(1)).sortBy(_._1).toSeq
+              val weight = QueryCache.currentWeight
+              val want = (lo until hi).map(i => i -> (i * 7) % 97)
+              (if (got != want) Seq(s"thread $t round $round: wrong rows") else Nil) ++
+                (if (weight > 6000L) Seq(s"thread $t round $round: weight $weight") else Nil)
+            }
+          })
+        }
+        val wrong = results.flatMap(_.get())
+        assert(wrong.isEmpty, wrong.mkString("\n"))
+        assert(QueryCache.currentWeight <= 6000L, s"weight ${QueryCache.currentWeight}")
+      } finally pool.shutdown()
+    } finally { QueryCache.maxWeight = oldMax; QueryCache.clear() }
+  }
+
+  test("query cache keys are the hex SHA-256 of the serialized config, split and context") {
+    val key = QueryCache.stableKey(PluginConfig(), RangeSplit(0L, 2500L),
+      QueryContext(Seq("id", "x"), Seq(Qual("id", ">=", 5L)), None))
+    assert(key == "54feff62df529d7224f0d7ad0f0fa9a3ced698c5365e6bd6cbc91476da48d6b5", key)
+  }
+
   test("narrowed connector scan reports stats and broadcasts into a parquet join") {
     // without SupportsReportStatistics a connector table is assumed huge
     // and a 100-row API page would sort-merge-join a fact table
@@ -731,14 +810,106 @@ class VTabSpec extends SparkSpec {
     }
   }
 
-  test("a one-page scan under an aggregate plans no Exchange and runs one job") {
+  test("a one-page scan under an aggregate plans no Exchange and runs no job") {
     noCache {
       val df = numbers.filter(col("id") < 1000L).agg(sum(col("x")))
       val (r, jobs) = jobsOf(df.head().getLong(0))
       assert(r == (0L until 1000L).map(i => (i * 7) % 97).sum)
-      assert(jobs == 1, s"$jobs jobs")
+      assert(jobs == 0, s"$jobs jobs")
       val p = executed(df)
-      assert(p.contains("DriverScan ") && !p.contains("Exchange"), p)
+      assert(p.contains("DriverAggregate ") && p.contains("DriverScan ") && !p.contains("Exchange"), p)
+    }
+  }
+
+  /** `sql`'s rows, and its executed plan, with no driver aggregate: the
+    * broadcast threshold that gates it is off. */
+  private def onJobPath(sql: String): (Seq[Seq[Any]], String) =
+    Scoped.withConf(spark, "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
+      val df = spark.sql(sql)
+      (df.collect().map(_.toSeq).toSeq, executed(df))
+    }
+
+  test("a global aggregate over a scan within the broadcast threshold runs on the driver: " +
+      "no job, and the rows of the job path") {
+    noCache {
+      val t = "graft.seq.numbers"
+      val cases = Seq(
+        s"SELECT count(*), min(id), max(id) FROM $t WHERE id >= 123 AND id < 9000",
+        s"SELECT count(*), sum(x), max(s) FROM $t",
+        s"SELECT avg(x), sum(x) / count(*) FROM $t WHERE id < 7777",
+        s"SELECT count(*), sum(x), min(s) FROM $t WHERE id >= 20000",
+        s"SELECT count(*), min(id), max(id) FROM $t WHERE id >= 20000")
+      val wrong = cases.flatMap { q =>
+        val df = spark.sql(q)
+        val (rows, jobs) = jobsOf(df.collect().map(_.toSeq).toSeq)
+        val (want, jobPlan) = onJobPath(q)
+        if (rows == want && jobs == 0 && executed(df).contains("DriverAggregate ") &&
+            !jobPlan.contains("DriverAggregate ")) None
+        else Some(s"$q: $jobs jobs, rows $rows, want $want\n${executed(df)}")
+      }
+      assert(wrong.isEmpty, wrong.mkString("\n"))
+      assert(spark.sql(cases(3)).collect().map(_.toSeq).toSeq == Seq(Seq(0L, null, null)))
+      val (n, countJobs) = jobsOf(numbers.filter(col("id") < 5000L).count())
+      assert(n == 5000L && countJobs == 0, s"count $n with $countJobs jobs")
+      // the one job is the outer projection's, which a constant select runs too
+      val (subRows, subJobs) = jobsOf(spark.sql(
+        s"SELECT (SELECT count(*) FROM $t WHERE id < 3000) AS c").collect().map(_.getLong(0)).toSeq)
+      val (_, outerJobs) = jobsOf(spark.sql("SELECT 3000L AS c").collect())
+      assert(subRows == Seq(3000L) && subJobs == outerJobs,
+        s"scalar subquery $subRows with $subJobs jobs, $outerJobs without it")
+    }
+  }
+
+  test("a flaky aggregate on the driver still retries once per split") {
+    noCache {
+      ScanLedger.reset()
+      val q = "SELECT count(*), sum(x) FROM graft.seq.flaky"
+      val df = spark.sql(q)
+      val (rows, jobs) = jobsOf(df.collect().map(_.toSeq).toSeq)
+      assert(jobs == 0 && executed(df).contains("DriverAggregate "), executed(df))
+      assert(ScanLedger.retries.get() == 4L && ScanLedger.lastSplitCount == 4,
+        s"${ScanLedger.retries.get()} retries over ${ScanLedger.lastSplitCount} splits")
+      assert(rows == onJobPath(q)._1, s"rows $rows")
+    }
+  }
+
+  test("aggregates the driver does not fold keep the job path") {
+    noCache {
+      val t = "graft.seq.numbers"
+      val cases = Seq(
+        s"SELECT count(DISTINCT x) FROM $t WHERE id < 5000" -> Seq(97L),
+        s"SELECT count(*) FILTER (WHERE x < 10) FROM $t WHERE id < 970" -> Seq(100L),
+        s"SELECT percentile_approx(id, 0.5, 10000) FROM $t WHERE id < 1001" -> Seq(500L))
+      val wrong = cases.flatMap { case (q, want) =>
+        val df = spark.sql(q)
+        val (rows, jobs) = jobsOf(df.collect().map(_.toSeq).toSeq)
+        if (rows == Seq(want) && jobs >= 1 && !executed(df).contains("DriverAggregate ")) None
+        else Some(s"$q: $jobs jobs, rows $rows, want ${Seq(want)}\n${executed(df)}")
+      }
+      assert(wrong.isEmpty, wrong.mkString("\n"))
+      val (rows, plan) = onJobPath(s"SELECT count(*), sum(x) FROM $t WHERE id < 1000")
+      assert(rows == Seq(Seq(1000L, (0L until 1000L).map(i => (i * 7) % 97).sum)) &&
+        !plan.contains("DriverAggregate "), plan)
+      atBigN {
+        // 2,000,000 rows of x: 80 MB by the scan's estimate, over the 10 MB threshold
+        val df = spark.sql(s"SELECT count(*), sum(x) FROM $t")
+        val (big, jobs) = jobsOf(df.collect().map(_.toSeq).toSeq)
+        assert(big == Seq(Seq(bigN, (0L until bigN).map(i => (i * 7) % 97).sum)) && jobs >= 1 &&
+          !executed(df).contains("DriverAggregate "), s"$big with $jobs jobs\n${executed(df)}")
+      }
+    }
+  }
+
+  test("a scan plans its splits once per context") {
+    Graft.registerPlugin(CountingPlugin)
+    noCache {
+      CountingPlugin.splitCalls.set(0)
+      val pushed = spark.read.format("graft").option("plugin", "counting").option("table", "numbers")
+        .load().filter(col("id") >= 10L && col("id") < 9000L).agg(count(lit(1)), min(col("id")))
+      assert(pushed.collect().map(_.toSeq).toSeq == Seq(Seq(8990L, 10L)))
+      assert(executed(pushed).contains("aggs=["), executed(pushed))
+      // one probe while the aggregate is pushed, one for the scan itself
+      assert(CountingPlugin.splitCalls.get() == 2, s"${CountingPlugin.splitCalls.get()} calls")
     }
   }
 
