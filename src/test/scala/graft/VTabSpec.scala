@@ -1,8 +1,10 @@
 package graft
 
+import graft.plans.DriverScanStrategy
 import graft.sources.api._
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.internal.SQLConf
 
 /** `seq.numbers` behind a plugin that counts its `splits` calls. */
 object CountingPlugin extends Plugin {
@@ -821,6 +823,20 @@ class VTabSpec extends SparkSpec {
     }
   }
 
+  test("a one-page scan under an aggregate plans no Exchange and runs one job") {
+    noCache {
+      // with the broadcast threshold off, Spark's aggregate runs over the driver scan
+      Scoped.withConf(spark, "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
+        val df = numbers.filter(col("id") < 1000L).agg(sum(col("x")))
+        val (r, jobs) = jobsOf(df.head().getLong(0))
+        assert(r == (0L until 1000L).map(i => (i * 7) % 97).sum)
+        assert(jobs == 1, s"$jobs jobs")
+        val p = executed(df)
+        assert(p.contains("DriverScan ") && !p.contains("DriverAggregate ") && !p.contains("Exchange"), p)
+      }
+    }
+  }
+
   /** `sql`'s rows, and its executed plan, with no driver aggregate: the
     * broadcast threshold that gates it is off. */
   private def onJobPath(sql: String): (Seq[Seq[Any]], String) =
@@ -896,6 +912,18 @@ class VTabSpec extends SparkSpec {
         val (big, jobs) = jobsOf(df.collect().map(_.toSeq).toSeq)
         assert(big == Seq(Seq(bigN, (0L until bigN).map(i => (i * 7) % 97).sum)) && jobs >= 1 &&
           !executed(df).contains("DriverAggregate "), s"$big with $jobs jobs\n${executed(df)}")
+        // 100,000 rows: within the byte threshold, over the driver's row bound
+        val wide = spark.sql(s"SELECT sum(x) FROM $t WHERE id < 100000")
+        val stats = wide.queryExecution.optimizedPlan.collectFirst {
+          case r: org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation =>
+            r.scan.asInstanceOf[GraftScan].estimateStatistics()
+        }.get
+        assert(stats.numRows().getAsLong > DriverScanStrategy.MaxAggregateRows &&
+          stats.sizeInBytes().getAsLong <= SQLConf.get.autoBroadcastJoinThreshold,
+          s"${stats.numRows()} rows, ${stats.sizeInBytes()} bytes")
+        val (sum100k, wideJobs) = jobsOf(wide.head().getLong(0))
+        assert(sum100k == (0L until 100000L).map(i => (i * 7) % 97).sum && wideJobs >= 1 &&
+          !executed(wide).contains("DriverAggregate "), s"$sum100k with $wideJobs jobs\n${executed(wide)}")
       }
     }
   }
@@ -923,16 +951,22 @@ class VTabSpec extends SparkSpec {
         ("count(*)", true, Seq(0L)),
         ("count(*), min(id), max(id)", true, Seq(0L, null, null)),
         ("count(x), sum(x), min(id)", false, Seq(0L, null, null)))
-      val wrong = for {
+      // the driver aggregate, then, with the broadcast threshold off, Spark's
+      // aggregate over the driver scan's one partition
+      def wrong(driverAgg: Boolean) = for {
         w <- empty
         (a, pushed, want) <- aggs
         df = spark.sql(s"SELECT $a FROM graft.seq.numbers WHERE $w")
         rows = df.collect().map(_.toSeq).toSeq
         p = executed(df)
-        if rows != Seq(want) || !p.contains("DriverScan ") || p.contains("aggs=[") != pushed
+        if rows != Seq(want) || !p.contains("DriverScan ") || p.contains("aggs=[") != pushed ||
+          p.contains("DriverAggregate ") != driverAgg || p.contains("Exchange")
       } yield s"$a WHERE $w: rows $rows, want ${Seq(want)}\n$p"
-      assert(wrong.isEmpty, wrong.mkString("\n"))
+      val onDriver = wrong(driverAgg = true)
+      assert(onDriver.isEmpty, onDriver.mkString("\n"))
       Scoped.withConf(spark, "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
+        val underSpark = wrong(driverAgg = false)
+        assert(underSpark.isEmpty, underSpark.mkString("\n"))
         val nothing = numbers.filter(col("id") >= 20000L).select(col("id").as("k"), col("s"))
         val df = numbers.filter(col("id") < 3000L).select("id")
           .join(nothing, col("id") === col("k"), "left_outer")
