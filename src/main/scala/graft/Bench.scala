@@ -51,7 +51,7 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = GraftSession.cores
-    val spark = GraftSession(cpus)
+    val spark = GraftSession.harness()
     warmUp(spark, sfDir)
 
     val telemetry = new BenchTelemetry
@@ -60,37 +60,32 @@ object Bench {
 
     // A failed entry is recorded by NAME and excluded from timings — a
     // sub-second analysis failure must never masquerade as a measurement
-    // (same discipline as BenchScale's failed[]).
-    val timed = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
+    // (same discipline as BenchScale's failed[]). Its telemetry row is
+    // still kept.
+    val timed = SparkEntry.each(spark, SparkEntry.queries, "bench") { (name, fn) =>
       val s0 = telemetry.snap()
       val t0 = System.nanoTime()
-      val ok = try { fn(spark, sfDir).write.format("noop").mode("overwrite").save(); true }
-      catch { case e: Throwable =>
-        System.err.println(s"[bench] $name failed: ${e.getMessage}")
-        false
+      try {
+        fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+        (System.nanoTime() - t0) / 1e9
+      } finally {
+        val s1 = telemetry.snap()
+        val d = s1.zip(s0).map { case (a, b) => a - b }
+        // Storage memory currently pinned (MB), taken before the loop
+        // releases the entry's pins: detects cache accumulation across the
+        // register (the r13 concern that entry-local pins bleed storage
+        // for the remaining ~200 entries).
+        val storageMB = spark.sparkContext.getRDDStorageInfo.map(_.memSize).sum >> 20
+        val rt = Runtime.getRuntime
+        val heapMB = (rt.totalMemory() - rt.freeMemory()) >> 20
+        telemetryRows += name -> (s"""{"task_gc_ms":${d(0)},"task_run_ms":${d(1)},""" +
+          s""""task_cpu_ms":${d(2)},"spill_mb":${d(3)},"disk_spill_mb":${d(4)},""" +
+          s""""shuf_read_mb":${d(5)},"shuf_write_mb":${d(6)},"drv_gc_ms":${d(7)},""" +
+          s""""proc_cpu_ms":${d(8)},"storage_mb":$storageMB,"heap_mb":$heapMB}""")
       }
-      val wall = (System.nanoTime() - t0) / 1e9
-      val s1 = telemetry.snap()
-      val d = s1.zip(s0).map { case (a, b) => a - b }
-      // Storage memory currently pinned (MB): detects cache accumulation
-      // across the register (the r13 concern that entry-local pins bleed
-      // storage for the remaining ~200 entries).
-      val storageMB = spark.sparkContext.getRDDStorageInfo.map(_.memSize).sum >> 20
-      val rt = Runtime.getRuntime
-      val heapMB = (rt.totalMemory() - rt.freeMemory()) >> 20
-      telemetryRows += name -> (s"""{"task_gc_ms":${d(0)},"task_run_ms":${d(1)},""" +
-        s""""task_cpu_ms":${d(2)},"spill_mb":${d(3)},"disk_spill_mb":${d(4)},""" +
-        s""""shuf_read_mb":${d(5)},"shuf_write_mb":${d(6)},"drv_gc_ms":${d(7)},""" +
-        s""""proc_cpu_ms":${d(8)},"storage_mb":$storageMB,"heap_mb":$heapMB}""")
-      // Entry-scoped cache hygiene (outside the timed region — the entry's
-      // persists and their materialization were all paid inside it): one
-      // entry's working caches must not occupy storage memory for the
-      // remaining ~200 entries. Warmup memos are kept.
-      operators.OpCache.releaseScoped(spark)
-      (name, wall, ok)
     }
-    val results = timed.collect { case (n, sec, true) => n -> sec }
-    val failed = timed.collect { case (n, _, false) => n }
+    val results = timed.collect { case (n, Right(sec)) => n -> sec }
+    val failed = timed.collect { case (n, Left(_)) => n }
     val total = results.map(_._2).sum
 
     // Full per-query timings to a file named per core count, so a run at
@@ -192,7 +187,6 @@ object Bench {
     operators.TextOps.warmGram3(spark, sfDir)
     operators.Multimodal.warmPhashIndex(spark, sfDir)
     operators.Curation2.warmBpe(spark, sfDir)
-    streaming.Streams.useTmpfsCheckpoints(spark) // replay ckpts are scratch
     streaming.Streams.warmStaging(spark, sfDir)
   }
 }

@@ -9,66 +9,41 @@ package graft
   * medians are kept for dispersion context.
   *
   * Runs the FULL SparkEntry inventory by default; pass a regex to narrow
-  * for quick iteration.
+  * for quick iteration — with a name regex it is the per-entry timer,
+  * e.g. `BenchScale <sfDir> 3 /tmp/t.json '^q_agg_basic$'`.
   *
   * Usage: runMain graft.BenchScale <sfDir> [iters=3] [outFile] [nameRegex] */
 object BenchScale {
-  /** Heaviest/scale-critical entries (round-4/5 subset) — kept as the
-    * quick-iteration filter `subset`. */
-  val subset: Seq[String] = Seq(
-    "dd_pipeline", "dd_ngram_jaccard", "dd_cluster", "mm_phash_cluster",
-    "mm_phash", "ann_pq", "ann_ivf", "ann_ivf_pq", "ann_lsh",
-    "dd_semantic", "dd_semantic_hier",
-    "dd_bloom_gate", "dd_exact", "ta_tfidf", "ta_line_dedup",
-    "dd_canonical", "ta_bm25",
-    "q_agg_basic", "q_join_inner", "q_sessionize")
-
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val iters = args.lift(1).map(_.toInt).getOrElse(3)
     val outFile = args.lift(2).getOrElse("bench_scale.json")
-    val nameFilter = args.lift(3).map(_.r)
-    val cpus = GraftSession.cores
-    // At sf ≥ 1 the sf0.1 default (one shuffle partition per core) makes
-    // partitions outgrow executor memory and spill; raising the INITIAL
-    // partition count and letting AQE coalesce small stages back down
-    // (Spark's default) is the scale-ready shape (SPARK_GRAFT_SHUFFLE=256
-    // for the sf1 run).
-    val spark = GraftSession(cpus,
-      "spark.sql.shuffle.partitions" -> sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus))
+    val spark = GraftSession.harness()
     Bench.warmUp(spark, sfDir) // same warm-up as Bench
 
-    val names = SparkEntry.queries.keys.toSeq.sorted
-      .filter(n => nameFilter.forall(_.findFirstIn(n).isDefined))
-    // A failed iteration must NOT contribute its (near-zero) wall time as
-    // a bogus minimum, and the failure must survive into the JSON — a
-    // silently-corrupted min_total invalidates every scaling conclusion
-    // downstream (tools/pool_mins.py refuses failed entries). NonFatal
-    // only: an OOM should kill the run, not be recorded as a data point.
-    // FIRST iteration kept alongside min: OpCache memos and entry-local
-    // persists make later iterations reflect the warmest run, so the min
-    // is the AMORTIZED cost and the first successful iteration is the
-    // cold cost — both are real, and BENCH_ALL carries both.
-    val results = names.map { name =>
-      val fn = SparkEntry.queries(name)
-      val times = (0 until iters).flatMap { _ =>
-        val t0 = System.nanoTime()
-        try {
+    // An entry any of whose iterations throws is failed: its (near-zero)
+    // wall times must NOT become a bogus minimum, and the failure must
+    // survive into the JSON — a silently-corrupted min_total invalidates
+    // every scaling conclusion downstream (tools/pool_mins.py refuses
+    // failed entries). FIRST iteration kept alongside min: OpCache memos
+    // and entry-local persists make later iterations reflect the warmest
+    // run (the loop releases an entry's pins only after all of its
+    // iterations), so the min is the AMORTIZED cost and the first
+    // iteration is the cold cost — both are real, and BENCH_ALL carries
+    // both.
+    val results = SparkEntry.each(spark, SparkEntry.queries, "bench-scale", args.lift(3)) {
+      (name, fn) =>
+        val times = (0 until iters).map { _ =>
+          val t0 = System.nanoTime()
           fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-          Some((System.nanoTime() - t0) / 1e9)
-        } catch { case scala.util.control.NonFatal(e) =>
-          System.err.println(s"[bench-scale] $name FAILED: ${e.getMessage}")
-          None
+          (System.nanoTime() - t0) / 1e9
         }
-      }
-      System.err.println(f"[bench-scale] $name: ${times.mkString("s, ")}s")
-      // entry-scoped cache hygiene BETWEEN entries; within an entry the
-      // iterations deliberately keep their persists (warm-min semantics)
-      operators.OpCache.releaseScoped(spark)
-      val sorted = times.sorted
-      if (sorted.isEmpty) (name, None, None, None)
-      else (name, Some(sorted.head), Some(sorted(sorted.length / 2)),
-        Some(times.head))
+        System.err.println(f"[bench-scale] $name: ${times.mkString("s, ")}s")
+        val sorted = times.sorted
+        (sorted.head, sorted(sorted.length / 2), times.head)
+    }.map {
+      case (name, Right((min, median, first))) => (name, Some(min), Some(median), Some(first))
+      case (name, Left(_)) => (name, None, None, None)
     }
     val line = record(results, iters, sfDir)
     java.nio.file.Files.write(java.nio.file.Paths.get(outFile),

@@ -10,9 +10,7 @@ object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val names = if (args.length > 1) args.drop(1).toSeq else SparkEntry.queries.keys.toSeq.sorted
-    // extra confs as in TimeQ (SPARK_GRAFT_CONF="k=v;k2=v2") — e.g.
-    // dumping an eager AQE-off entry's plan under its execution conf
-    val spark = GraftSession("8", TimeQ.envConfs: _*)
+    val spark = GraftSession("8")
     names.foreach { n =>
       println(s"\n================ $n ================")
       try {

@@ -44,6 +44,15 @@ object GraftSession {
 
   def apply(extra: (String, String)*): SparkSession = apply(cores, extra: _*)
 
+  /** The harness mains' session: the standard one, then `extra`. At
+    * sf >= 1 one shuffle partition per core makes partitions outgrow
+    * executor memory and spill, so SPARK_GRAFT_SHUFFLE, when set, raises
+    * the initial width and AQE coalesces small stages back down (256 for
+    * the sf1 runs). */
+  def harness(extra: (String, String)*): SparkSession =
+    apply(cores, sys.env.get("SPARK_GRAFT_SHUFFLE")
+      .map("spark.sql.shuffle.partitions" -> _).toSeq ++ extra: _*)
+
   def apply(cores: String, extra: (String, String)*): SparkSession = {
     val b = SparkSession.builder()
     (confs(cores) ++ extra).foreach { case (k, v) => b.config(k, v) }

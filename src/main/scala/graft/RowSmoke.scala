@@ -23,10 +23,7 @@ object RowSmoke {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val outFile = args.lift(1).getOrElse("rowsmoke.json")
-    val nameFilter = args.lift(2).map(_.r)
-    val cpus = GraftSession.cores
-    val spark = GraftSession(cpus,
-      "spark.sql.shuffle.partitions" -> sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus))
+    val spark = GraftSession.harness()
     // table-subset dirs (the sf10 tile) only carry some tables: entries
     // whose inputs are absent throw, and on a subset dir that is a SKIP,
     // not a failure. The skip decision is PER ENTRY: an error is a skip
@@ -38,20 +35,14 @@ object RowSmoke {
     // fails LOUD (entry lands in errored) rather than silently skipping.
     def has(t: String) = new java.io.File(s"$sfDir/$t.parquet").exists()
     val missing = Tables.all.filterNot(has)
-    val counts = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (n, _) => nameFilter.forall(_.findFirstIn(n).isDefined) }
-      .map { case (name, fn) =>
-        // keep the FULL message in Left: the missing-table skip decision
-        // below greps it for the parquet path, which Spark often prints
-        // deep inside a long analysis message — truncating here could
-        // cut the path out and misclassify a skip as a failure. The
-        // 200-char cap is applied only at JSON emission.
-        val rows = try Right(fn(spark, sfDir).count())
-          catch { case e: Throwable => Left(String.valueOf(e.getMessage)) }
-        // entry-scoped cache hygiene: see OpCache.releaseScoped
-        operators.OpCache.releaseScoped(spark)
-        name -> rows
-      }
+    // the loop keeps the FULL message in Left: the missing-table skip
+    // decision below greps it for the parquet path, which Spark often
+    // prints deep inside a long analysis message — truncating could cut
+    // the path out and misclassify a skip as a failure. The 200-char cap
+    // is applied only at JSON emission.
+    val counts = SparkEntry.each(spark, SparkEntry.queries, "row-smoke", args.lift(2)) {
+      (_, fn) => fn(spark, sfDir).count()
+    }
     val emptyBad = counts.collect {
       case (n, Right(0L)) if !mayBeEmpty(n) => n
     }

@@ -35,4 +35,31 @@ object SparkEntry {
     * the same parquet tables. Omitted for non-SQL-expressible ops. */
   def oracleSql: Map[String, String] =
     allDefs.flatMap(q => q.oracle.map(q.name -> _)).toMap
+
+  /** Whether `name` is picked by an optional name regex (none picks all). */
+  def picked(only: Option[String])(name: String): Boolean =
+    only.forall(_.r.findFirstIn(name).isDefined)
+
+  /** The harness loop every main runs its entries through: `use` on each
+    * of `entries` that `only` picks, in name order. Stream replays
+    * checkpoint on tmpfs. Anything an entry's `use` throws is that entry's
+    * failure: logged as `[tag] name failed: …`, kept with its full message
+    * (a caller may grep it), and the next entry still runs. After every
+    * entry its scoped pins are released (see `OpCache.releaseScoped`), so
+    * one entry's working caches never hold storage memory through the
+    * entries after it, and a region `use` times never pays for the
+    * release. */
+  def each[T](spark: SparkSession, entries: Map[String, (SparkSession, String) => DataFrame],
+      tag: String, only: Option[String] = None)(
+      use: (String, (SparkSession, String) => DataFrame) => T): Seq[(String, Either[String, T])] = {
+    streaming.Streams.useTmpfsCheckpoints(spark) // replay ckpts are scratch
+    entries.toSeq.filter(e => picked(only)(e._1)).sortBy(_._1).map { case (name, fn) =>
+      val result: Either[String, T] = try Right(use(name, fn)) catch { case e: Throwable =>
+        val message = String.valueOf(e.getMessage)
+        System.err.println(s"[$tag] $name failed: $message")
+        Left(message)
+      } finally operators.OpCache.releaseScoped(spark)
+      name -> result
+    }
+  }
 }

@@ -20,28 +20,16 @@ object Verify {
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir) = (args(0), args(1))
     // optional third arg: regex over query names, for fast local iteration
-    val nameFilter = args.lift(2).map(_.r)
-    val spark = GraftSession("spark.sql.parquet.outputTimestampType" -> "TIMESTAMP_MICROS")
-    streaming.Streams.useTmpfsCheckpoints(spark) // replay ckpts are scratch
+    val only = args.lift(2)
+    val spark = GraftSession.harness("spark.sql.parquet.outputTimestampType" -> "TIMESTAMP_MICROS")
     new java.io.File(outDir).mkdirs()
     // An entry that throws leaves no parquet, and a downstream compare
     // that iterates the out dir would silently shrink — record every
     // failure by name in _failed.json so absence is always visible.
-    val failed = scala.collection.mutable.ArrayBuffer[(String, String)]()
-    SparkEntry.queries
-      .filter { case (name, _) => nameFilter.forall(_.findFirstIn(name).isDefined) }
-      .foreach { case (name, fn) =>
-        try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-          .parquet(s"$outDir/$name")
-        catch { case e: Throwable =>
-          System.err.println(s"[verify] $name failed: ${e.getMessage}")
-          failed += name -> String.valueOf(e.getMessage).take(500)
-        }
-        // entry-scoped cache hygiene: see OpCache.releaseScoped
-        operators.OpCache.releaseScoped(spark)
-      }
-    val json = SparkEntry.oracleSql
-      .filter { case (k, _) => nameFilter.forall(_.findFirstIn(k).isDefined) }
+    val failed = SparkEntry.each(spark, SparkEntry.queries, "verify", only) { (name, fn) =>
+      fn(spark, sfDir).coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
+    }.collect { case (name, Left(message)) => name -> message.take(500) }
+    val json = SparkEntry.oracleSql.filter(e => SparkEntry.picked(only)(e._1))
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     // the sf1+ sweep's memoized-oracle plan (tools/verify_sweep.py):

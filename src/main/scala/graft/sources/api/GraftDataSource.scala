@@ -233,7 +233,6 @@ class GraftScanBuilder(pluginAlias: String, table: ApiTable, config: PluginConfi
     val cacheTtl = math.min(
       spark.conf.get("spark.graft.cache.ttl", "300").toLong,
       envMaxTtl.getOrElse(Long.MaxValue))
-    pushedAggs.foreach(a => ScanLedger.lastPushedAggs = a)
     GraftScan(pluginAlias, table, config, qc, requiredSchema, cacheEnabled, cacheTtl,
       pushedAggs)
   }
@@ -326,10 +325,8 @@ case class GraftScan(pluginAlias: String, table: ApiTable, config: PluginConfig,
     table.keyColumns.map(_.name).filter(prunedSchema.fieldNames.contains)
       .map(Expressions.column).toArray
 
-  override def filter(predicates: Array[Predicate]): Unit = {
+  override def filter(predicates: Array[Predicate]): Unit =
     runtimeQuals = predicates.toSeq.flatMap(GraftScanBuilder.qualOf)
-    ScanLedger.lastRuntimeQuals = runtimeQuals
-  }
 
   /** Compile-time context + runtime quals. The source-side limit is kept
     * only if the runtime quals are exactly enforced too (same safety rule

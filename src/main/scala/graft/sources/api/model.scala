@@ -409,12 +409,9 @@ object ScanLedger {
   val retries = new AtomicLong(0)
   @volatile var lastQc: Option[QueryContext] = None
   @volatile var lastSplitCount: Int = -1
-  @volatile var lastRuntimeQuals: Seq[Qual] = Nil
-  @volatile var lastPushedAggs: Seq[AggSpec] = Nil
   def record(qc: QueryContext): Unit = { scans.incrementAndGet(); lastQc = Some(qc) }
   def reset(): Unit = {
     scans.set(0); retries.set(0); lastQc = None; lastSplitCount = -1
-    lastRuntimeQuals = Nil; lastPushedAggs = Nil
     FlakyTable.resetAttempts()
   }
 }

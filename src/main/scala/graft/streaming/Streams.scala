@@ -105,7 +105,7 @@ object Streams {
       }
     }
 
-  /** Harness opt-in (Bench/Verify/TimeQ/BenchScale): point the replay
+  /** Harness opt-in (`SparkEntry.each`): point the replay
     * checkpoints at tmpfs when available and no explicit dir is set. */
   def useTmpfsCheckpoints(s: SparkSession): Unit =
     if (s.conf.getOption("spark.graft.stream.checkpointDir").isEmpty &&

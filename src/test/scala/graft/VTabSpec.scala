@@ -3,6 +3,8 @@ package graft
 import graft.plans.DriverScanStrategy
 import graft.sources.api._
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.internal.SQLConf
 
@@ -303,9 +305,9 @@ class VTabSpec extends SparkSpec {
         .select("id", "x").count()
       assert(n == 5)
       val keys = dim.collect().map(_.getAs[Number](0).longValue).toSet
-      assert(ScanLedger.lastRuntimeQuals.map(q => (q.field, q.op)) == Seq(("id", "in")) &&
-        ScanLedger.lastRuntimeQuals.head.value.asInstanceOf[Seq[Any]].toSet == keys,
-        s"runtime IN qual must reach the scan, got ${ScanLedger.lastRuntimeQuals}")
+      assert(inQuals.map(q => (q.field, q.op)) == Seq(("id", "in")) &&
+        inQuals.head.value.asInstanceOf[Seq[Any]].toSet == keys,
+        s"runtime IN qual must reach the scan, got ${ScanLedger.lastQc}")
       assert(ScanLedger.lastSplitCount == 1,
         s"5 build-side keys on page [0, 2500) must become 1 probe split, got " +
           s"${ScanLedger.lastSplitCount}")
@@ -342,9 +344,9 @@ class VTabSpec extends SparkSpec {
         }.toSet
         assert(supp.nonEmpty && got == want, s"got $got, want $want")
         val keys = supp.map(_._1).toSet
-        assert(ScanLedger.lastRuntimeQuals.map(q => (q.field, q.op)) == Seq(("id", "in")) &&
-          ScanLedger.lastRuntimeQuals.head.value.asInstanceOf[Seq[Any]].toSet == keys,
-          s"the build side's keys must reach the scan, got ${ScanLedger.lastRuntimeQuals}")
+        assert(inQuals.map(q => (q.field, q.op)) == Seq(("id", "in")) &&
+          inQuals.head.value.asInstanceOf[Seq[Any]].toSet == keys,
+          s"the build side's keys must reach the scan, got ${ScanLedger.lastQc}")
         val pages = keys.map(_ / 2500L).size
         assert(ScanLedger.lastSplitCount == pages,
           s"${keys.size} supplier keys on $pages pages must become $pages probe splits, " +
@@ -368,7 +370,7 @@ class VTabSpec extends SparkSpec {
         val plan = df.queryExecution.executedPlan.toString
         assert(plan.contains("dynamicpruningexpression(true)"),
           "no runtime subquery for a build side this large\n" + plan)
-        assert(ScanLedger.lastRuntimeQuals.isEmpty)
+        assert(ScanLedger.lastQc.nonEmpty && inQuals.isEmpty, s"got ${ScanLedger.lastQc}")
       }
     }
   }
@@ -405,13 +407,14 @@ class VTabSpec extends SparkSpec {
       // odd keys from 5 to 9903: no page bound is a key, so an answer
       // taken from the page bounds cannot pass
       val keys = 5L until 9905L by 2L
-      val r = numbers.filter(col("id").isin(keys: _*))
-        .agg(count(lit(1)), min(col("id")), max(col("id"))).head()
+      val agg = numbers.filter(col("id").isin(keys: _*))
+        .agg(count(lit(1)), min(col("id")), max(col("id")))
+      val r = agg.head()
       assert((r.getLong(0), r.getLong(1), r.getLong(2)) == ((keys.length.toLong, keys.min, keys.max)),
         s"got $r for ${keys.length} keys in [${keys.min}, ${keys.max}]")
-      assert(ScanLedger.lastPushedAggs.map(_.fn) == Seq("count_star", "min", "max") &&
+      assert(pushedAggs(agg).map(_.fn) == Seq("count_star", "min", "max") &&
         ScanLedger.lastSplitCount <= 4,
-        s"the aggregate must be pushed over page splits, got ${ScanLedger.lastPushedAggs} " +
+        s"the aggregate must be pushed over page splits, got ${pushedAggs(agg)} " +
           s"over ${ScanLedger.lastSplitCount} splits")
     }
   }
@@ -420,11 +423,12 @@ class VTabSpec extends SparkSpec {
       "(SupportsPushDownAggregates partial mode)") {
     noCache {
       ScanLedger.reset()
-      val r = numbers.filter(col("id") >= 1000L && col("id") < 9000L)
-        .agg(count(lit(1)), min(col("id")), max(col("id"))).head()
+      val agg = numbers.filter(col("id") >= 1000L && col("id") < 9000L)
+        .agg(count(lit(1)), min(col("id")), max(col("id")))
+      val r = agg.head()
       assert((r.getLong(0), r.getLong(1), r.getLong(2)) == ((8000L, 1000L, 8999L)))
-      assert(ScanLedger.lastPushedAggs.map(_.fn) == Seq("count_star", "min", "max"),
-        s"aggs must reach the builder, got ${ScanLedger.lastPushedAggs}")
+      assert(pushedAggs(agg).map(_.fn) == Seq("count_star", "min", "max"),
+        s"aggs must reach the builder, got ${pushedAggs(agg)}")
       assert(ScanLedger.scans.get() == 0,
         "closed-form aggregates must not paginate the plugin")
     }
@@ -681,8 +685,6 @@ class VTabSpec extends SparkSpec {
   }
 
   test("packed scan: 800 splits run as at most leaf-parallelism tasks") {
-    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
-    import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
     atBigN {
       noCache {
         ScanLedger.reset()
@@ -767,6 +769,15 @@ class VTabSpec extends SparkSpec {
   }
 
   private def executed(df: DataFrame): String = df.queryExecution.executedPlan.toString
+
+  /** The aggregates pushed into the connector scan of `df`'s executed plan. */
+  private def pushedAggs(df: DataFrame): Seq[AggSpec] =
+    new AdaptiveSparkPlanHelper {}.collectFirst(df.queryExecution.executedPlan) {
+      case b: BatchScanExec => b.scan
+    }.collect { case g: GraftScan => g.pushedAggs.toSeq.flatten }.getOrElse(Nil)
+
+  /** The `IN` quals of the last query context that reached the plugin. */
+  private def inQuals: Seq[Qual] = ScanLedger.lastQc.toSeq.flatMap(_.quals.filter(_.op == "in"))
 
   test("a scan of at most one page runs on the driver: no job for a point, " +
       "an IN list, an ordered page or a kv GET") {
@@ -1016,7 +1027,7 @@ class VTabSpec extends SparkSpec {
         val agg = numbers.filter(col("id") >= 1000L && col("id") < 1001000L)
           .agg(count(lit(1)), min(col("id")), max(col("id")))
         assert(agg.head().getLong(0) == 1000000L)
-        assert(ScanLedger.lastPushedAggs.nonEmpty && ScanLedger.lastSplitCount == 400)
+        assert(pushedAggs(agg).nonEmpty && ScanLedger.lastSplitCount == 400)
         assert(estimate(agg) == 400L, s"estimate ${estimate(agg)}, want one row per split")
         assert(executed(agg).contains("DriverScan ") && !executed(agg).contains("Exchange"),
           executed(agg))
