@@ -28,40 +28,22 @@ object Curation2 {
   private val toksExpr = "filter(split(text, ' '), t -> t <> '')"
 
   /** BPE batch size: merges learned per iteration (M), from a top-2M
-    * candidate pool (K). The capacity knob on the VOCABULARY axis
+    * candidate pool (K). The capacity trade-off on the VOCABULARY axis
     * (SURVEY §5): the plan chain is O(iterations) deep, so a target
     * vocabulary of V merges costs V/M iterations of plan depth — at
     * M = 1 (the classic algorithm) a 30k-merge tokenizer would need a
     * 30k-stage plan; batching is the published scale path (one frequency
     * count amortizes across every merge in the batch).
     *
-    * Both axes are DEPLOYMENT CONFIG (the nprobe/LSH-banding discipline):
-    * `spark.graft.bpe.iters` / `spark.graft.bpe.batch` (env
-    * `SPARK_GRAFT_BPE_ITERS`/`SPARK_GRAFT_BPE_BATCH`), read ONCE at module
-    * init; the Spark chain's loop bound, its limits, AND the DuckDB
-    * oracle's unrolled CTE chain all derive from the same two ints, so an
-    * override (a V=256 vocabulary = 32 iterations × 8) can never split
-    * the engines. The candidate pool is derived (K = 2M — the pool must
-    * dominate the batch so parallel greedy has conflicts to skip).
-    * Malformed values fail loud and named — a typo'd vocabulary knob
-    * silently training the 40-merge default is a different tokenizer
-    * than the deployment configured. */
-  private[graft] val defaultBpeIters = 5
-  private[graft] val defaultBpeBatch = 8
-  private[graft] def bpeKnobNow(prop: String, env: String, dflt: Int): Int =
-    sys.props.get(prop).orElse(sys.env.get(env)).map { raw =>
-      val v = raw.trim.toIntOption.getOrElse(throw new IllegalArgumentException(
-        s"$prop must be a positive integer, got '$raw'"))
-      if (v <= 0) throw new IllegalArgumentException(
-        s"$prop must be a positive integer, got '$raw'")
-      v
-    }.getOrElse(dflt)
-  private[graft] def bpeConfigNow: (Int, Int) =
-    (bpeKnobNow("spark.graft.bpe.iters", "SPARK_GRAFT_BPE_ITERS", defaultBpeIters),
-      bpeKnobNow("spark.graft.bpe.batch", "SPARK_GRAFT_BPE_BATCH", defaultBpeBatch))
-  private[graft] lazy val bpeIters: Int = bpeConfigNow._1
-  private[graft] lazy val bpeBatch: Int = bpeConfigNow._2
-  private[graft] lazy val bpeCand: Int = 2 * bpeBatch
+    * Both axes are constants (a 40-merge vocabulary = 5 iterations × 8):
+    * the Spark chain's loop bound, its limits, AND the DuckDB oracle's
+    * unrolled CTE chain all derive from these two ints, so another
+    * vocabulary size means editing them, which re-derives entry and
+    * oracle together. The candidate pool is derived (K = 2M — the pool
+    * must dominate the batch so parallel greedy has conflicts to skip). */
+  private[graft] final val bpeIters = 5
+  private[graft] final val bpeBatch = 8
+  private[graft] final val bpeCand = 2 * bpeBatch
 
   /** The declarative BATCHED BPE chain shared by ta_bpe_learn (the merge
     * table) and ta_bpe_apply (the final vocabulary symbol table). Per
@@ -80,8 +62,8 @@ object Curation2 {
   private def bpeChain(s: SparkSession, d: String): (DataFrame, DataFrame) =
     bpeChainImpl(s, d, cut = true, bpeIters, bpeBatch, bpeCand)
 
-  /** Config-parameterized constructor — GenScaleSpec exercises an
-    * overridden (iters, batch) through the SAME chain the entries run. */
+  /** (iters, batch)-parameterized constructor — GenScaleSpec runs another
+    * (iters, batch) through the SAME chain the entries run. */
   private[graft] def bpeChainWith(s: SparkSession, d: String,
       iters: Int, batch: Int): (DataFrame, DataFrame) =
     bpeChainImpl(s, d, cut = true, iters, batch, 2 * batch)
@@ -218,7 +200,7 @@ object Curation2 {
     * derived CTE inside a recursive part (word-INITIAL merges silently
     * skip — reproduced and pinned during round 10). Ends with
     * `b0..b{iters-1}` (merge rows) and `s{iters}` (final vocabulary
-    * syms). Unrolled from the SAME config ints the Spark chain runs. */
+    * syms). Unrolled from the SAME ints the Spark chain runs. */
   private[graft] def bpeSqlChainWith(iters: Int, batch: Int, cand: Int): String = {
     def iter(i: Int) =
       s"""p$i AS MATERIALIZED (SELECT pr.l AS l, pr.r AS r, CAST(sum(freq) AS BIGINT) AS cnt
@@ -472,21 +454,20 @@ object Curation2 {
              |SELECT vec_id, label, cos FROM s WHERE cos >= 0.10""".stripMargin)),
 
     // 173. BPE merge learning (Sennrich et al. 2016): learn iters × M
-    // merge rules (config; default 5 × 8 = 40, a V = 256 vocabulary is
-    // SPARK_GRAFT_BPE_ITERS=32 — oracle-verified, SURVEY §5 has the
-    // depth-cost curve) over the corpus vocabulary, fully declaratively —
-    // each
-    // iteration counts adjacent symbol pairs weighted by word frequency
-    // (explode → partial-agg groupBy), takes the argmax pair as a
-    // distributed TakeOrdered(1) (total order: cnt desc, l, r), broadcasts
-    // that ONE row back, and applies the greedy left-to-right merge as a
-    // per-word array fold. No collect, no driver loop over data: the 5
-    // iterations are a fixed plan chain whose per-iteration working set is
-    // the VOCABULARY (≪ corpus; persisted once), so at 100 TB the corpus
-    // is read exactly once for the word count and never again. Oracle:
-    // the same 5 iterations unrolled as recursive CTEs (the merge fold is
-    // a per-word positional recursion), MATERIALIZED so DuckDB doesn't
-    // inline-re-evaluate the iteration chain.
+    // merge rules (the bpeIters × bpeBatch constants, 5 × 8 = 40; SURVEY
+    // §5 has the depth-cost curve) over the corpus vocabulary, fully
+    // declaratively — each iteration counts adjacent symbol pairs
+    // weighted by word frequency (explode → partial-agg groupBy), takes
+    // the argmax pair as a distributed TakeOrdered(1) (total order: cnt
+    // desc, l, r), broadcasts that ONE row back, and applies the greedy
+    // left-to-right merge as a per-word array fold. No collect, no driver
+    // loop over data: the 5 iterations are a fixed plan chain whose
+    // per-iteration working set is the VOCABULARY (≪ corpus; persisted
+    // once), so at 100 TB the corpus is read exactly once for the word
+    // count and never again. Oracle: the same 5 iterations unrolled as
+    // recursive CTEs (the merge fold is a per-word positional recursion),
+    // MATERIALIZED so DuckDB doesn't inline-re-evaluate the iteration
+    // chain.
     GraftQuery("ta_bpe_learn", (s, d) => bpeChain(s, d)._1,
       Some(s"""$bpeSqlChain
              |SELECT * FROM (

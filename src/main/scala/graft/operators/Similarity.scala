@@ -83,107 +83,38 @@ object Similarity {
     * axis the row/hash oracle cannot see (it recomputes the same probes).
     * √K keeps per-query candidate mass sublinear (≈ √K·clusterTarget,
     * ≤ 256·256 vectors at the K cap) while the probed fraction shrinks
-    * only as 1/√K; the recall floor is spec-pinned (GenScaleSpec) and the
-    * oracle derives the SAME nprobe from its centroid count, so both
-    * engines stay in lockstep at every sf. ceil∘sqrt is exact cross-engine
-    * (IEEE sqrt is correctly rounded; K ≤ 65536 is double-exact). */
-  private[graft] def defaultNProbe(k: Int): Int =
+    * only as 1/√K; the recall floor is spec-pinned (GenScaleSpec). The
+    * rule is a constant of the engine, not a setting: the oracle derives
+    * the SAME nprobe from its centroid count (`ivfNProbeSql`), so a
+    * different rule means editing both functions together. ceil∘sqrt is
+    * exact cross-engine (IEEE sqrt is correctly rounded; K ≤ 65536 is
+    * double-exact). */
+  private[graft] def ivfNProbe(k: Int): Int =
     math.max(8, math.ceil(math.sqrt(k.toDouble)).toInt)
 
-  /** The recall-SLA override (SURVEY §5: holding constant recall on
-    * adversarial data needs nprobe ∝ K, which the √K default does not
-    * give — a deployment with an SLA sets its own probe count). Read from
-    * the JVM system property `spark.graft.ann.nprobe` (or env
-    * `SPARK_GRAFT_ANN_NPROBE`) ONCE, when this module initializes: both
-    * the Spark entries and their DuckDB oracle SQL derive from this one
-    * value, so an override can never split the two engines — lockstep is
-    * structural, not coincidental. */
-  private[graft] def nProbeOverrideNow: Option[Int] =
-    sys.props.get("spark.graft.ann.nprobe")
-      .orElse(sys.env.get("SPARK_GRAFT_ANN_NPROBE"))
-      .map { raw =>
-        // an SLA knob must fail LOUD and NAMED on a bad value: a typo'd
-        // override silently falling back to the √K default would run a
-        // different recall posture than the one the deployment configured
-        val v = raw.trim.toIntOption.getOrElse(throw new IllegalArgumentException(
-          s"spark.graft.ann.nprobe must be a positive integer, got '$raw'"))
-        if (v <= 0) throw new IllegalArgumentException(
-          s"spark.graft.ann.nprobe must be a positive integer, got '$raw'")
-        v
-      }
-  private[graft] lazy val nProbeOverride: Option[Int] = nProbeOverrideNow
-
-  /** The production choice, parameterized so GenScaleSpec can exercise an
-    * overridden value through the same code path the entries use. */
-  private[graft] def nProbeFor(ov: Option[Int], k: Int): Int =
-    ov.getOrElse(defaultNProbe(k))
-  private[graft] def nProbeSqlFor(ov: Option[Int]): String =
-    ov.map(v => s"CAST($v AS BIGINT)").getOrElse(
-      "GREATEST(8, CAST(ceil(sqrt(CAST((SELECT COUNT(*) FROM c) AS DOUBLE))) AS BIGINT))")
-
-  private[graft] def ivfNProbe(k: Int): Int = nProbeFor(nProbeOverride, k)
-
   /** Oracle mirror of `ivfNProbe(K)`: derives K as COUNT(*) of the
-    * materialized centroid CTE `c` (or the override literal). */
-  private[operators] lazy val ivfNProbeSql: String = nProbeSqlFor(nProbeOverride)
+    * materialized centroid CTE `c`. */
+  private[operators] final val ivfNProbeSql =
+    "GREATEST(8, CAST(ceil(sqrt(CAST((SELECT COUNT(*) FROM c) AS DOUBLE))) AS BIGINT))"
 
-  /** The LSH banding deployment config (SURVEY §5): (bands, rows) sets the
-    * detection S-curve's threshold ~(1/bands)^(1/rows) — THE dedup recall/
-    * cost knob, which dd_lsh_curve (analytic) and dd_lsh_funnel (measured)
-    * exist to tune. Same discipline as `spark.graft.ann.nprobe`: read from
-    * the JVM system properties `spark.graft.lsh.bands` / `spark.graft.lsh
-    * .rows` (env `SPARK_GRAFT_LSH_BANDS`/`SPARK_GRAFT_LSH_ROWS`) ONCE at
-    * module init; every consumer — minhashPairs, its SQL mirror, the
-    * curve's exponent chain, the funnel — derives from the one value, so
-    * an override can never split the engines: lockstep is structural.
-    * Constraints fail LOUD and NAMED (a typo'd knob silently running the
-    * default banding would dedup at a different similarity threshold than
-    * the deployment configured): both knobs set together, positive, and
-    * bands·rows ≤ 64 (the MinHash signature width — banding past the
-    * signature would join on empty/short slices and candidate everything). */
-  private[graft] val defaultLshBands = 16
-  private[graft] val defaultLshRows = 4
-  private[graft] def lshConfigNow: Option[(Int, Int)] = {
-    val rawB = sys.props.get("spark.graft.lsh.bands")
-      .orElse(sys.env.get("SPARK_GRAFT_LSH_BANDS"))
-    val rawR = sys.props.get("spark.graft.lsh.rows")
-      .orElse(sys.env.get("SPARK_GRAFT_LSH_ROWS"))
-    if (rawB.isEmpty && rawR.isEmpty) None
-    else {
-      def parse(name: String, raw: Option[String]): Int = {
-        val str = raw.getOrElse(throw new IllegalArgumentException(
-          s"spark.graft.lsh.bands and spark.graft.lsh.rows must be set " +
-            s"together ($name is missing — half a banding config is a " +
-            "different S-curve than either the default or the intent)"))
-        val v = str.trim.toIntOption.getOrElse(throw new IllegalArgumentException(
-          s"$name must be a positive integer, got '$str'"))
-        if (v <= 0) throw new IllegalArgumentException(
-          s"$name must be a positive integer, got '$str'")
-        v
-      }
-      val b = parse("spark.graft.lsh.bands", rawB)
-      val r = parse("spark.graft.lsh.rows", rawR)
-      if (b * r > 64) throw new IllegalArgumentException(
-        s"spark.graft.lsh.bands * spark.graft.lsh.rows must be <= 64 " +
-          s"(the MinHash signature width), got $b * $r = ${b * r}")
-      Some((b, r))
-    }
-  }
-  private[graft] lazy val lshConfig: Option[(Int, Int)] = lshConfigNow
-  private[graft] def lshBandsFor(ov: Option[(Int, Int)]): Int =
-    ov.map(_._1).getOrElse(defaultLshBands)
-  private[graft] def lshRowsFor(ov: Option[(Int, Int)]): Int =
-    ov.map(_._2).getOrElse(defaultLshRows)
-  private[graft] lazy val lshBands: Int = lshBandsFor(lshConfig)
-  private[graft] lazy val lshRows: Int = lshRowsFor(lshConfig)
+  /** The LSH banding (SURVEY §5): (bands, rows) sets the detection
+    * S-curve's threshold ~(1/bands)^(1/rows) — the dedup recall/cost
+    * trade-off that dd_lsh_curve (analytic) and dd_lsh_funnel (measured)
+    * report. Constants: every consumer — minhashPairs, its SQL mirror,
+    * the curve's exponent chain, the funnel — derives from these two ints,
+    * so another banding means editing them, which re-derives entry and
+    * oracle together. bands·rows must stay ≤ 64 (the MinHash signature
+    * width). */
+  private[graft] final val lshBands = 16
+  private[graft] final val lshRows = 4
 
   /** x^n as a LEFT-FOLDED multiplication chain — `((x·x)·x)…` — on a Column.
     * Each step is one correctly-rounded IEEE multiply; DuckDB parses the
     * mirror string `x * x * … * x` left-associatively, so both engines
     * evaluate the identical operation sequence and the doubles are
     * bit-exact cross-engine (no libm pow on either side). The chain length
-    * is the banding config in exponent form: generating BOTH sides from
-    * the same (bands, rows) ints is what makes the curve re-tunable. */
+    * is the banding in exponent form: BOTH sides are generated from the
+    * same (bands, rows) ints, so an edited banding moves both together. */
   private[graft] def powChain(x: Column, n: Int): Column =
     (2 to n).foldLeft(x)((acc, _) => acc * x)
   private[graft] def powChainSql(x: String, n: Int): String =
@@ -239,8 +170,8 @@ object Similarity {
       .select("q_id", "rk", "n_id", "cos")
   }
 
-  /** IVF top-5 (corpus-scaled K, √K-or-override nprobe) as a reusable
-    * chain — see the ann_ivf entry for the full plan commentary. */
+  /** IVF top-5 (corpus-scaled K, √K nprobe) as a reusable chain — see
+    * the ann_ivf entry for the full plan commentary. */
   private[operators] def ivfTopk(s: SparkSession, d: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val base = vecs(s, d)
@@ -413,8 +344,8 @@ object Similarity {
   }
 
   /** Banding-parameterized pair index: the entry path calls it with the
-    * configured (lshBands, lshRows); GenScaleSpec exercises an overridden
-    * (b, r) through this SAME constructor — the nprobe discipline. */
+    * (lshBands, lshRows) constants; GenScaleSpec runs a stricter (b, r)
+    * through this SAME constructor to pin that candidate sets nest. */
   private[graft] def minhashPairsWith(s: SparkSession, d: String,
       bands: Int, rows: Int): DataFrame =
     OpCache.memo(s, s"mhpairs|$bands|$rows|$d") {
@@ -463,7 +394,7 @@ object Similarity {
     * DataFrame-construction time and returns a one-row literal, so Explain/
     * PlanAudit over the entry name print only a LocalRelation — this
     * exposes the real banding → prefilter → verify composition the entry
-    * runs (same constructors, same configured banding). */
+    * runs (same constructors, same banding). */
   private[graft] def lshFunnelChainForAudit(s: SparkSession, d: String): DataFrame = {
     val sh = mhShingles(s, d)
     val sigs = sh.withColumn("sig", expr("minhash_sig(sh)")).select("doc_id", "sig")
@@ -821,22 +752,21 @@ object Similarity {
              |FROM fp""".stripMargin)),
 
     // LSH banding S-CURVE report — the tuning eval next to emb_recall_eval
-    // (ANN recall): for the CONFIGURED (lshBands × lshRows) MinHash
-    // banding (default 16×4, override spark.graft.lsh.bands/.rows), one
-    // row per 0.05 similarity bucket with the analytic detection
+    // (ANN recall): for the (lshBands × lshRows) = 16×4 MinHash banding,
+    // one row per 0.05 similarity bucket with the analytic detection
     // probability p(s) = 1 − (1 − s^rows)^bands and the count of VERIFIED
     // near-dup pairs whose exact Jaccard lands in the bucket (the shared
     // memoized pair index — corpus cost is the index, the report is a
     // ≤21-row aggregate + grid join). A user reads off where the S-curve
-    // threshold (~(1/bands)^(1/rows), ≈ 0.5 at the default) sits against
+    // threshold (~(1/bands)^(1/rows), ≈ 0.5 at 16×4) sits against
     // the similarity mass their corpus actually contains, and what
     // detection floor the 0.7 verification cut implies (p(0.70) ≈ 0.988
     // at 16×4). Cross-engine float discipline: p(s) is a left-folded
     // MULTIPLICATION CHAIN (detectP/detectPSql) — every step correctly
     // rounded and identically associated on both engines, no libm pow;
-    // the chain length IS the (bands, rows) config in exponent form, and
-    // BOTH sides are generated from the same two ints, so re-tuning the
-    // banding re-tunes the curve in structural lockstep.
+    // the chain length IS the (bands, rows) pair in exponent form, and
+    // BOTH sides are generated from the same two constants, so editing
+    // the banding re-derives the curve in structural lockstep.
     GraftQuery("dd_lsh_curve", (s, d) => {
       val pc = minhashPairs(s, d)
         .select(floor(col("jacc") * 20).cast("long").as("bucket"))
@@ -862,7 +792,7 @@ object Similarity {
 
     // the MEASURED banding funnel — what an operator watches in
     // production next to dd_lsh_curve's analytic view: candidate pairs
-    // out of the CONFIGURED (lshBands × lshRows) band join, survivors of
+    // out of the (lshBands × lshRows) band join, survivors of
     // the signature-agreement prefilter (est ≥ 0.55), exact-verified
     // near-dups (jacc ≥ 0.7), and the stage yields. Candidate-count
     // blowup is the documented banding failure mode on low-entropy text

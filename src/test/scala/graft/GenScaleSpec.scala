@@ -290,107 +290,20 @@ class GenScaleSpec extends SparkSpec {
     assert(rHalf >= 0.9,
       s"recall@5 at nprobe=K/2 is $rHalf — the candidate chain is broken, " +
         "not merely under-probed")
-
-    // the recall-SLA override (spark.graft.ann.nprobe): exercises the
-    // SAME nProbeFor/nProbeSqlFor pair the entries and oracles derive
-    // from, so an override provably stays oracle-lockstep — the Spark
-    // side picks the literal and the oracle SQL emits the SAME literal
-    // (no centroid-count derivation to diverge from). recallAt(40, 39)
-    // above IS the overridden probe chain end-to-end: nprobe=39 where
-    // the default would pick 9, recall 0.40 → ≥0.9 — the knob's purpose.
-    val prev = sys.props.get("spark.graft.ann.nprobe")
-    try {
-      sys.props("spark.graft.ann.nprobe") = "39"
-      assert(Similarity.nProbeOverrideNow.contains(39),
-        "the system-property knob must parse")
-      assert(Similarity.nProbeFor(Similarity.nProbeOverrideNow, 78) == 39,
-        "an override replaces the √K default on the entry side")
-      assert(Similarity.nProbeSqlFor(Similarity.nProbeOverrideNow)
-        == "CAST(39 AS BIGINT)",
-        "the oracle SQL must emit the identical override literal")
-      // an SLA knob must fail LOUD and NAMED on a bad value — both the
-      // unparseable and the non-positive case (silently ignoring a typo'd
-      // override would run the default nprobe and miss the SLA invisibly)
-      Seq("8k", "", "0", "-3").foreach { bad =>
-        sys.props("spark.graft.ann.nprobe") = bad
-        val err = intercept[IllegalArgumentException](Similarity.nProbeOverrideNow)
-        assert(err.getMessage.contains("spark.graft.ann.nprobe"),
-          s"rejection for '$bad' must name the knob")
-      }
-    } finally {
-      prev.fold { sys.props.remove("spark.graft.ann.nprobe"); () } { v =>
-        sys.props("spark.graft.ann.nprobe") = v; ()
-      }
-    }
-    assert(Similarity.nProbeFor(None, 78) == Similarity.defaultNProbe(78),
-      "no override → the corpus-scaled default")
   }
 
-  test("LSH banding config: override parses and stays oracle-lockstep; " +
-      "detect_p chain matches pow; stricter banding nests") {
+  test("LSH banding: SQL embeds (b, r), detect_p matches pow, stricter banding nests") {
     import graft.operators.Similarity
-    // Freeze the module-init lazy vals BEFORE this test mutates sys.props:
-    // if another suite (or a future reordering) forced them mid-mutation,
-    // the frozen config would capture a deliberately-malformed test value
-    // and poison every later entry in this JVM.
-    assert(Similarity.lshBands > 0 && Similarity.lshRows > 0)
-    // ---- knob parsing (the nprobe discipline: same parse path the
-    // entries freeze at module init, exercised re-readably) ----
-    val prevB = sys.props.get("spark.graft.lsh.bands")
-    val prevR = sys.props.get("spark.graft.lsh.rows")
-    def setBoth(b: String, r: String): Unit = {
-      sys.props("spark.graft.lsh.bands") = b
-      sys.props("spark.graft.lsh.rows") = r
-    }
-    try {
-      setBoth("8", "8")
-      assert(Similarity.lshConfigNow.contains((8, 8)),
-        "the system-property pair must parse")
-      assert(Similarity.lshBandsFor(Similarity.lshConfigNow) == 8
-        && Similarity.lshRowsFor(Similarity.lshConfigNow) == 8,
-        "an override replaces the 16×4 default on the entry side")
-      // the oracle SQL derives banding from the SAME two ints — the CTE
-      // emits the overridden band count and slice width literally
-      val sql88 = Similarity.minhashPairsSqlWith(8, 8)
-      assert(sql88.contains("range(0, 8) r(b)")
-        && sql88.contains("list_slice(sig, 8*b+1, 8*b+8)"),
-        "the oracle banding CTE must embed the overridden (bands, rows)")
-      // a banding knob must fail LOUD and NAMED on a bad value — silently
-      // running the default would dedup at a different similarity
-      // threshold than the deployment configured
-      Seq(("8k", "4"), ("", "4"), ("0", "4"), ("-3", "4"),
-        ("16", "x"), ("16", "0")).foreach { case (b, r) =>
-        setBoth(b, r)
-        val err = intercept[IllegalArgumentException](Similarity.lshConfigNow)
-        assert(err.getMessage.contains("spark.graft.lsh."),
-          s"rejection for ($b, $r) must name the knob")
-      }
-      // half a config is not a config: setting one knob without its
-      // partner is rejected by name
-      sys.props("spark.graft.lsh.bands") = "8"
-      sys.props.remove("spark.graft.lsh.rows")
-      val half = intercept[IllegalArgumentException](Similarity.lshConfigNow)
-      assert(half.getMessage.contains("together"),
-        "a lone knob must demand its partner")
-      // banding past the 64-long signature would slice empty/short band
-      // keys and candidate everything — rejected with the width named
-      setBoth("32", "4")
-      val wide = intercept[IllegalArgumentException](Similarity.lshConfigNow)
-      assert(wide.getMessage.contains("64"),
-        "bands*rows > signature width must be rejected naming the bound")
-    } finally {
-      prevB.fold { sys.props.remove("spark.graft.lsh.bands"); () } { v =>
-        sys.props("spark.graft.lsh.bands") = v; () }
-      prevR.fold { sys.props.remove("spark.graft.lsh.rows"); () } { v =>
-        sys.props("spark.graft.lsh.rows") = v; () }
-    }
-    assert(Similarity.lshBandsFor(None) == Similarity.defaultLshBands
-      && Similarity.lshRowsFor(None) == Similarity.defaultLshRows,
-      "no override → the 16×4 default")
+    // the oracle SQL derives banding from the SAME two ints as the entry —
+    // the CTE emits the band count and slice width literally
+    val sql88 = Similarity.minhashPairsSqlWith(8, 8)
+    assert(sql88.contains("range(0, 8) r(b)")
+      && sql88.contains("list_slice(sig, 8*b+1, 8*b+8)"),
+      "the oracle banding CTE must embed the (bands, rows) it is given")
 
     // ---- the S-curve chain: detectP's left-folded multiplication chain
     // must agree with libm pow to float-association tolerance at every
-    // grid point, for the default AND overridden bandings (the chain is
+    // grid point, for the default AND three other bandings (the chain is
     // generated from the (b, r) ints — this pins the generator) ----
     val grid = spark.range(0, 21)
       .select((col("id").cast("double") / lit(20.0)).as("s_lo"))
@@ -410,12 +323,12 @@ class GenScaleSpec extends SparkSpec {
         s"detectPSql must contain exactly bands*rows base references for ($b, $r)")
     }
 
-    // ---- end-to-end nesting under an overridden banding: an intact
+    // ---- end-to-end nesting under a stricter banding: an intact
     // 8-row band is exactly two intact 4-row bands, so (8, 8) candidates
     // (threshold ~(1/8)^(1/8) ≈ 0.77) are a SUBSET of (16, 4) candidates
     // (≈ 0.5); verification is banding-independent, so the verified pair
     // sets nest too. This runs the REAL chain (minhashPairsWith — the
-    // same constructor the entries call) at both configs. ----
+    // same constructor the entries call) at both bandings. ----
     val p164 = Similarity.minhashPairsWith(spark, sf, 16, 4).select("ia", "ib")
     val p88 = Similarity.minhashPairsWith(spark, sf, 8, 8).select("ia", "ib")
     val n164 = p164.count(); val n88 = p88.count()
@@ -426,40 +339,9 @@ class GenScaleSpec extends SparkSpec {
     info(s"verified pairs: (16,4)=$n164 ⊇ (8,8)=$n88")
   }
 
-  test("BPE vocabulary config: (iters, batch) override parses, fails loud, " +
-      "and the overridden chain holds the batch invariants") {
+  test("BPE vocabulary: SQL unrolls (iters, batch), a (7, 3) run keeps batch invariants") {
     import graft.operators.Curation2
-    // freeze the module-init lazy vals before mutating sys.props (see the
-    // LSH knob test above for why)
-    assert(Curation2.bpeIters > 0 && Curation2.bpeBatch > 0)
-    // knob parsing — same discipline as nprobe/LSH banding
-    val prevI = sys.props.get("spark.graft.bpe.iters")
-    val prevB = sys.props.get("spark.graft.bpe.batch")
-    try {
-      sys.props("spark.graft.bpe.iters") = "32"
-      sys.props("spark.graft.bpe.batch") = "16"
-      assert(Curation2.bpeConfigNow == ((32, 16)),
-        "the system-property pair must parse (V = 32×16 = 512 target)")
-      // knobs are independent axes: each falls back to its own default
-      sys.props.remove("spark.graft.bpe.batch")
-      assert(Curation2.bpeConfigNow == ((32, Curation2.defaultBpeBatch)),
-        "a lone iters override keeps the default batch")
-      Seq("8k", "", "0", "-3").foreach { bad =>
-        sys.props("spark.graft.bpe.iters") = bad
-        val err = intercept[IllegalArgumentException](Curation2.bpeConfigNow)
-        assert(err.getMessage.contains("spark.graft.bpe.iters"),
-          s"rejection for '$bad' must name the knob")
-      }
-    } finally {
-      prevI.fold { sys.props.remove("spark.graft.bpe.iters"); () } { v =>
-        sys.props("spark.graft.bpe.iters") = v; () }
-      prevB.fold { sys.props.remove("spark.graft.bpe.batch"); () } { v =>
-        sys.props("spark.graft.bpe.batch") = v; () }
-    }
-    assert(Curation2.bpeConfigNow ==
-      ((Curation2.defaultBpeIters, Curation2.defaultBpeBatch)),
-      "no override → the 5×8 default")
-    // the oracle chain unrolls from the SAME ints: an 8-iteration config
+    // the oracle chain unrolls from the SAME ints: an 8-iteration chain
     // must emit CTEs through s8/b7 and stop there
     val sql8 = Curation2.bpeSqlChainWith(8, 4, 8)
     assert(sql8.contains("s8 AS MATERIALIZED") && sql8.contains("b7 AS")
@@ -469,14 +351,14 @@ class GenScaleSpec extends SparkSpec {
       && !Curation2.bpeLearnSqlTail(3).contains("SELECT 3"),
       "the merge-table tail unions exactly the configured iterations")
 
-    // a real overridden run through the SAME constructor the entries call:
+    // a real (7, 3) run through the SAME constructor the entries call:
     // batch invariants hold at any (iters, batch) — per-iteration ranks
     // stay within the batch bound, iteration ids within the loop bound,
     // and a batch's symbols are pairwise disjoint (the parallel-greedy
     // guarantee that makes the one-pass fold order-independent)
     val (merges, syms) = Curation2.bpeChainWith(spark, sf, 7, 3)
     val rows = merges.collect()
-    assert(rows.nonEmpty, "the overridden chain must learn merges at sf0.001")
+    assert(rows.nonEmpty, "the (7, 3) chain must learn merges at sf0.001")
     assert(rows.forall(r => r.getLong(0) >= 0 && r.getLong(0) < 7),
       "iteration ids stay within the configured bound")
     assert(rows.forall(r => r.getLong(1) >= 1 && r.getLong(1) <= 3),
@@ -493,7 +375,7 @@ class GenScaleSpec extends SparkSpec {
       "sum(freq * size(syms))").head().getLong(0)
     assert(after < base,
       s"merged token count $after must be under the char baseline $base")
-    info(s"overridden (7,3) run: ${rows.length} merges, tokens $base → $after")
+    info(s"(7,3) run: ${rows.length} merges, tokens $base → $after")
   }
 
   test("BPE parallel greedy matches a driver-side replay of the rule over " +

@@ -40,12 +40,6 @@ def main(sfdir, outdir):
     print(f"\n{n_pass} pass, {n_fail} fail (oracle-checked)")
     return 1 if n_fail else 0
 
-def norm(v):
-    if v is None: return None
-    if isinstance(v, float):
-        return v
-    return v
-
 def compare(con, sql, spark_dir):
     try:
         want = con.execute(sql).fetch_arrow_table()
